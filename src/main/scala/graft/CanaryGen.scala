@@ -72,9 +72,9 @@ object CanaryGen {
     wr(replicate(rd("documents"), factor) { (d, r) =>
       val salted = if (r == 0) col("text")
         else regexp_replace(col("text"), "(\\w+)", s"$$1_r$r")
-      d.withColumn("doc_id", off("doc_id", r))
-        .withColumn("text", salted)
-        .withColumn("n_chars", length(salted).cast("long")) }, "documents")
+      // one projection: every expression reads the unsalted input row
+      d.withColumns(Map("doc_id" -> off("doc_id", r), "text" -> salted,
+        "n_chars" -> length(salted).cast("long"))) }, "documents")
     wr(replicate(rd("embeddings"), factor) { (d, r) =>
       val e = col("embedding")
       val shifted = if (r == 0) e

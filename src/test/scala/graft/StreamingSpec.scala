@@ -1140,6 +1140,85 @@ class StreamingSpec extends AnyFunSuite {
     assert(viaDir === expected)
   }
 
+  /** Result tables replays have left in the shared replay database. */
+  private def replayTables(): Seq[String] = {
+    val conn = java.sql.DriverManager.getConnection(StreamingQueries.ReplayDbUrl)
+    try {
+      val rs = conn.createStatement().executeQuery(
+        "SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLENAME LIKE 'REPLAY_%'")
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+    } finally conn.close()
+  }
+
+  test("consecutive replays drop their tables from the shared database and return identical rows") {
+    val dir = "/root/testdata/sf0.001"
+    def run(): Seq[String] = StreamingQueries.replay(spark, dir,
+      StreamingQueries.q3UserGmv, Seq("user_id"))
+      .collect().map(_.toString).sorted.toSeq
+    val first = run()
+    val second = run()
+    assert(first.nonEmpty)
+    assert(second === first)
+    assert(replayTables().isEmpty)
+  }
+
+  test("a failed replay leaves no table in the shared database") {
+    val dir = "/root/testdata/sf0.001"
+    // fails while planning, before the sink ever creates its table
+    intercept[IllegalStateException] {
+      StreamingQueries.replay(spark, dir,
+        _ => throw new IllegalStateException("graft-test: build fails"),
+        Seq("date_str"))
+    }
+    assert(replayTables().isEmpty)
+    // fails inside the first micro-batch, after the sink created it
+    val boom = udf { (x: java.lang.Long) =>
+      if (x != null) throw new IllegalStateException("graft-test: batch fails")
+      x
+    }
+    intercept[Exception] {
+      StreamingQueries.replay(spark, dir,
+        src => StreamingQueries.q1DailyUv(src).withColumn("uv", boom(col("uv"))),
+        Seq("date_str"))
+    }
+    assert(replayTables().isEmpty)
+  }
+
+  test("replay gate: the single-partition result sorts with no shuffle exchange, in one job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val gate = StreamingQueries.queries("stream_q3_user_gmv")(
+      spark, "/root/testdata/sf0.001")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-test-gate", "gate action")
+      try gate.queryExecution.toRdd.count() finally sc.clearJobGroup()
+      // listener events arrive in order: once a later marker job has
+      // been seen, so has every job of the gate's action
+      sc.setJobGroup("graft-test-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("graft-test-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("graft-test-marker"), "listener never saw the marker job")
+      val gateJobs = groups.toArray.count(_ == "graft-test-gate")
+      assert(gateJobs === 1, s"gate action ran $gateJobs jobs")
+    } finally sc.removeSparkListener(listener)
+    val plan = gate.queryExecution.executedPlan
+    val shuffles = (new AdaptiveSparkPlanHelper {}).collect(plan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(shuffles.isEmpty, s"replay gate shuffles its result:\n$plan")
+  }
+
   test("bucketed folds: pruned read opens only hit buckets and stays exact") {
     import graft.streaming.StreamingQueries.CompactedState
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
