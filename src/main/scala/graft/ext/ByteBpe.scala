@@ -207,15 +207,10 @@ object ByteBpe {
   // ------------------------------------------------------- gates
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // id arrays cross the gate as the established digest (count +
-    // md5 of the space-joined sequence); n_fallback == 0 on the
-    // training corpus is part of the hash-checked contract
+    // id arrays cross the gate as CorpusPrep.idsDigest; n_fallback
+    // == 0 on the training corpus is part of the hash-checked contract
     "bpe_byte_encode_ids" -> ((s, d) =>
-      byteEncodeIds(Tables.documents(s, d))
-        .select(col("doc_id"), col("n_tokens"), col("n_fallback"),
-          size(col("ids")).cast("long").as("n_ids"),
-          md5(array_join(transform(col("ids"), i => i.cast("string")), " "))
-            .as("ids_md5"))
+      CorpusPrep.idsDigest(byteEncodeIds(Tables.documents(s, d)))
         .orderBy(col("doc_id"))))
 
   // ------------------------------------------------------ oracle

@@ -713,8 +713,7 @@ object CorpusPrep {
   private[ext] def bpeEncodeIdsFrom(docs: DataFrame, finalDict: DataFrame,
       cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // fan the dict-side id derivation out (r16, the wordPieceEncodeWith
-    // r15 mechanism at a different site): `limit(cap)` plans as
+    // fan the dict-side id derivation out (r16): `limit(cap)` plans as
     // TakeOrderedAndProject, whose output is ONE partition — without
     // the explicit repartition the whole wordIds build (per-word
     // symbol explode + id join + collect) ran as a ~0.4 s SINGLE-task
@@ -927,19 +926,7 @@ object CorpusPrep {
       .groupBy(col("word"))
       .agg(map_from_entries(collect_list(struct(col("key"), col("cost"))))
         .as("m"))
-    // CPU-dense fold over byte-tiny rows: exempt it from AQE's
-    // byte-proportional coalescing (the wordPieceEncodeWith r15
-    // rationale — A/B'd: unigram family 22.5 → 19.2 s across 9
-    // gates). Width = the SESSION's shuffle-partition knob, not the
-    // core count, so streaming replays (which deliberately run
-    // micro-batches narrow) are not widened per batch. Applied on
-    // THIS per-word path only: the EM-loss path's fold frame is
-    // (word, excluded-piece)-keyed — a word-keyed fan-out there
-    // measured 1.3× (fewer distinct keys + an extra exchange of a
-    // larger frame), so it keeps the planner's partitioning.
-    viterbiFold(words.join(probes, Seq("word"))
-        .repartition(words.sparkSession.sessionState.conf.numShufflePartitions,
-          col("word")))
+    viterbiFold(words.join(probes, Seq("word")))
       .select(col("word"), col("wc"), col("total_cost"), col("n_pieces"),
         col("n_best"), col("path"))
   }
@@ -2236,18 +2223,7 @@ object CorpusPrep {
     // artifact-read frame the static planner guessed probes small
     // and broadcast it — the PlanAudit failure signature; the
     // in-lineage path already planned SMJ here)
-    // explicit fan-out before the DP projection (r15): the greedy
-    // fold below is CPU-per-word, but its input is tiny in BYTES, so
-    // AQE's byte-proportional coalescing squeezed the stage onto 2
-    // post-shuffle partitions (profiled: a ~2 s-of-CPU 2-task
-    // straggler at sf0.1). A user-specified hash repartition is
-    // exempt from AQE coalescing and spreads the fold across the
-    // session's cores (same-window A/B: bert encode 3.49 → 2.50 s);
-    // at scale the exchange moves dict-sized rows — noise next to
-    // the fold it parallelizes.
     val stepped = words.join(probes.hint("merge"), Seq("word"), "left")
-      .repartition(words.sparkSession.sessionState.conf.numShufflePartitions,
-        col("word"))
       .withColumn("st", aggregate(
         sequence(lit(1), len),
         struct(lit(1).as("pos"), lit(0).as("np"), lit("").as("path"),
@@ -2750,6 +2726,16 @@ object CorpusPrep {
 
   // ------------------------------------------------------------ queries
 
+  /** The digest every id-array encode gate lands: `ids` crosses the
+    * gate as its length (`n_ids`) plus the md5 of the space-joined
+    * ids (`ids_md5`) — the array-column parity discipline of
+    * text_span_removal's kept_md5 — and is itself dropped. */
+  def idsDigest(encoded: DataFrame): DataFrame =
+    encoded.select(col("*"), size(col("ids")).cast("long").as("n_ids"),
+        md5(array_join(transform(col("ids"), i => i.cast("string")), " "))
+          .as("ids_md5"))
+      .drop("ids")
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_decontam" -> ((s, d) => decontaminate(Tables.documents(s, d))),
     "text_repetition" -> ((s, d) => repetitionStats(Tables.documents(s, d))),
@@ -2851,34 +2837,19 @@ object CorpusPrep {
       unigramTrainEmSoftRounds(Tables.documents(s, d), rounds = 2)),
     "unigram_fertility_by_lang" -> ((s, d) =>
       unigramFertilityByLang(Tables.documents(s, d))),
-    // id arrays cross the gate as a digest (count + md5 of the
-    // space-joined sequence) — the established array-column parity
-    // discipline (text_span_removal's kept_md5)
+    // id arrays cross the gate as [[idsDigest]]
     "bpe_encode_ids" -> ((s, d) =>
-      bpeEncodeIds(Tables.documents(s, d))
-        .select(col("doc_id"), col("n_tokens"), col("n_unk"),
-          size(col("ids")).cast("long").as("n_ids"),
-          md5(array_join(transform(col("ids"), i => i.cast("string")), " "))
-            .as("ids_md5"))
-        .orderBy(col("doc_id"))),
+      idsDigest(bpeEncodeIds(Tables.documents(s, d))).orderBy(col("doc_id"))),
     // the same digest through the DEEP trainer's dict: deep-train →
     // encode composed, hash-checked against the identical oracle
     "bpe_encode_ids_deep" -> ((s, d) =>
-      bpeEncodeIdsDeep(Tables.documents(s, d))
-        .select(col("doc_id"), col("n_tokens"), col("n_unk"),
-          size(col("ids")).cast("long").as("n_ids"),
-          md5(array_join(transform(col("ids"), i => i.cast("string")), " "))
-            .as("ids_md5"))
+      idsDigest(bpeEncodeIdsDeep(Tables.documents(s, d)))
         .orderBy(col("doc_id"))),
     // BPE-dropout encode: the same digest through the per-(word,
     // round) conditionally-applied merge chain; the oracle re-applies
     // the identical dropped-merge set from the aux hash decisions
     "bpe_encode_dropout" -> ((s, d) =>
-      bpeEncodeIdsDropout(Tables.documents(s, d))
-        .select(col("doc_id"), col("n_tokens"), col("n_unk"),
-          size(col("ids")).cast("long").as("n_ids"),
-          md5(array_join(transform(col("ids"), i => i.cast("string")), " "))
-            .as("ids_md5"))
+      idsDigest(bpeEncodeIdsDropout(Tables.documents(s, d)))
         .orderBy(col("doc_id"))),
     // train → encode → pack composed end-to-end: the packer consumes
     // the ENCODED id counts, not whitespace counts

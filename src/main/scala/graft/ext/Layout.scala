@@ -66,13 +66,18 @@ object Layout {
   def writePartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String], sortCols: Seq[String],
       maxRecordsPerFile: Long = 1000000L): Unit =
+    layoutWriter(df, partitionCols, sortCols, maxRecordsPerFile)
+      .parquet(path)
+
+  private def layoutWriter(df: DataFrame, partitionCols: Seq[String],
+      sortCols: Seq[String], maxRecordsPerFile: Long)
+      : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
     df.repartition(partitionCols.map(col): _*)
       .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
       .write
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCols: _*)
       .mode("overwrite")
-      .parquet(path)
 
   /** Incremental partition refresh: overwrite ONLY the partitions
     * present in `updates` (dynamic partition overwrite), leaving
@@ -81,20 +86,16 @@ object Layout {
     * the whole table first; append would duplicate; read-modify-
     * write of the full lake to refresh one day is exactly what a
     * 100 TB layout cannot afford. Same sort/size discipline as
-    * [[writePartitioned]].
+    * [[writePartitioned]]. Dynamic mode is a per-write option, so the
+    * caller's session conf is never touched (streams land through here
+    * from their own threads).
     */
   def upsertPartitions(updates: DataFrame, path: String,
       partitionCols: Seq[String], sortCols: Seq[String],
-      maxRecordsPerFile: Long = 1000000L): Unit = {
-    val spark = updates.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try writePartitioned(updates, path, partitionCols, sortCols, maxRecordsPerFile)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+      maxRecordsPerFile: Long = 1000000L): Unit =
+    layoutWriter(updates, partitionCols, sortCols, maxRecordsPerFile)
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path)
 
   /** Row-level MERGE (upsert-by-key): `updates` rows replace target
     * rows with the same key; update-only keys are inserts; untouched

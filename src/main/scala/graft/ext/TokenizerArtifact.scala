@@ -123,21 +123,6 @@ object TokenizerArtifact {
     CorpusPrep.bpeEncodeIdsFrom(docs,
       docs.sparkSession.read.parquet(s"$dir/bpe_vocab"), cap)
 
-  /** Load the BPE vocab artifact ONCE, materialized
-    * (`localCheckpoint`), for encode-many consumers — the streaming
-    * composition's seam: a continuous tokenization job loads the
-    * artifact at stream start and every micro-batch encodes against
-    * the SAME frame (vocabulary-bounded, so pinning it is megabytes). */
-  def bpeLoadVocab(spark: SparkSession, dir: String): DataFrame =
-    CorpusCache.checkpoint(spark.read.parquet(s"$dir/bpe_vocab"))
-
-  /** Encode through an ALREADY-LOADED vocab frame ([[bpeLoadVocab]]) —
-    * the same core as [[bpeEncodeIds]] minus the per-call artifact
-    * read. */
-  def bpeEncodeIdsWith(docs: DataFrame, vocab: DataFrame,
-      cap: Int = CorpusPrep.BpeVocabCap): DataFrame =
-    CorpusPrep.bpeEncodeIdsFrom(docs, vocab, cap)
-
   /** The DROPOUT-reinterpreted dictionary from a persisted artifact
     * (VERDICT r13 #4 — the BPE side of the streaming
     * subword-regularization pair): each vocab word's symbols
@@ -150,9 +135,9 @@ object TokenizerArtifact {
     * stream derives it ONCE at start and every micro-batch (and
     * every crash-replay) encodes against the identical dict. Bounded
     * by the artifact's vocabulary contract. */
-  def bpeDropoutDictFrom(spark: SparkSession, dir: String,
-      rate: Double = CorpusPrep.BpeDropoutRate): DataFrame = {
-    val thr = math.round(rate * graft.ext.Sampling.Buckets)
+  private def bpeDropoutDictFrom(spark: SparkSession, dir: String)
+      : DataFrame = {
+    val thr = math.round(CorpusPrep.BpeDropoutRate * Sampling.Buckets)
     val merges = spark.read.parquet(s"$dir/bpe_merges")
       .orderBy(col("round")).collect()
       .map(r => (r.getAs[Int]("round"), r.getAs[String]("p"),
@@ -161,7 +146,7 @@ object TokenizerArtifact {
       .select(col("word"), col("wc"), split(col("word"), "").as("syms"))
     merges.zipWithIndex.foreach { case ((rd, p, q), i) =>
       dict = CorpusPrep.bpeApplyMergeUnless(dict, p, q,
-        graft.ext.Sampling.bucket(CorpusPrep.bpeDropKey(lit(rd)),
+        Sampling.bucket(CorpusPrep.bpeDropKey(lit(rd)),
           CorpusPrep.BpeDropoutSeed) < lit(thr))
       // checkpoint cadence (ADVICE r14): one bpeApplyMergeUnless per
       // persisted merge chains an unbounded per-round projection —
@@ -207,12 +192,6 @@ object TokenizerArtifact {
       .write.mode("overwrite").parquet(s"$dir/wordpiece_vocab")
   }
 
-  /** Load the WordPiece piece inventory ONCE, materialized — the
-    * streaming encode's per-batch probe frame ([[bpeLoadVocab]]'s
-    * seam for the third tokenizer). */
-  def wordPieceLoadVocab(spark: SparkSession, dir: String): DataFrame =
-    CorpusCache.checkpoint(spark.read.parquet(s"$dir/wordpiece_vocab"))
-
   /** Greedy-encode a corpus's word dict through a PERSISTED WordPiece
     * artifact — the identical encode core as
     * [[CorpusPrep.wordPieceEncodeWords]], no training stage in this
@@ -220,9 +199,13 @@ object TokenizerArtifact {
     * whole-word `[UNK]` path (BERT semantics) — under a DIFFERENT
     * encode corpus that path carries real traffic. */
   def wordPieceEncode(docs: DataFrame, dir: String): DataFrame =
-    CorpusPrep.wordPieceEncodeWith(
-      CorpusPrep.wordPieceDict(docs).select(col("word"), col("wc")),
+    wordPieceEncodeAgainst(docs,
       docs.sparkSession.read.parquet(s"$dir/wordpiece_vocab"))
+
+  private def wordPieceEncodeAgainst(docs: DataFrame, vocab: DataFrame)
+      : DataFrame =
+    CorpusPrep.wordPieceEncodeWith(
+      CorpusPrep.wordPieceDict(docs).select(col("word"), col("wc")), vocab)
 
   /** Train and persist the unigram-LM model (piece, freq, cost).
     * Costs are snapped to integer nano-nats at TRAIN time — the
@@ -247,22 +230,13 @@ object TokenizerArtifact {
     unigramEncodeStatsWith(docs,
       docs.sparkSession.read.parquet(s"$dir/unigram_model"))
 
-  /** Load the unigram model artifact ONCE, materialized — the
-    * streaming encode's per-batch cost frame ([[bpeLoadVocab]]'s seam
-    * for the second tokenizer; tracked for run-boundary release via
-    * [[CorpusCache.releaseAll]]). */
-  def unigramLoadModel(spark: SparkSession, dir: String): DataFrame =
-    CorpusCache.checkpoint(spark.read.parquet(s"$dir/unigram_model"))
-
-  /** Encode stats through an ALREADY-LOADED model frame — the same
-    * core as [[unigramEncodeStats]] minus the per-call artifact read
-    * (the streaming composition's per-batch body): derive the batch's
-    * own word dict, unk-cover the model against it, Viterbi-segment,
-    * aggregate per document. Per-word purity is what makes the
-    * batch-sliced composition exact: a word's optimum is a function
-    * of (word, covered model) alone, never of which other words share
-    * the dict. */
-  def unigramEncodeStatsWith(docs: DataFrame, model: DataFrame): DataFrame = {
+  /** Encode stats through an already-loaded model frame: derive the
+    * docs' own word dict, unk-cover the model against it,
+    * Viterbi-segment, aggregate per document. A word's optimum is a
+    * function of (word, covered model) alone, never of which other
+    * words share the dict. */
+  private def unigramEncodeStatsWith(docs: DataFrame, model: DataFrame)
+      : DataFrame = {
     val dict = CorpusPrep.bpeWordDict(docs).select(col("word"), col("wc"))
     CorpusPrep.unigramEncodeStatsFrom(docs,
       CorpusPrep.viterbiDp(dict, coverModel(dict, model))
@@ -306,7 +280,8 @@ object TokenizerArtifact {
     * same pure function of the trained state as
     * [[ByteBpe.symbolIds]]: byte value for 2-hex-char bases,
     * 255 + first-minting round for minted symbols. */
-  def byteBpeLoadDict(spark: SparkSession, dir: String): DataFrame = {
+  private def byteBpeLoadDict(spark: SparkSession, dir: String)
+      : DataFrame = {
     val merges = spark.read.parquet(s"$dir/bytebpe_merges").collect()
       .map(r => (r.getAs[Int]("round"), r.getAs[String]("p"),
         r.getAs[String]("q")))
@@ -326,28 +301,6 @@ object TokenizerArtifact {
     ByteBpe.byteEncodeIdsFromDict(docs,
       byteBpeLoadDict(docs.sparkSession, dir))
 
-  /** Encode through an ALREADY-LOADED byte-BPE dict — the streaming
-    * composition's per-batch body ([[bpeEncodeIdsWith]]'s seam for
-    * the fourth family). */
-  def byteBpeEncodeIdsWith(docs: DataFrame, dict: DataFrame): DataFrame =
-    ByteBpe.byteEncodeIdsFromDict(docs, dict)
-
-  /** SAMPLED per-document encode stats through an ALREADY-LOADED
-    * model frame — the subword-regularization streaming seam (VERDICT
-    * r13 #4): k-best spans derive per batch from (batch word dict,
-    * covered model) — per-word pure, so batch slicing is exact — and
-    * the pick is [[CorpusPrep.unigramSampledDocStatsWith]]'s
-    * (seed, epoch, doc_id, word) threshold rule: a pure function of
-    * stable identifiers, which is what makes streaming REPLAY
-    * idempotent (a re-run batch re-samples identically) while epochs
-    * still vary the segmentation. */
-  def unigramSampledDocStatsWith(docs: DataFrame, model: DataFrame,
-      epoch: Long = CorpusPrep.SubwordDocEpoch): DataFrame = {
-    val dict = CorpusPrep.bpeWordDict(docs).select(col("word"), col("wc"))
-    CorpusPrep.unigramSampledDocStatsWith(docs,
-      CorpusPrep.sampledSpans(dict, coverModel(dict, model)), epoch)
-  }
-
   /** The unk augmentation: unseen encode-dict single chars at the
     * fixed cost. Only UNSEEN chars are added, so an unk entry is its
     * position's only candidate whenever it fires — it can never
@@ -363,23 +316,127 @@ object TokenizerArtifact {
     model.select(col("piece"), col("freq"), col("cost")).unionByName(unseen)
   }
 
-  /** The byte-BPE digest projection (n_fallback instead of n_unk —
-    * there is no unknown token in the byte family). */
-  private def byteDigest(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), col("n_tokens"), col("n_fallback"),
-        size(col("ids")).cast("long").as("n_ids"),
-        md5(array_join(transform(col("ids"), i => i.cast("string")), " "))
-          .as("ids_md5"))
-      .orderBy(col("doc_id"))
+  // ---------------------------------------------- streaming encode legs
 
-  /** The id-array digest projection shared with the in-lineage
-    * encode gates (arrays cross the gate as count + md5). */
-  private def idsDigest(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), col("n_tokens"), col("n_unk"),
-        size(col("ids")).cast("long").as("n_ids"),
-        md5(array_join(transform(col("ids"), i => i.cast("string")), " "))
-          .as("ids_md5"))
-      .orderBy(col("doc_id"))
+  /** One tokenizer family's streaming encode leg (run by
+    * [[graft.streaming.StreamingQueries.artifactEncodeStream]]): only
+    * what is the family's own.
+    *
+    * @param gate        gate name, also the stream's scratch directory
+    * @param write       train on the corpus, persist the artifact
+    *                    under the given directory
+    * @param open        load the artifact ONCE at stream start and
+    *                    return the per-batch encode
+    * @param landedDdl   the schema one batch's encode lands with
+    * @param reaggregate folds the landed batches back to the gate's
+    *                    shape (identity unless a batch's rows are
+    *                    partial counts)
+    */
+  final case class EncodeLeg(gate: String,
+      write: (DataFrame, String) => Unit,
+      open: (SparkSession, String) => DataFrame => DataFrame,
+      landedDdl: String,
+      reaggregate: DataFrame => DataFrame = identity)
+
+  private val BpeDigestDdl =
+    "doc_id BIGINT, n_tokens BIGINT, n_unk BIGINT, n_ids BIGINT, ids_md5 STRING"
+  private val UnigramStatsDdl =
+    "doc_id BIGINT, n_words BIGINT, n_pieces BIGINT, cost_x1e9 BIGINT"
+
+  /** Loaded artifact tables are vocabulary-bounded: pin them once
+    * (tracked for run-boundary release via [[CorpusCache.releaseAll]])
+    * so every micro-batch encodes against the same frame. */
+  private def loadPinned(spark: SparkSession, path: String): DataFrame =
+    CorpusCache.checkpoint(spark.read.parquet(path))
+
+  /** Char-BPE: per-doc id digests against the loaded vocab; the batch
+    * twin is `bpe_encode_ids`. */
+  val bpeEncodeLeg: EncodeLeg = EncodeLeg("stream_encode_ids",
+    bpeWrite(_, _),
+    (spark, dir) => {
+      val vocab = loadPinned(spark, s"$dir/bpe_vocab")
+      batch => CorpusPrep.idsDigest(
+        CorpusPrep.bpeEncodeIdsFrom(batch, vocab, CorpusPrep.BpeVocabCap))
+    },
+    BpeDigestDdl)
+
+  /** BPE-dropout: the dropout dict is a pure function of (artifact,
+    * seed), derived once at open, so every batch and every replay
+    * encodes against the identical dict; the batch twin is
+    * `bpe_encode_dropout`. */
+  val bpeDropoutLeg: EncodeLeg = EncodeLeg("stream_bpe_encode_dropout",
+    bpeWrite(_, _),
+    (spark, dir) => {
+      val dict = bpeDropoutDictFrom(spark, dir)
+      batch => CorpusPrep.idsDigest(
+        CorpusPrep.bpeEncodeIdsFrom(batch, dict, CorpusPrep.BpeVocabCap))
+    },
+    BpeDigestDdl)
+
+  /** Byte-BPE: batches are decorated like the gate's corpus (the
+    * decoration is per doc_id, so it commutes with batch slicing);
+    * the batch twin is `bpe_byte_encode_ids`. */
+  val byteBpeLeg: EncodeLeg = EncodeLeg("stream_bpe_byte_encode",
+    (docs, dir) => byteBpeWrite(CorpusPrep.bertFixtureText(docs), dir),
+    (spark, dir) => {
+      val dict = byteBpeLoadDict(spark, dir)
+      batch => CorpusPrep.idsDigest(ByteBpe.byteEncodeIdsFromDict(
+        CorpusPrep.bertFixtureText(batch), dict))
+    },
+    "doc_id BIGINT, n_tokens BIGINT, n_fallback BIGINT, n_ids BIGINT, " +
+      "ids_md5 STRING")
+
+  /** WordPiece: each batch greedy-encodes its OWN word dict, so a
+    * batch lands partial `wc` counts; read-back sums them per word
+    * (the encode columns are per-word pure and group exactly). The
+    * batch twin is `wordpiece_encode`. */
+  val wordPieceLeg: EncodeLeg = EncodeLeg("stream_wordpiece_encode",
+    wordPieceWrite(_, _),
+    (spark, dir) => {
+      val vocab = loadPinned(spark, s"$dir/wordpiece_vocab")
+      batch => wordPieceEncodeAgainst(batch, vocab)
+    },
+    "word STRING, wc BIGINT, n_pieces BIGINT, pieces STRING, is_unk INT",
+    _.groupBy(col("word"), col("n_pieces"), col("pieces"), col("is_unk"))
+      .agg(sum(col("wc")).as("wc"))
+      .select(col("word"), col("wc"), col("n_pieces"), col("pieces"),
+        col("is_unk")))
+
+  /** Unigram: per-doc Viterbi stats under the loaded model (integer
+    * nano-nat costs, snapped at train time, make the union bit-equal);
+    * the batch twin is `unigram_encode_stats`. */
+  val unigramLeg: EncodeLeg = EncodeLeg("stream_unigram_encode",
+    unigramWrite(_, _),
+    (spark, dir) => {
+      val model = loadPinned(spark, s"$dir/unigram_model")
+      batch => unigramEncodeStatsWith(batch, model)
+    },
+    UnigramStatsDdl)
+
+  /** Sampled unigram (subword regularization): each (doc, word) takes
+    * the k-best candidate its (seed, epoch, doc_id, word) hash picks —
+    * stable identifiers only, so a replayed batch re-samples
+    * identically. The epoch is the gate's fixed
+    * [[CorpusPrep.SubwordDocEpoch]]: a restart with another epoch
+    * against the same checkpoint would mix epochs. The batch twin is
+    * [[CorpusPrep.unigramSampledDocStats]]. */
+  val unigramSampledLeg: EncodeLeg = EncodeLeg(
+    "stream_unigram_encode_sampled",
+    unigramWrite(_, _),
+    (spark, dir) => {
+      val model = loadPinned(spark, s"$dir/unigram_model")
+      batch => {
+        val dict = CorpusPrep.bpeWordDict(batch)
+          .select(col("word"), col("wc"))
+        CorpusPrep.unigramSampledDocStatsWith(batch,
+          CorpusPrep.sampledSpans(dict, coverModel(dict, model)),
+          CorpusPrep.SubwordDocEpoch)
+      }
+    },
+    UnigramStatsDdl)
+
+  val encodeLegs: Seq[EncodeLeg] = Seq(bpeEncodeLeg, bpeDropoutLeg,
+    byteBpeLeg, wordPieceLeg, unigramLeg, unigramSampledLeg)
 
   /** Train/encode split predicate for the cross-corpus gate: train on
     * even doc ids, encode the odd half. The halves share the fixture
@@ -399,7 +456,8 @@ object TokenizerArtifact {
       val dir = RunScratch.dir("bpe_artifact_x", d)
       val docs = Tables.documents(s, d)
       bpeWrite(docs.filter(expr(TrainHalf)), dir)
-      idsDigest(bpeEncodeIds(docs.filter(expr(EncodeHalf)), dir))
+      CorpusPrep.idsDigest(bpeEncodeIds(docs.filter(expr(EncodeHalf)), dir))
+        .orderBy(col("doc_id"))
     }),
     // write → reload in a fresh lineage → encode; hash-matched
     // against bpe_encode_ids' UNCHANGED oracle, so artifact ≡
@@ -408,7 +466,7 @@ object TokenizerArtifact {
       val dir = RunScratch.dir("bpe_artifact", d)
       val docs = Tables.documents(s, d)
       bpeWrite(docs, dir)
-      idsDigest(bpeEncodeIds(docs, dir))
+      CorpusPrep.idsDigest(bpeEncodeIds(docs, dir)).orderBy(col("doc_id"))
     }),
     // byte-level roundtrip: deep-train over byte symbols → persist →
     // reload in a fresh lineage (distributed minted-map id resolve) →
@@ -418,7 +476,8 @@ object TokenizerArtifact {
       val dir = RunScratch.dir("bytebpe_artifact", d)
       val docs = CorpusPrep.bertFixtureText(Tables.documents(s, d))
       byteBpeWrite(docs, dir)
-      byteDigest(byteBpeEncodeIds(docs, dir))
+      CorpusPrep.idsDigest(byteBpeEncodeIds(docs, dir))
+        .orderBy(col("doc_id"))
     }),
     // byte-level cross-corpus: train on the even decorated half,
     // encode the odd half — odd-half pre-tokens missing from the
@@ -429,8 +488,9 @@ object TokenizerArtifact {
       val dir = RunScratch.dir("bytebpe_artifact_x", d)
       val docs = CorpusPrep.bertFixtureText(Tables.documents(s, d))
       byteBpeWrite(docs.filter(expr(TrainHalf)), dir)
-      byteDigest(byteBpeEncodeIds(
+      CorpusPrep.idsDigest(byteBpeEncodeIds(
         ByteBpe.crossExtraText(docs.filter(expr(EncodeHalf))), dir))
+        .orderBy(col("doc_id"))
     }),
     // same proof for the unigram model, against
     // unigram_encode_stats' unchanged oracle

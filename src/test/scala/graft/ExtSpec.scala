@@ -949,6 +949,55 @@ class ExtSpec extends AnyFunSuite {
       "touched partition must carry the refreshed rows")
   }
 
+  test("layout upsert runs dynamic overwrite as a per-write option; the session conf stays put") {
+    import graft.ext.Layout
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val docs = Tables.documents(spark, dir)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert_conf").toString
+    Layout.writePartitioned(docs, tmp, Seq("lang"), Seq("doc_id"))
+    val lang = docs.select("lang").distinct().orderBy("lang").head().getString(0)
+    val before = spark.conf.getOption(key)
+    // every SQL job carries the session's explicitly set confs as job
+    // properties: a write that flips the session to dynamic shows up
+    // in its own jobs' properties
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        seen.add((p.flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
+            .getOrElse(""),
+          p.flatMap(q => Option(q.getProperty(key))).getOrElse("")))
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-test-upsert", "upsert")
+      try Layout.upsertPartitions(docs.filter(col("lang") === lang), tmp,
+        Seq("lang"), Seq("doc_id"))
+      finally sc.clearJobGroup()
+      sc.setJobGroup("graft-test-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen,
+      // so is every job of the upsert
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_._1 == "graft-test-marker") &&
+          System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    val upsertJobs = seen.asScala.collect {
+      case (g, mode) if g == "graft-test-upsert" => mode }.toSeq
+    assert(upsertJobs.nonEmpty, "listener saw no job of the upsert write")
+    assert(!upsertJobs.contains("dynamic"),
+      "the upsert switched the caller's session to dynamic overwrite")
+    assert(spark.conf.getOption(key) === before)
+    // still a dynamic overwrite: every other partition survives
+    assert(spark.read.parquet(tmp).count() === docs.count())
+  }
+
   test("mergeByKey: updates replace, inserts append, untouched rows pass through") {
     import graft.ext.Layout
     val cust = Tables.customer(spark, dir)

@@ -780,8 +780,36 @@ class StreamingSpec extends AnyFunSuite {
       "major fold never committed a generation in 6 cadence-1 batches")
   }
 
+  /** Crash-replay one encode leg: kill its stream after batch 1's
+    * landing but before the epoch commits, restart it against the
+    * SAME checkpoint, and return what landed. The replay must
+    * overwrite batch 1's own partition idempotently (a duplicated
+    * landing would double those docs' rows, or that batch's wc
+    * slice) and re-encode it identically. */
+  private def crashAndReplay(dir: String,
+      leg: graft.ext.TokenizerArtifact.EncodeLeg)
+      : org.apache.spark.sql.DataFrame = {
+    val base = StreamingQueries.prepareDedupStream(spark, dir,
+      scratch = s"${leg.gate}_crash")
+    leg.write(graft.sources.Tables.documents(spark, dir), s"$base/artifact")
+    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingQueries.runArtifactEncodeStream(spark, dir, base, leg,
+        afterWrites = id =>
+          if (id == 1) {
+            crashed.set(true)
+            throw new RuntimeException("graft-test: injected crash after state write")
+          })
+    }
+    assert(crashed.get(), "the injected crash never fired - nothing was tested")
+    assert(thrown.getMessage.contains("injected crash"))
+    assert(new java.io.File(s"$base/out/batch_id=1").exists(),
+      "crash point must leave batch 1's landing on disk")
+    StreamingQueries.runArtifactEncodeStream(spark, dir, base, leg)
+    StreamingQueries.artifactEncodeOutput(spark, base, leg)
+  }
+
   test("streaming encode-from-artifact equals the batch encode; crash-replay converges") {
-    import graft.streaming.StreamingQueries
     import graft.ext.{CorpusPrep, TokenizerArtifact}
     import graft.sources.Tables
     val dir = "/root/testdata/sf0.001"
@@ -796,33 +824,12 @@ class StreamingSpec extends AnyFunSuite {
           .as("ids_md5"))
       .orderBy(col("doc_id"))
     val expected = canon(batch)
-    assert(canon(StreamingQueries.streamEncodeIds(spark, dir)) === expected)
-    // crash-replay: kill after batch 1 landed but before its epoch
-    // commits — the replay must overwrite batch 1's own partition
-    // idempotently and converge to the uninterrupted digests
-    val base = StreamingQueries.prepareDedupStream(spark, dir,
-      scratch = "stream_encode_crash")
-    val art = s"$base/artifact"
-    TokenizerArtifact.bpeWrite(Tables.documents(spark, dir), art)
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingQueries.runEncodeStream(spark, dir, base, art,
-        afterWrites = id =>
-          if (id == 1) {
-            crashed.set(true)
-            throw new RuntimeException("graft-test: injected crash after state write")
-          })
-    }
-    assert(crashed.get(), "the injected crash never fired - nothing was tested")
-    assert(thrown.getMessage.contains("injected crash"))
-    assert(new java.io.File(s"$base/out/batch_id=1").exists(),
-      "crash point must leave batch 1's landing on disk")
-    StreamingQueries.runEncodeStream(spark, dir, base, art)
-    assert(canon(StreamingQueries.encodeStreamOutput(spark, base)) === expected)
+    val leg = TokenizerArtifact.bpeEncodeLeg
+    assert(canon(StreamingQueries.artifactEncodeStream(spark, dir, leg)) === expected)
+    assert(canon(crashAndReplay(dir, leg)) === expected)
   }
 
   test("streaming WordPiece encode-from-artifact equals the batch encode; crash-replay converges") {
-    import graft.streaming.StreamingQueries
     import graft.ext.{CorpusPrep, TokenizerArtifact}
     import graft.sources.Tables
     val dir = "/root/testdata/sf0.001"
@@ -834,37 +841,15 @@ class StreamingSpec extends AnyFunSuite {
     val expected =
       canon(CorpusPrep.wordPieceEncodeWords(Tables.documents(spark, dir)))
     assert(expected.nonEmpty)
-    assert(canon(StreamingQueries.streamWordPieceEncode(spark, dir))
+    val leg = TokenizerArtifact.wordPieceLeg
+    assert(canon(StreamingQueries.artifactEncodeStream(spark, dir, leg))
       === expected)
-    // crash-replay: kill after batch 1's landing but before its epoch
-    // commits — the replay must overwrite batch 1's own partition
-    // idempotently and the re-aggregated wc sums must converge to the
-    // uninterrupted per-word frame (a duplicated landing would double
-    // that batch's wc slice)
-    val base = StreamingQueries.prepareDedupStream(spark, dir,
-      scratch = "stream_wp_crash")
-    val art = s"$base/artifact"
-    TokenizerArtifact.wordPieceWrite(Tables.documents(spark, dir), art)
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingQueries.runWordPieceEncodeStream(spark, dir, base, art,
-        afterWrites = id =>
-          if (id == 1) {
-            crashed.set(true)
-            throw new RuntimeException("graft-test: injected crash after state write")
-          })
-    }
-    assert(crashed.get(), "the injected crash never fired - nothing was tested")
-    assert(thrown.getMessage.contains("injected crash"))
-    assert(new java.io.File(s"$base/out/batch_id=1").exists(),
-      "crash point must leave batch 1's landing on disk")
-    StreamingQueries.runWordPieceEncodeStream(spark, dir, base, art)
-    assert(canon(StreamingQueries.wordPieceStreamOutput(spark, base))
-      === expected)
+    // the re-aggregated wc sums must converge to the uninterrupted
+    // per-word frame after the replay
+    assert(canon(crashAndReplay(dir, leg)) === expected)
   }
 
   test("streaming unigram encode-from-artifact equals the batch encode; crash-replay converges") {
-    import graft.streaming.StreamingQueries
     import graft.ext.{CorpusPrep, TokenizerArtifact}
     import graft.sources.Tables
     val dir = "/root/testdata/sf0.001"
@@ -877,37 +862,14 @@ class StreamingSpec extends AnyFunSuite {
       canon(CorpusPrep.unigramEncodeStats(Tables.documents(spark, dir))
         .orderBy("doc_id"))
     assert(expected.nonEmpty)
-    assert(canon(StreamingQueries.streamUnigramEncode(spark, dir))
+    val leg = TokenizerArtifact.unigramLeg
+    assert(canon(StreamingQueries.artifactEncodeStream(spark, dir, leg))
       === expected)
-    // crash-replay: kill after batch 1's landing but before its epoch
-    // commits — the replay must overwrite batch 1's own partition
-    // idempotently (a duplicated landing would double those docs'
-    // rows and break the doc_id spine)
-    val base = StreamingQueries.prepareDedupStream(spark, dir,
-      scratch = "stream_uni_crash")
-    val art = s"$base/artifact"
-    TokenizerArtifact.unigramWrite(Tables.documents(spark, dir), art)
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingQueries.runUnigramEncodeStream(spark, dir, base, art,
-        afterWrites = id =>
-          if (id == 1) {
-            crashed.set(true)
-            throw new RuntimeException("graft-test: injected crash after state write")
-          })
-    }
-    assert(crashed.get(), "the injected crash never fired - nothing was tested")
-    assert(thrown.getMessage.contains("injected crash"))
-    assert(new java.io.File(s"$base/out/batch_id=1").exists(),
-      "crash point must leave batch 1's landing on disk")
-    StreamingQueries.runUnigramEncodeStream(spark, dir, base, art)
-    assert(canon(StreamingQueries.unigramStreamOutput(spark, base))
-      === expected)
+    assert(canon(crashAndReplay(dir, leg)) === expected)
   }
 
   test("streaming SAMPLED unigram encode equals the sampled batch twin; " +
       "crash-replay re-samples identically; epochs vary the segmentation") {
-    import graft.streaming.StreamingQueries
     import graft.ext.{CorpusPrep, TokenizerArtifact}
     import graft.sources.Tables
     val dir = "/root/testdata/sf0.001"
@@ -918,7 +880,8 @@ class StreamingSpec extends AnyFunSuite {
     val expected =
       canon(CorpusPrep.unigramSampledDocStats(Tables.documents(spark, dir)))
     assert(expected.nonEmpty)
-    assert(canon(StreamingQueries.streamUnigramEncodeSampled(spark, dir))
+    val leg = TokenizerArtifact.unigramSampledLeg
+    assert(canon(StreamingQueries.artifactEncodeStream(spark, dir, leg))
       === expected)
     // the sampling is REGULARIZATION, not noise in the gate: it must
     // differ from the deterministic (argmin) encode somewhere, and a
@@ -929,30 +892,9 @@ class StreamingSpec extends AnyFunSuite {
         .orderBy("doc_id"))
     assert(expected !== argmin,
       "sampled encode degenerated to the argmin encode on every doc")
-    // crash-replay: kill after batch 1's landing but before its epoch
-    // commits — the replay must RE-SAMPLE batch 1 identically (the
-    // (seed, epoch, doc_id, word) key carries no RNG state) and
-    // overwrite its partition idempotently
-    val base = StreamingQueries.prepareDedupStream(spark, dir,
-      scratch = "stream_uni_sampled_crash")
-    val art = s"$base/artifact"
-    TokenizerArtifact.unigramWrite(Tables.documents(spark, dir), art)
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingQueries.runUnigramEncodeSampledStream(spark, dir, base, art,
-        afterWrites = id =>
-          if (id == 1) {
-            crashed.set(true)
-            throw new RuntimeException("graft-test: injected crash after state write")
-          })
-    }
-    assert(crashed.get(), "the injected crash never fired - nothing was tested")
-    assert(thrown.getMessage.contains("injected crash"))
-    assert(new java.io.File(s"$base/out/batch_id=1").exists(),
-      "crash point must leave batch 1's landing on disk")
-    StreamingQueries.runUnigramEncodeSampledStream(spark, dir, base, art)
-    assert(canon(StreamingQueries.unigramStreamOutput(spark, base))
-      === expected)
+    // the replay must RE-SAMPLE batch 1 identically (the
+    // (seed, epoch, doc_id, word) key carries no RNG state)
+    assert(canon(crashAndReplay(dir, leg)) === expected)
     // epoch 2: a different (but equally deterministic) sampling
     val epoch2 =
       canon(CorpusPrep.unigramSampledDocStats(Tables.documents(spark, dir),
@@ -963,8 +905,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming byte-BPE encode-from-artifact equals the batch encode; " +
       "crash-replay converges") {
-    import graft.streaming.StreamingQueries
-    import graft.ext.{ByteBpe, CorpusPrep, TokenizerArtifact}
+    import graft.ext.{ByteBpe, TokenizerArtifact}
     import graft.sources.Tables
     val dir = "/root/testdata/sf0.001"
     def canon(df: org.apache.spark.sql.DataFrame)
@@ -979,34 +920,14 @@ class StreamingSpec extends AnyFunSuite {
             .as("ids_md5"))
         .orderBy(col("doc_id")))
     assert(expected.nonEmpty)
-    assert(canon(StreamingQueries.streamByteBpeEncode(spark, dir))
+    val leg = TokenizerArtifact.byteBpeLeg
+    assert(canon(StreamingQueries.artifactEncodeStream(spark, dir, leg))
       === expected)
-    val base = StreamingQueries.prepareDedupStream(spark, dir,
-      scratch = "stream_bytebpe_crash")
-    val art = s"$base/artifact"
-    TokenizerArtifact.byteBpeWrite(
-      CorpusPrep.bertFixtureText(Tables.documents(spark, dir)), art)
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingQueries.runByteBpeEncodeStream(spark, dir, base, art,
-        afterWrites = id =>
-          if (id == 1) {
-            crashed.set(true)
-            throw new RuntimeException("graft-test: injected crash after state write")
-          })
-    }
-    assert(crashed.get(), "the injected crash never fired - nothing was tested")
-    assert(thrown.getMessage.contains("injected crash"))
-    assert(new java.io.File(s"$base/out/batch_id=1").exists(),
-      "crash point must leave batch 1's landing on disk")
-    StreamingQueries.runByteBpeEncodeStream(spark, dir, base, art)
-    assert(canon(StreamingQueries.byteEncodeStreamOutput(spark, base))
-      === expected)
+    assert(canon(crashAndReplay(dir, leg)) === expected)
   }
 
   test("streaming BPE-dropout encode equals the dropout batch twin; " +
       "crash-replay re-encodes identically") {
-    import graft.streaming.StreamingQueries
     import graft.ext.{CorpusPrep, TokenizerArtifact}
     import graft.sources.Tables
     val dir = "/root/testdata/sf0.001"
@@ -1023,7 +944,8 @@ class StreamingSpec extends AnyFunSuite {
     val expected =
       canon(digest(CorpusPrep.bpeEncodeIdsDropout(Tables.documents(spark, dir))))
     assert(expected.nonEmpty)
-    assert(canon(StreamingQueries.streamBpeEncodeDropout(spark, dir))
+    val leg = TokenizerArtifact.bpeDropoutLeg
+    assert(canon(StreamingQueries.artifactEncodeStream(spark, dir, leg))
       === expected)
     // the dropout must actually reinterpret somewhere: it differs
     // from the clean encode on at least one doc
@@ -1031,29 +953,34 @@ class StreamingSpec extends AnyFunSuite {
       canon(digest(CorpusPrep.bpeEncodeIds(Tables.documents(spark, dir))))
     assert(expected !== clean,
       "dropout encode degenerated to the clean encode on every doc")
-    // crash-replay: the dropout dict is a pure function of
-    // (artifact, seed) - the restarted stream re-derives it bit-equal
-    // and overwrites batch 1's landing idempotently
-    val base = StreamingQueries.prepareDedupStream(spark, dir,
-      scratch = "stream_bpe_dropout_crash")
-    val art = s"$base/artifact"
-    TokenizerArtifact.bpeWrite(Tables.documents(spark, dir), art)
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingQueries.runBpeDropoutStream(spark, dir, base, art,
-        afterWrites = id =>
-          if (id == 1) {
-            crashed.set(true)
-            throw new RuntimeException("graft-test: injected crash after state write")
-          })
+    // the dropout dict is a pure function of (artifact, seed): the
+    // restarted stream re-derives it bit-equal
+    assert(canon(crashAndReplay(dir, leg)) === expected)
+  }
+
+  test("every encode leg lands exactly the schema it declares") {
+    import graft.ext.TokenizerArtifact
+    import org.apache.spark.sql.types.StructType
+    import spark.implicits._
+    // the schema is a property of the plan, not of the data: a small
+    // corpus in the documents shape trains and opens every family
+    val docs = Seq(
+      (1L, "web", "the quick brown fox jumps over the lazy dog"),
+      (2L, "news", "the lazy dog sleeps while the quick fox runs"),
+      (3L, "web", "quick brown dogs jump over lazy foxes quickly"))
+      .toDF("doc_id", "source", "text")
+    assert(TokenizerArtifact.encodeLegs.map(_.gate).distinct.size === 6)
+    TokenizerArtifact.encodeLegs.foreach { leg =>
+      val art = java.nio.file.Files
+        .createTempDirectory(s"graft_${leg.gate}_schema").toString
+      leg.write(docs, art)
+      val produced = leg.open(spark, art)(docs).schema
+      val declared = StructType.fromDDL(leg.landedDdl)
+      // nullability is not part of the landed contract: read-back
+      // applies the declared (all-nullable) schema
+      assert(produced.map(f => f.name -> f.dataType) ===
+        declared.map(f => f.name -> f.dataType), leg.gate)
     }
-    assert(crashed.get(), "the injected crash never fired - nothing was tested")
-    assert(thrown.getMessage.contains("injected crash"))
-    assert(new java.io.File(s"$base/out/batch_id=1").exists(),
-      "crash point must leave batch 1's landing on disk")
-    StreamingQueries.runBpeDropoutStream(spark, dir, base, art)
-    assert(canon(StreamingQueries.encodeStreamOutput(spark, base))
-      === expected)
   }
 
   test("a FAILED major fold costs read fan-in, never correctness; the next trigger recovers") {
