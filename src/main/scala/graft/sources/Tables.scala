@@ -45,9 +45,10 @@ object Tables {
     * at-rest parquet representation — fixture generations have
     * shipped it two ways:
     *  - TIMESTAMP(NANOS), which Spark cannot represent natively: read
-    *    as epoch-nano LONG (`spark.sql.legacy.parquet.nanosAsLong`)
-    *    and truncate to micros. Truncation only ever moves an instant
-    *    earlier by <1µs, so second-grain comparisons are unaffected.
+    *    as epoch-nano LONG (`spark.sql.legacy.parquet.nanosAsLong`,
+    *    set by [[graft.GraftSession]]) and truncate to micros.
+    *    Truncation only ever moves an instant earlier by <1µs, so
+    *    second-grain comparisons are unaffected.
     *  - tz-naive TIMESTAMP(MICROS) (isAdjustedToUTC=false): the
     *    engine session reads it as a plain TIMESTAMP instant
     *    ([[graft.GraftSession]] disables `inferTimestampNTZ`); a
@@ -56,7 +57,6 @@ object Tables {
     *    tz = UTC — the same reading).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -944,9 +944,8 @@ object StreamingQueries {
     // memoized per (session, path) — the ivfMemo pattern: every replay
     // constructs a stream (several per gate run, two per
     // replayAppendFlush call), and un-memoized each construction pays
-    // a batch footer probe + a session-conf mutation
+    // a batch footer probe
     tsProbeMemo.computeIfAbsent((spark, parquetPath), { _ =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read.parquet(parquetPath).schema("ts").dataType == LongType
     })
 

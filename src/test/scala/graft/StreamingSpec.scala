@@ -114,6 +114,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(out("2024-01-01 10:00") === 2L, s"late row must not count: $out")
   }
 
+  test("events and a replay read µs ts without touching the session's nanosAsLong flag") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = "/root/testdata/sf0.001"
+    val s = spark.newSession()
+    s.conf.set(key, "false")
+    val events = graft.sources.Tables.events(s, dir)
+    assert(events.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
+    assert(events.count() === graft.sources.Tables.events(spark, dir).count())
+    val streamed = StreamingQueries.replay(s, dir, StreamingQueries.q4ChannelGmv,
+      Seq("channel_id")).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val batch = events.groupBy(col("event_type"))
+      .agg(round(sum(col("value")), 2)).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(streamed === batch)
+    assert(s.conf.get(key) === "false")
+  }
+
   test("upsert sink: replaying the same epoch is a no-op (idempotence)") {
     import spark.implicits._
     val sink = new UpsertSink(Seq("k"))
