@@ -31,6 +31,15 @@ import org.apache.spark.sql.SparkSession
   *    renames. Files, CRC sidecars, checkpoint checksum files, atomic
   *    renames and permission bits stay identical; only the system call
   *    behind them changes.
+  *  - Artifact isolation off (`spark.sql.artifact.isolation.enabled`;
+  *    Spark defaults it on, `spark-shell` turns it off). With it on,
+  *    every session UUID gets its own executor class loader, and Spark
+  *    caches compiled generated code per class loader: each streaming
+  *    query (which clones its session) and each `newSession()`
+  *    recompiled identical code on every run. The engine adds no
+  *    session artifacts; the library sits on the application classpath.
+  *    Isolation is needed back only for session-scoped
+  *    `addArtifact`/`addJar`.
   */
 object GraftSession {
 
@@ -44,6 +53,7 @@ object GraftSession {
     .config("spark.sql.warehouse.dir",
       sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.hadoop.fs.file.impl",
       classOf[graft.sources.ForkFreeLocalFileSystem].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
@@ -90,16 +100,21 @@ object RunScratch {
     p
   }
 
+  /** Delete `root` and everything under it through NIO, in this
+    * process (no `rm` child process); a missing root is a no-op.
+    */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
+      val paths = java.nio.file.Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
+      finally paths.close()
+    }
+
   sys.addShutdownHook {
     created.forEach { p =>
-      try {
-        val root = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.exists(root)) {
-          java.nio.file.Files.walk(root)
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-        }
-      } catch { case _: Throwable => () } // best-effort
+      try deleteTree(java.nio.file.Paths.get(p))
+      catch { case _: Throwable => () } // best-effort
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType, TimestampType}
 
@@ -938,16 +939,19 @@ object StreamingQueries {
     * disagree about what an instant means.
     */
   private val tsProbeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Boolean]()
+    (String, String), java.lang.Boolean]()
 
   private def tsReadAsLong(spark: SparkSession, parquetPath: String): Boolean =
-    // memoized per (session, path) — the ivfMemo pattern: every replay
-    // constructs a stream (several per gate run, two per
-    // replayAppendFlush call), and un-memoized each construction pays
-    // a batch footer probe
-    tsProbeMemo.computeIfAbsent((spark, parquetPath), { _ =>
-      spark.read.parquet(parquetPath).schema("ts").dataType == LongType
-    })
+    // memoized per (nanosAsLong setting, path): every replay constructs
+    // a stream (several per gate run, two per replayAppendFlush call),
+    // and un-memoized each construction pays a batch footer probe. The
+    // flag is the only session state the answer depends on; a session
+    // key would miss for every replay's own session and keep it
+    // reachable.
+    tsProbeMemo.computeIfAbsent(
+      (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"), parquetPath), { _ =>
+        spark.read.parquet(parquetPath).schema("ts").dataType == LongType
+      })
 
   private def rawEventSchema(tsLong: Boolean): StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -1043,22 +1047,48 @@ object StreamingQueries {
       .coalesce(1)
 
   /** Start a replay's streaming query and run it to the end of its
-    * finite source. Stateful operators fix their partition count at
-    * query START from `spark.sql.shuffle.partitions`, and every state
-    * partition pays a state-store commit per operator per batch: the
-    * replay starts with at most 8 of them and at most one per core, so
-    * the stateful stage runs as one wave of tasks. The caller's value
-    * is restored right after the start; partitioning does not affect
-    * results. A real deployment sizes this to its key cardinality.
+    * finite source, then read its `result`. Stateful operators fix
+    * their partition count at query START from
+    * `spark.sql.shuffle.partitions`, and every state partition pays a
+    * state-store commit per operator per batch: the replay starts with
+    * at most 8 of them and at most one per core, so the stateful stage
+    * runs as one wave of tasks. The query is built, started and read
+    * on a copy of the caller's session that carries this count, so the
+    * caller's conf is never written, and every other setting of it
+    * (state store provider, checkpoint root) and its streaming-query
+    * listeners still apply.
+    * Partitioning does not affect results; a real deployment sizes it
+    * to its key cardinality.
+    *
+    * The query checkpoints into a directory of its own, deleted here
+    * through NIO: without one, Spark makes a temporary checkpoint and
+    * registers it for an `rm -rf` child process at JVM exit. A session
+    * checkpoint root (`spark.sql.streaming.checkpointLocation`) keeps
+    * the checkpoint under that root instead, as it does for any query.
     */
-  private def runToEnd(spark: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
+  private def runToEnd[T](spark: SparkSession)(
+      writer: SparkSession => DataStreamWriter[Row],
+      start: DataStreamWriter[Row] => StreamingQuery)(
+      result: SparkSession => T): T = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val session = Bridge.queryCopy(spark)
+    session.conf.set("spark.sql.shuffle.partitions",
       math.min(8, spark.sparkContext.defaultParallelism).toString)
-    val q = try start finally spark.conf.set(key, prev)
-    try q.processAllAvailable() finally q.stop()
+    val ckpt =
+      if (session.conf.getOption("spark.sql.streaming.checkpointLocation").isDefined) None
+      else Some(java.nio.file.Files.createTempDirectory("graft_replay_ckpt"))
+    var started = false
+    try {
+      val w = writer(session)
+      val q = start(ckpt.fold(w)(d => w.option("checkpointLocation", d.toString)))
+      started = true
+      try q.processAllAvailable()
+      finally { q.stop(); Bridge.releaseStreams(Bridge.batchSession(q)) }
+      result(session)
+    } finally {
+      if (!started) Bridge.releaseStreams(session)
+      ckpt.foreach(graft.RunScratch.deleteTree)
+    }
   }
 
   /** Replay the fixture through a streaming pipeline (update mode →
@@ -1082,11 +1112,10 @@ object StreamingQueries {
       outputMode: String = "update"): DataFrame = {
     val table = s"replay_${replaySeq.incrementAndGet()}"
     val sink = new JdbcUpsertSink(ReplayDbUrl, table, keys)
-    try {
-      runToEnd(spark)(sink.writeTo(
-        build(fixtureEventStream(spark, dir)).writeStream.outputMode(outputMode)))
-      singlePartitionResult(spark, sink.toDF(spark))
-    } finally dropReplayTable(table)
+    try runToEnd(spark)(
+        s => build(fixtureEventStream(s, dir)).writeStream.outputMode(outputMode),
+        sink.writeTo)(_ => singlePartitionResult(spark, sink.toDF(spark)))
+    finally dropReplayTable(table)
   }
 
   /** DROP a replay's result table. A replay that failed before its
@@ -1102,17 +1131,19 @@ object StreamingQueries {
     } finally conn.close()
   }
 
-  /** Run `build` over `src` into a memory sink in `mode`; return the
-    * sink's final content. The sink's view is dropped either way.
+  /** Run `build` over the stream `src` opens into a memory sink in
+    * `mode`; return the sink's final content. The sink's view lives in
+    * the replay's own session, which reads and drops it.
     */
-  private def replayToMemory(spark: SparkSession, src: DataFrame,
+  private def replayToMemory(spark: SparkSession, src: SparkSession => DataFrame,
       build: DataFrame => DataFrame, mode: String): DataFrame = {
     val name = s"replay_${mode}_${replaySeq.incrementAndGet()}"
-    try {
-      runToEnd(spark)(build(src).writeStream.outputMode(mode)
-        .format("memory").queryName(name).start())
-      singlePartitionResult(spark, spark.table(name))
-    } finally spark.catalog.dropTempView(name)
+    runToEnd(spark)(
+      s => build(src(s)).writeStream.outputMode(mode).format("memory").queryName(name),
+      _.start()) { s =>
+      try singlePartitionResult(spark, s.table(name))
+      finally s.catalog.dropTempView(name)
+    }
   }
 
   /** Replay through a COMPLETE-mode memory sink. Complete semantics
@@ -1126,7 +1157,7 @@ object StreamingQueries {
     */
   def replayComplete(spark: SparkSession, dir: String,
       build: DataFrame => DataFrame): DataFrame =
-    replayToMemory(spark, fixtureEventStream(spark, dir), build, "complete")
+    replayToMemory(spark, fixtureEventStream(_, dir), build, "complete")
 
   /** Append-mode replay with a watermark flush: each finalized group
     * emits EXACTLY ONCE, when the watermark passes its close — the
@@ -1196,7 +1227,7 @@ object StreamingQueries {
       java.nio.file.Files.copy(part.toPath, sentinel)
     }
     replayToMemory(spark,
-      eventStream(spark, scratch, "*.parquet", s"$dir/events.parquet"),
+      eventStream(_, scratch, "*.parquet", s"$dir/events.parquet"),
       build, "append")
   }
 

@@ -34,6 +34,46 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
 
+  /** A copy of `spark` to start one streaming query on: its own SQLConf
+    * (the caller's settings as they are now; none of the copy's changes
+    * flow back) and the caller's streaming-query listeners, so they
+    * still see the query. Spark registers a listener bus on the
+    * SparkContext for the copy and never removes it; this one takes
+    * itself off when the query terminates, its last event. A copy whose
+    * query never started needs [[releaseStreams]].
+    */
+  def queryCopy(spark: SparkSession): SparkSession = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val copy = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    spark.streams.listListeners().foreach(copy.streams.addListener)
+    copy.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        releaseStreams(copy)
+    })
+    copy
+  }
+
+  /** Take `spark`'s streaming-query listener bus off the SparkContext.
+    * Spark registers one for every session whose query manager is
+    * touched and never removes it: a session that starts a query, and
+    * the copy a stateful query runs its batches on (through the state
+    * store coordinator).
+    */
+  def releaseStreams(spark: SparkSession): Unit = {
+    val streams = spark.streams
+    val bus = streams.getClass.getDeclaredField("listenerBus")
+    bus.setAccessible(true)
+    spark.sparkContext.removeSparkListener(
+      bus.get(streams).asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+  }
+
+  /** The copy of its session a query runs its micro-batches on. */
+  def batchSession(q: org.apache.spark.sql.streaming.StreamingQuery): SparkSession =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.sparkSessionForStream
+
   /** The materialized RDD behind a `localCheckpoint`ed frame (its
     * analyzed plan is the checkpoint's `LogicalRDD` leaf), if the
     * frame is one. `Dataset.unpersist` cannot release checkpoint

@@ -20,7 +20,8 @@ import graft.streaming.StreamingQueries
 /** The session's local filesystem ([[graft.sources.ForkFreeLocalFileSystem]])
   * behaves exactly like the stock `RawLocalFileSystem` on every
   * operation it overrides, and a stateful replay plus a partitioned
-  * write start no `chmod` or `readlink` process.
+  * write start no `chmod` or `readlink` process, and the replay leaves
+  * no checkpoint for an `rm -rf` at JVM exit.
   */
 class LocalFsSpec extends AnyFunSuite {
 
@@ -118,6 +119,17 @@ class LocalFsSpec extends AnyFunSuite {
     assert(byKey(("link", false)).exists(_._1), "an unqualified symlink reports isSymlink")
   }
 
+  /** Directories Spark deletes at JVM exit, each with an `rm -rf`
+    * process: too late for a recording to see, so the test reads the
+    * list itself. */
+  private def exitDeletes(): Set[String] = {
+    val f = Class.forName("org.apache.spark.util.ShutdownHookManager$")
+      .getDeclaredField("shutdownDeletePaths")
+    f.setAccessible(true)
+    val paths = f.get(null).asInstanceOf[scala.collection.mutable.HashSet[String]]
+    paths.synchronized(paths.toSet)
+  }
+
   test("a stateful replay and a partitioned write start no chmod or readlink process") {
     import jdk.jfr.Recording
     import jdk.jfr.consumer.RecordingFile
@@ -140,11 +152,17 @@ class LocalFsSpec extends AnyFunSuite {
     val rec = new Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
-    val streamed = try {
+    val (streamed, ownCkpt) = try {
       val rows = StreamingQueries.replay(session, dir, StreamingQueries.q4ChannelGmv,
         Seq("channel_id")).collect()
       Layout.upsertPartitions(Tables.documents(spark, dir), out, Seq("lang"), Seq("doc_id"))
-      rows
+      // without a checkpoint root the replay owns (and deletes) its checkpoint
+      val exitDeletesBefore = exitDeletes()
+      val own = StreamingQueries.replay(spark, dir, StreamingQueries.q4ChannelGmv,
+        Seq("channel_id")).collect()
+      assert((exitDeletes() -- exitDeletesBefore).isEmpty,
+        "a replay left a temporary checkpoint for an rm -rf at JVM exit")
+      (rows, own)
     } finally rec.stop()
     val jfr = Files.createTempFile("graft_localfs", ".jfr")
     rec.dump(jfr)
@@ -154,6 +172,7 @@ class LocalFsSpec extends AnyFunSuite {
     Files.delete(jfr)
     assert(commands.count(Set("chmod", "readlink")) === 0, commands.groupBy(identity)
       .map { case (c, xs) => c -> xs.size })
+    assert(ownCkpt.toSet === streamed.toSet)
 
     assert(streamed.length === Tables.events(spark, dir).select("event_type").distinct().count())
     assert(spark.read.parquet(out).count() === Tables.documents(spark, dir).count())

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -19,11 +21,12 @@ case class Ev(ts: Timestamp, user_id: Long, value: Double, event_type: String)
 class StreamingSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.local("graft-streaming-test")
+  private val smallFixture = "/root/testdata/sf0.001"
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def eventsFromFixture(n: Int): Seq[Ev] = {
-    val rows = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
+    val rows = graft.sources.Tables.events(spark, smallFixture)
       .select("ts", "user_id", "value", "event_type")
       .limit(n).collect()
     rows.map(r => Ev(r.getTimestamp(0), r.getLong(1), r.getDouble(2), r.getString(3))).toSeq
@@ -1370,4 +1373,102 @@ class StreamingSpec extends AnyFunSuite {
     assert(CompactedState.expectedSaturation(1000L, 8192) <
       CompactedState.expectedSaturation(1000L, 2048))
   }
+
+  test("streaming gates compile no new classes on their third evaluation") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = smallFixture
+    for (gate <- Seq("stream_q3_user_gmv", "stream_fanout_rollup")) {
+      def evaluate(): Long = {
+        assert(StreamingQueries.queries(gate)(spark, dir).collect().nonEmpty)
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      }
+      evaluate()
+      val second = evaluate()
+      val third = evaluate()
+      assert(third === second, s"$gate compiled ${third - second} classes on its third evaluation")
+    }
+  }
+
+  test("tasks of the caller's session, a new session and a foreachBatch share one class loader") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val loaderId = udf(() =>
+      System.identityHashCode(Thread.currentThread.getContextClassLoader)).asNondeterministic()
+    def loaders(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.repartition(4).select(loaderId()).collect().map(_.getInt(0)).toSet
+    val caller = loaders(spark.range(16).toDF())
+    val fresh = loaders(spark.newSession().range(16).toDF())
+    val inBatch = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val in = MemoryStream[Long]
+    val q = in.toDF().writeStream.foreachBatch {
+      (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        loaders(batch).foreach(inBatch.add)
+    }.start()
+    try {
+      in.addData(0L until 16L)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(caller.size === 1, s"caller's tasks ran under ${caller.size} class loaders")
+    assert(fresh === caller)
+    assert(inBatch.asScala.toSet === caller)
+  }
+
+  test("a replay never writes its caller's session conf") {
+    val key = "spark.sql.shuffle.partitions"
+    val dir = smallFixture
+    val caller = spark.newSession()
+    // any value but the replay's own count, so a write would show
+    val mine = (math.min(8, spark.sparkContext.defaultParallelism) + 3).toString
+    caller.conf.set(key, mine)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var running = true
+    val poller = new Thread(() =>
+      while (running) {
+        seen.add(caller.conf.get(key))
+        java.util.concurrent.locks.LockSupport.parkNanos(100000L)
+      })
+    poller.start()
+    val (upserted, appended) = try {
+      (StreamingQueries.replay(caller, dir, StreamingQueries.q3UserGmv, Seq("user_id")).count(),
+        StreamingQueries.replayAppendFlush(caller, dir, StreamingQueries.qSessions).count())
+    } finally { running = false; poller.join() }
+    assert(upserted > 0 && appended > 0)
+    assert(seen.asScala.toSet === Set(mine))
+  }
+
+  test("replays report to the caller's query listeners and leave none behind on the context") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    // the context's listener bus is internal; count its listeners by type
+    def streamBuses(): Int = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("listeners").invoke(bus)
+        .asInstanceOf[java.util.List[AnyRef]].asScala
+        .count(_.getClass.getSimpleName == "StreamingQueryListenerBus")
+    }
+    // listener events arrive asynchronously
+    def eventually(ok: => Boolean): Boolean = {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!ok && System.nanoTime() < deadline) Thread.sleep(20)
+      ok
+    }
+    val dir = smallFixture
+    val caller = spark.newSession()
+    val progressed = new java.util.concurrent.atomic.AtomicInteger()
+    caller.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) progressed.incrementAndGet()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
+    val before = streamBuses()
+    StreamingQueries.replay(caller, dir, StreamingQueries.q4ChannelGmv, Seq("channel_id"))
+    assert(eventually(progressed.get > 0), "the caller's listener saw no replay progress")
+    for (_ <- 1 to 3) {
+      StreamingQueries.replay(caller, dir, StreamingQueries.q4ChannelGmv, Seq("channel_id"))
+      StreamingQueries.replayComplete(caller, dir, StreamingQueries.qSessions)
+    }
+    assert(eventually(streamBuses() == before), s"${streamBuses()} listener buses, $before before")
+  }
+
 }
