@@ -41,18 +41,10 @@ object Bench {
     }
     var failed = List.empty[String]
     // Dev aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run for
-    // single-query iteration; the driver never sets it. A token that
-    // IS an exact gate name selects only that gate (gate names
-    // prefix each other — dedup_components[_incremental],
-    // graph_pagerank[_capped] — and the substring form would drag
-    // the longer twin into a solo re-band); other tokens stay
-    // substring patterns.
-    val allNames = SparkEntry.queries.keySet
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    def tokenMatches(tok: String, n: String) =
-      if (allNames.contains(tok)) n == tok else n.contains(tok)
+    // single-query iteration (rule: [[SparkEntry.gateSelector]]).
+    val only = SparkEntry.gateSelector(sys.env.get("SPARK_GRAFT_ONLY"))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(tokenMatches(_, n))) }
+      .filter { case (n, _) => only(n) }
     // stable ordering; streaming replays timed like any other query
     // (their checkpoint dirs are unique per run).
     def once(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] =

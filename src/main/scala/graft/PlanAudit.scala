@@ -4,10 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.joins._
 
-/** Whole-registry join-strategy audit (builder-side main, like
-  * [[ScaleRehearsal]]): for every batch gate, print the physical
-  * join inventory and flag any `BroadcastHashJoin` whose BUILD side
-  * contains a `Generate` — the round-4 failure signature, where
+/** Whole-registry join-strategy audit (developer-side main): for
+  * every batch gate, print the physical join inventory and flag any
+  * `BroadcastHashJoin` whose BUILD side contains a `Generate` — the
+  * round-4 failure signature, where
   * explode-derived lineage defeats Catalyst's size estimation and a
   * corpus-sized frame gets guessed small and broadcast (accelerating
   * super-quadratic wall-clock locally; driver/executor OOM on a

@@ -156,6 +156,18 @@ object SparkEntry {
       graft.ext.TokenizerArtifact.queries ++ graft.ext.ByteBpe.queries +
       ("gen_orders_rollup" -> (genRollup _))
 
+  /** The gates a `SPARK_GRAFT_ONLY=a,b` list selects (Bench and
+    * Verify; unset selects every gate). A token that IS a gate name
+    * selects only that gate, since names prefix each other
+    * (`dedup_components[_incremental]`, `graph_pagerank[_capped]`);
+    * any other token is a substring pattern. */
+  def gateSelector(only: Option[String]): String => Boolean = {
+    val names = queries.keySet
+    val tokens = only.map(_.split(',').toSeq)
+    name => tokens.forall(_.exists(tok =>
+      if (names.contains(tok)) name == tok else name.contains(tok)))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -11,15 +11,10 @@ object Verify {
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev aid (same contract as Bench): SPARK_GRAFT_ONLY=a,b restricts
-    // the dump AND the emitted oracle_sql.json to matching queries for
-    // single-query iteration; the driver never sets it. Exact gate
-    // names match exactly (names prefix each other — see Bench);
-    // other tokens are substring patterns.
-    val allNames = SparkEntry.queries.keySet
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    def selected(name: String) = only.forall(_.exists(tok =>
-      if (allNames.contains(tok)) name == tok else name.contains(tok)))
+    // Dev aid (same rule as Bench, [[SparkEntry.gateSelector]]):
+    // SPARK_GRAFT_ONLY=a,b restricts the dump AND the emitted
+    // oracle_sql.json to matching queries for single-query iteration.
+    val selected = SparkEntry.gateSelector(sys.env.get("SPARK_GRAFT_ONLY"))
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -110,14 +110,6 @@ object ByteBpe {
     (merges, dictRows, words)
   }
 
-  /** The deep merge loop on an ALREADY-COLLECTED dictionary — the
-    * [[graft.BpeDepthBench]] seam (the bpeDeepMerges shape for the
-    * byte alphabet), so the driver loop's merges/s is timed directly
-    * inside one run. */
-  def trainDeepMerges(dictRows: Array[(String, Long)], rounds: Int)
-      : Seq[(Int, String, String, Long)] =
-    CorpusPrep.bpeDeepLoop(dictRows, rounds, hexSyms)._1
-
   /** Symbol → id over a trained merge table: byte value for base
     * symbols, 255 + first-minting round for minted symbols. */
   def symbolIds(merges: Seq[(Int, String, String, Long)])

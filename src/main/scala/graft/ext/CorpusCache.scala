@@ -17,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * accumulated one MEMORY_AND_DISK entry per corpus.
   *
   * Every such persist now registers here, and run entry points
-  * (Verify, Bench, ScaleRehearsal, test suites) call [[releaseAll]]
+  * (Verify, Bench, test suites) call [[releaseAll]]
   * at their run boundary — intra-run sharing is preserved, nothing
   * outlives the run. Library users embedding these operators own the
   * same handle: call [[releaseAll]] whenever a corpus sweep ends
@@ -51,10 +51,12 @@ object CorpusCache {
     * re-evaluated after it. The registered call sites all create a
     * fresh checkpoint per invocation and the run entry points release
     * only at run boundaries (after full evaluation), which satisfies
-    * that by construction. */
-  def checkpoint(df: DataFrame): DataFrame = synchronized {
+    * that by construction. The eager materialization runs outside
+    * the registry lock, so a concurrent driver thread's [[cache]] or
+    * checkpoint never waits for this one's jobs. */
+  def checkpoint(df: DataFrame): DataFrame = {
     val out = df.localCheckpoint()
-    checkpoints += out
+    synchronized { checkpoints += out }
     out
   }
 

@@ -486,9 +486,7 @@ object CorpusPrep {
     * the returned table then has fewer than `rounds` rows.
     */
   /** The deep trainer's capped dictionary pull — ONE distributed
-    * word-count + a ≤ dictCap-row collect (shared with
-    * [[graft.BpeDepthBench]] so the measured collect cost is the
-    * gated path's own). */
+    * word-count + a ≤ dictCap-row collect. */
   def bpeDictCollect(docs: DataFrame,
       dictCap: Int = BpeDictCap): Array[(String, Long)] =
     warnIfDictCapped(bpeWordDict(docs)
@@ -542,15 +540,6 @@ object CorpusPrep {
       .map { case ((w, wc), syms) => (w, wc, syms.toIndexedSeq) }
       .toDF("word", "wc", "syms")
   }
-
-  /** The deep merge loop on an ALREADY-COLLECTED dictionary — exposed
-    * so [[graft.BpeDepthBench]] can time the driver loop directly
-    * inside one run (differencing two runs understates the re-run's
-    * warmed collect and skews rounds_per_sec, the one number the
-    * bench exists to report). */
-  def bpeDeepMerges(dictRows: Array[(String, Long)], rounds: Int)
-      : Seq[(Int, String, String, Long)] =
-    bpeDeepLoop(dictRows, rounds)._1
 
   /** The driver-side merge loop shared by [[bpeTrainDeep]] (wants the
     * merge table) and [[bpeTrainDeepDict]] (wants the final words
@@ -2441,9 +2430,8 @@ object CorpusPrep {
     (merges.toSeq, words)
   }
 
-  /** The deep merge loop on an ALREADY-COLLECTED dictionary — the
-    * [[bpeDeepMerges]] seam, exposed so [[graft.BpeDepthBench]] can
-    * time the driver loop directly inside one run. */
+  /** The deep merge loop on an ALREADY-COLLECTED dictionary: the
+    * merge table alone, without the distributed dictionary pull. */
   def wordPieceDeepMerges(dictRows: Array[(String, Long)], rounds: Int)
       : Seq[(Int, String, String, Long, Long, Long, Long)] =
     wordPieceDeepLoop(dictRows, rounds)._1

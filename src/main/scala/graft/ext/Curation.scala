@@ -446,15 +446,24 @@ object Curation {
     // different computation). Safe to overlap because
     // connectedComponents plans its loop in an ISOLATED session (no
     // shared session-conf race) and the arm builds pure lazy plans.
+    // The arm's jobs carry their own tag: if the dedup chain throws,
+    // the arm thread is interrupted (no new jobs), then every job it
+    // left running is cancelled before the failure reaches the caller.
+    val sc = docs.sparkSession.sparkContext
+    val armTag = s"graft-decontam-arm-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newSingleThreadExecutor(
       (r: Runnable) => {
         val t = new Thread(r, "graft-decontam-arm"); t.setDaemon(true); t
       })
     val contaminatedF = pool.submit(
       new java.util.concurrent.Callable[DataFrame] {
-        override def call(): DataFrame = CorpusCache.checkpoint(
-          decontamReport(docs, emb)
-            .filter(col("contaminated") === 1).select(col("doc_id")))
+        override def call(): DataFrame = {
+          sc.addJobTag(armTag)
+          try CorpusCache.checkpoint(
+            decontamReport(docs, emb)
+              .filter(col("contaminated") === 1).select(col("doc_id")))
+          finally sc.removeJobTag(armTag)
+        }
       })
     val clean = try {
       val (_, _, curated) = stagesWith(d1, qualityMin,
@@ -465,6 +474,13 @@ object Curation {
           case e: java.util.concurrent.ExecutionException => throw e.getCause
         }
       curated.join(contaminated, Seq("doc_id"), "left_anti")
+    } catch {
+      case e: Throwable =>
+        contaminatedF.cancel(true)
+        pool.shutdown()
+        pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+        sc.cancelJobsWithTag(armTag)
+        throw e
     } finally pool.shutdown()
     val sampled = Sampling.tokenBudgetPerSource(clean, budget)
     Packing.packSequencesOf(

@@ -758,10 +758,6 @@ object Dedup {
           live = contractedLive
           liveRdd = contractedRdd
         }
-        if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-          System.err.println(s"[components] round=$it moved=$changed " +
-            s"live=${if (liveRdd == null) "full" else liveRdd.count().toString} " +
-            s"parts=$parts")
         it += 1
       }
       if (changed > 0)

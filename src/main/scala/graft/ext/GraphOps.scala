@@ -35,8 +35,8 @@ import graft.sources.Tables
   *
   * Both are identity rewrites (same distinct pair / count semantics),
   * so the DuckDB oracles are unchanged; equality with the plain forms
-  * is property-tested in GraphOpsSpec and the hot-key behavior is
-  * measured in [[graft.ScaleRehearsal]].
+  * is property-tested in GraphOpsSpec; the hot-key measurements are
+  * in BASELINE.md ("10M-edge graph ladder").
   */
 object GraphOps {
 
@@ -62,11 +62,8 @@ object GraphOps {
         .distinct(),
       targetSubBlock)
 
-  /** [[coActivityEdges]] over a prepared DISTINCT (m, user_id) frame —
-    * the synthetic-activity entry point for [[graft.ScaleRehearsal]]'s
-    * hot-minute case.
-    */
-  def coActivityEdgesOf(act0: DataFrame, targetSubBlock: Int = 1024): DataFrame = {
+  /** [[coActivityEdges]] over a prepared DISTINCT (m, user_id) frame. */
+  private def coActivityEdgesOf(act0: DataFrame, targetSubBlock: Int = 1024): DataFrame = {
     val spark = act0.sparkSession
     // materialized once: the census probe below and both join sides
     // reuse the distinct activity frame instead of re-deriving it
@@ -149,8 +146,7 @@ object GraphOps {
       maxUsersPerMinute, targetSubBlock)
 
   /** [[coActivityEdgesCapped]] over a prepared DISTINCT (m, user_id)
-    * frame — the synthetic-activity entry point for tests and
-    * [[graft.ScaleRehearsal]].
+    * frame — the synthetic-activity entry point for tests.
     */
   def coActivityEdgesCappedOf(act: DataFrame, maxUsersPerMinute: Int,
       targetSubBlock: Int = 1024): DataFrame =

@@ -309,14 +309,6 @@ object Similarity {
       if i < j || si <= sj
     } yield (i, si, j, sj)
     import spark.implicits._
-    if (sys.env.contains("SPARK_GRAFT_DEBUG")) {
-      val rads = stats.values.map(_._1).toSeq.sorted
-      val allPairs = stats.size.toLong * (stats.size + 1) / 2
-      System.err.println(
-        f"[cosineNearDup] cells=${stats.size} radii p50=${rads(rads.size / 2)}%.3f " +
-        f"max=${rads.last}%.3f units=${compatUnits.size} " +
-        f"clusterPairsKept=${compatUnits.map(u => (u._1, u._3)).distinct.size}/$allPairs")
-    }
     val compatDf = compatUnits.toDF("cluster_a", "sub_a", "cluster_b", "sub_b")
 
     val nsubCol = element_at(typedlit(nsub), col("cluster"))
@@ -738,9 +730,8 @@ object Similarity {
     //  distributed centroid_scores projection per sub-space — the
     //  codebook is a tiny foldable literal (m × kSub × dSub doubles),
     //  so a 100k-query batch never funnels through the driver.
-    //  Branch equality is unit-tested on fixed codebooks (ExtSpec)
-    //  and the distributed branch rehearsed at 100k queries
-    //  (ScaleRehearsal `pq` section).
+    //  Branch equality is unit-tested on fixed codebooks (ExtSpec);
+    //  the distributed branch's 100k-query record is in BASELINE.md.
     val qNorm = withNorm(queries, "query_id", "e_q", "n_q")
     val probe = qNorm.limit(PqMaxDriverQueries + 1).collect()
     val qTables =

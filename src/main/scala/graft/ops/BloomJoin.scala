@@ -16,7 +16,7 @@ import graft.functions.BloomFilter
   * codegen stage, so the shuffle carries ~(selectivity + fp_rate) of
   * the input instead of all of it.
   *
-  * WHEN IT PAYS (measured, ScaleRehearsal + BASELINE.md): the
+  * WHEN IT PAYS (measured, BASELINE.md "Scale rehearsal"): the
   * prefilter trades one-to-two extra narrow passes + a bitmap build
   * against the avoided shuffle bytes. On a single node, shuffling
   * 20M narrow lz4-compressed rows costs about one probe pass — the

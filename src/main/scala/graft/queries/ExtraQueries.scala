@@ -80,13 +80,8 @@ object ExtraQueries {
     * buckets, each overlapping pair met exactly once, never the
     * BroadcastNestedLoopJoin a bare double-inequality would plan.
     */
-  def overlapSessions(spark: SparkSession, dir: String): DataFrame =
-    overlapSessionsOf(Tables.events(spark, dir))
-
-  /** The sessionize + overlap core over any `(user_id, ts)` frame —
-    * the [[graft.ScalingLadder]] seam. */
-  def overlapSessionsOf(events: DataFrame): DataFrame = {
-    val s = events
+  def overlapSessions(spark: SparkSession, dir: String): DataFrame = {
+    val s = Tables.events(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("us"))
       .groupBy(col("user_id"),
         floor(col("us") / lit(3600000000L)).as("hr"))

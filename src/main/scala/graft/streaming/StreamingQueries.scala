@@ -460,10 +460,9 @@ object StreamingQueries {
     }
 
     /** (openedLeafPaths, totalLeafPaths) of the most recent [[read]]
-      * per state root — rehearsal instrumentation (DedupRehearsal's
-      * probe arm reports how many bucket dirs the prune actually
-      * opened vs the unpruned layout). Measurement-only; never read
-      * by any operator. */
+      * per state root: how many bucket dirs the prune actually opened
+      * vs the unpruned layout (StreamingSpec asserts it).
+      * Measurement-only; never read by any operator. */
     val readStats =
       new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
 

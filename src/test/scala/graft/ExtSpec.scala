@@ -919,6 +919,67 @@ class ExtSpec extends AnyFunSuite {
       "the dedup/budget stages dropped nobody - fixture degenerate")
   }
 
+  test("pipeline pack: a failing dedup chain cancels the running decontam arm") {
+    import graft.ext.Curation
+    import org.apache.spark.JobExecutionStatus
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val holdNanos = 30L * 1000000000L
+    ExtSpec.armStarted = new java.util.concurrent.CountDownLatch(1)
+    ExtSpec.holdUntil = System.nanoTime() + holdNanos
+    ExtSpec.holdEnd.set(null)
+    // only the decontam arm reads embeddings: its first task holds
+    // until it is killed or the hold runs out, and says which
+    val holdArm = udf { (id: Long) =>
+      ExtSpec.armStarted.countDown()
+      val ctx = org.apache.spark.TaskContext.get()
+      try while (!ctx.isInterrupted() && System.nanoTime() < ExtSpec.holdUntil)
+        Thread.sleep(20)
+      catch { case _: InterruptedException => } // a kill may interrupt
+      ExtSpec.holdEnd.compareAndSet(null,
+        if (ctx.isInterrupted()) "killed" else "ran out")
+      id
+    }
+    // only the dedup chain materializes every documents column (its
+    // cached exact-dedup frame): the probe column fails there, once
+    // the arm is running
+    val failChain = udf { (id: Long) =>
+      ExtSpec.armStarted.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      ExtSpec.injectedFailure(id)
+    }
+    val docs = Tables.documents(spark, dir)
+      .withColumn("chain_probe", failChain(col("doc_id")))
+    val emb = Tables.embeddings(spark, dir)
+      .withColumn("vec_id", holdArm(col("vec_id")))
+    val err = intercept[Exception](Curation.pipelinePack(docs, emb))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(ExtSpec.Injected)),
+      s"not the injected failure: $err")
+    assert(ExtSpec.armStarted.getCount === 0, "the decontam arm never ran a task")
+    // the dedup chain failed while the arm was still running, and the
+    // arm's task was killed rather than left to finish
+    val holdDeadline = ExtSpec.holdUntil + 10L * 1000000000L
+    while (ExtSpec.holdEnd.get == null && System.nanoTime() < holdDeadline)
+      Thread.sleep(10)
+    assert(ExtSpec.holdEnd.get === "killed")
+    // the status store hears of job ends through the listener bus, in
+    // order: once a later marker job reads as finished, so does every
+    // job that had ended when the exception reached us
+    sc.setJobGroup("graft-test-pack-marker", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    def markerDone = tracker.getJobIdsForGroup("graft-test-pack-marker")
+      .exists(tracker.getJobInfo(_).exists(_.status == JobExecutionStatus.SUCCEEDED))
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!markerDone && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(markerDone, "the status store never saw the marker job")
+    assert(tracker.getActiveJobIds.isEmpty,
+      s"jobs still running: ${tracker.getActiveJobIds.toSeq}")
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == "graft-decontam-arm" && t.isAlive),
+      "the decontam arm thread outlived the failure")
+  }
+
   test("layout upsert overwrites only the touched partition, byte-identical elsewhere") {
     import graft.ext.Layout
     val docs = Tables.documents(spark, dir)
@@ -1473,4 +1534,13 @@ class ExtSpec extends AnyFunSuite {
     assert(!check(arr(2L, 1L)))      // unsorted
     assert(!check(arr(1L, 1L, 2L))) // non-distinct
   }
+}
+
+object ExtSpec {
+  val Injected = "injected dedup-chain failure"
+  @volatile var armStarted = new java.util.concurrent.CountDownLatch(1)
+  @volatile var holdUntil = 0L
+  val holdEnd = new java.util.concurrent.atomic.AtomicReference[String]()
+  def injectedFailure(id: Long): Long =
+    throw new IllegalStateException(s"$Injected at doc $id")
 }

@@ -9,8 +9,8 @@ import graft.sources.Tables
 
 /** Round-4 hardening of the graph family: the sub-blocked edge
   * derivation and salted wedge join must be IDENTITY rewrites of
-  * their naive forms (equality tested here, hot-key behavior measured
-  * in ScaleRehearsal), PageRank's integer fixed point must early-exit
+  * their naive forms (equality tested here, hot-key behavior recorded
+  * in BASELINE.md), PageRank's integer fixed point must early-exit
   * on convergence, and the corpus caches must release at run
   * boundaries.
   */

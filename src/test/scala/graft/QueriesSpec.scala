@@ -30,6 +30,20 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("SPARK_GRAFT_ONLY selection: an exact gate name selects only itself, other tokens are substrings") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    def pick(only: String) = names.filter(SparkEntry.gateSelector(Some(only)))
+    assert(names.filter(SparkEntry.gateSelector(None)) === names)
+    assert(pick("dedup_components") === Seq("dedup_components"))
+    assert(pick("dedup_components_incremental") === Seq("dedup_components_incremental"))
+    val dedup = pick("dedup_")
+    assert(dedup.contains("dedup_components") && dedup.contains("dedup_components_incremental"))
+    assert(dedup === names.filter(_.contains("dedup_")))
+    assert(pick("graph_pagerank,dedup_components_incr") ===
+      Seq("dedup_components_incremental", "graph_pagerank"))
+    assert(pick("no_such_gate").isEmpty)
+  }
+
   test("q1 uv never exceeds total event count per day") {
     import org.apache.spark.sql.functions._
     val q1 = EventQueries.q1DailyUvGmv(spark, dir)
