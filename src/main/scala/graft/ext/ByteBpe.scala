@@ -111,14 +111,20 @@ object ByteBpe {
   }
 
   /** Symbol → id over a trained merge table: byte value for base
-    * symbols, 255 + first-minting round for minted symbols. */
+    * symbols, [[mintedIds]] for minted symbols. */
   def symbolIds(merges: Seq[(Int, String, String, Long)])
       : String => Long = {
-    val minted: Map[String, Long] = merges.groupBy(m => m._2 + m._3)
-      .map { case (s, ms) => s -> (255L + ms.map(_._1).min) }
+    val minted = mintedIds(merges.map(m => (m._1, m._2, m._3)))
     s => if (s.length == 2) java.lang.Integer.parseInt(s, 16).toLong
          else minted(s)
   }
+
+  /** Minted symbol → id over (round, p, q) merges: 255 + the round that
+    * first minted `p‖q` (a string minted twice keeps its first). */
+  private[ext] def mintedIds(merges: Seq[(Int, String, String)])
+      : Map[String, Long] =
+    merges.groupBy(m => m._2 + m._3)
+      .map { case (s, ms) => s -> (255L + ms.map(_._1).min) }
 
   /** Raw byte ids of a token — the structural no-UNK fallback for
     * pre-tokens outside the trained dict (cross-corpus encode). */
@@ -145,33 +151,15 @@ object ByteBpe {
     * no-UNK guarantee holds for input the trainer never saw. */
   def byteEncodeIdsWith(docs: DataFrame, trainDocs: DataFrame,
       rounds: Int = ByteBpeRounds): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val (merges, dictRows, words) = trainDeep(trainDocs, rounds)
     val id = symbolIds(merges)
-    // dict-bounded derived state (≤ dictCap rows by the collect
-    // contract) — but NOT a `toDF` LocalRelation: the byte dict is
-    // corpus-VOCABULARY-sized (every distinct pre-token, unlike the
-    // char gate's cap-16 vocab), and a LocalRelation embeds every row
-    // in the PLAN — cheap solo, but the round-14 sf1.0 full-suite
-    // sweep measured the plan-embedded form melting 5× under session
-    // heap pressure (22 s vs 4.0 s solo, same fixture) while the
-    // artifact path's distributed frame held. Parallelize ships the
-    // rows as RDD partitions instead.
-    val rows = dictRows.zip(words).toIndexedSeq
-      .map { case ((w, _), syms) =>
-        org.apache.spark.sql.Row(w, syms.toIndexedSeq.map(id)) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("word",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("word_ids",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType))))
-    val parts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, rows.length / 10000 + 1))
-    val dictDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, parts), schema)
-    byteEncodeIdsFromDict(docs, dictDf)
+    // the byte dict is corpus-VOCABULARY-sized (every distinct
+    // pre-token, unlike the char gate's cap-16 vocab): a distributed
+    // frame, never a plan-embedded LocalRelation
+    byteEncodeIdsFromDict(docs, TokenizerArtifact.dictFrame(
+      docs.sparkSession, "word STRING, word_ids ARRAY<BIGINT>",
+      dictRows.zip(words).toIndexedSeq.map { case ((w, _), syms) =>
+        org.apache.spark.sql.Row(w, syms.toIndexedSeq.map(id)) }))
   }
 
   /** The encode core over any `(word, word_ids)` trained dictionary —
@@ -212,13 +200,6 @@ object ByteBpe {
     s"CAST((strpos('0123456789ABCDEF', $sym[1:1]) - 1) * 16 + " +
       s"strpos('0123456789ABCDEF', $sym[2:2]) - 1 AS BIGINT)"
 
-  /** The full independent re-derivation: decorated input
-    * ([[CorpusPrep.bertDocsCte]] — the urlCanon synthesis
-    * discipline), RE2 pre-tokenization, hex-byte decomposition, the
-    * unrolled merge chain (shared round CTEs,
-    * [[CorpusPrep.bpeRoundCteSql]] — full per-round recounts, the
-    * independent formulation of the engine's delta-maintained loop),
-    * GPT-2 id layout, per-doc reassembly, digest. */
   /** Per-doc UNIQUE letters-only token appended to the CROSS gate's
     * encode half (" q" + digits of doc_id mapped a–j): the train half
     * can never contain it, so the raw-byte fallback carries real,
@@ -234,6 +215,13 @@ object ByteBpe {
   private[ext] val CrossExtraSql: String =
     "' q' || translate(CAST(doc_id AS VARCHAR), '0123456789', 'abcdefghij')"
 
+  /** The full independent re-derivation: decorated input
+    * ([[CorpusPrep.bertDocsCte]] — the urlCanon synthesis
+    * discipline), RE2 pre-tokenization, hex-byte decomposition, the
+    * unrolled merge chain (shared round CTEs,
+    * [[CorpusPrep.bpeRoundCteSql]] — full per-round recounts, the
+    * independent formulation of the engine's delta-maintained loop),
+    * GPT-2 id layout, per-doc reassembly, digest. */
   private[ext] def byteEncodeOracleSql(rounds: Int,
       trainWhere: String = "", encodeWhere: String = "",
       encodeExtraSql: String = "''"): String = {

@@ -359,28 +359,43 @@ object CorpusPrep {
   /** Greedy-leftmost merge of the chosen pair inside every word's
     * symbol array — one `aggregate` fold per word, entirely inside
     * codegen: the accumulator ends with `p` and the next symbol is
-    * `q` ⇒ the tail is replaced by the merged symbol (a fresh merge
-    * result `p‖q` can never re-match `p`, so "a a a" greedily merges
-    * positions (0,1) and keeps 2 — classic BPE semantics). */
-  private def bpeMergeFoldExpr(p: String, q: String): Column =
+    * `q` ⇒ the tail is replaced by `merged` (a fresh merge result can
+    * never re-match `p`, so "a a a" greedily merges positions (0,1)
+    * and keeps 2 — classic BPE semantics). BPE merges to `p‖q`,
+    * WordPiece to [[wpMerged]]. */
+  private def symMergeFold(p: String, q: String, merged: String): Column =
     aggregate(col("syms"),
       slice(col("syms"), 1, 0),
       (acc, x) => when(size(acc) > 0 &&
           element_at(acc, -1) === lit(p) && x === lit(q),
         concat(slice(acc, lit(1), size(acc) - 1),
-          array(lit(p + q))))
+          array(lit(merged))))
         .otherwise(concat(acc, array(x))))
 
   private def bpeApplyMerge(dict: DataFrame, p: String, q: String): DataFrame =
-    dict.withColumn("syms", bpeMergeFoldExpr(p, q))
+    dict.withColumn("syms", symMergeFold(p, q, p + q))
 
-  /** [[bpeApplyMerge]] gated per WORD: rows where `skip` holds keep
-    * their symbols untouched — the BPE-dropout encode's per-(word,
-    * merge) drop, fused into the same codegen fold. */
-  private[ext] def bpeApplyMergeUnless(dict: DataFrame, p: String, q: String,
-      skip: Column): DataFrame =
-    dict.withColumn("syms",
-      when(skip, col("syms")).otherwise(bpeMergeFoldExpr(p, q)))
+  /** The distributed merge loop: each round collects the argmax pair
+    * and folds it through the dict, stopping early at exhaustion
+    * (every word fully merged). Returns the merged word dictionary —
+    * the trained state the encode-side operators read — and the merge
+    * table `(round, p, q, cnt)`. */
+  private def bpeTrainRounds(docs: DataFrame, rounds: Int)
+      : (DataFrame, Seq[(Int, String, String, Long)]) = {
+    var dict = bpeWordDict(docs)
+    val merges = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, Long)]
+    var exhausted = false
+    while (merges.length < rounds && !exhausted) {
+      bpeTopPairRow(dict) match {
+        case None => exhausted = true
+        case Some((p, q, cnt)) =>
+          merges += ((merges.length + 1, p, q, cnt))
+          dict = bpeApplyMerge(dict, p, q)
+      }
+    }
+    (dict, merges.toSeq)
+  }
 
   /** Multi-round BPE tokenizer training — the iterative merge loop
     * [[bpePairCounts]] is round 1 of, distributed: each round counts
@@ -402,20 +417,8 @@ object CorpusPrep {
       rounds: Int = BpeMergeRoundsN): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var dict = bpeWordDict(docs)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      bpeTopPairRow(dict) match {
-        case None => exhausted = true // every word fully merged
-        case Some((p, q, cnt)) =>
-          merges += ((r, p, q, cnt))
-          dict = bpeApplyMerge(dict, p, q)
-          r += 1
-      }
-    }
-    merges.toSeq.toDF("round", "p", "q", "cnt").orderBy(col("round"))
+    bpeTrainRounds(docs, rounds)._2.toDF("round", "p", "q", "cnt")
+      .orderBy(col("round"))
   }
 
   /** The ENCODE side of the trained tokenizer: the word dictionary
@@ -428,27 +431,11 @@ object CorpusPrep {
     */
   def bpeEncodeStats(docs: DataFrame,
       rounds: Int = BpeMergeRoundsN): DataFrame =
-    bpeFinalDict(docs, rounds)
+    bpeTrainRounds(docs, rounds)._1
       .select(col("word"), col("wc"),
         length(col("word")).cast("long").as("n_chars"),
         size(col("syms")).cast("long").as("n_syms"))
       .orderBy(col("word"))
-
-  /** The word dictionary after `rounds` learned merges — the trained
-    * state both encode-side operators read. Stops early at
-    * exhaustion, like [[bpeMergeRounds]]. */
-  private def bpeFinalDict(docs: DataFrame, rounds: Int): DataFrame = {
-    var dict = bpeWordDict(docs)
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      bpeTopPairRow(dict) match {
-        case None => exhausted = true
-        case Some((p, q, _)) => dict = bpeApplyMerge(dict, p, q); r += 1
-      }
-    }
-    dict
-  }
 
   /** Training-dictionary cap for the deep merge loop: the collected
     * word dict is ≤ this many (word, wc) rows BY CONTRACT — the
@@ -684,7 +671,7 @@ object CorpusPrep {
     */
   def bpeEncodeIds(docs: DataFrame, rounds: Int = BpeMergeRoundsN,
       cap: Int = BpeVocabCap): DataFrame =
-    bpeEncodeIdsFrom(docs, bpeFinalDict(docs, rounds), cap)
+    bpeEncodeIdsFrom(docs, bpeTrainRounds(docs, rounds)._1, cap)
 
   /** [[bpeEncodeIds]] with the TRAINED STATE coming from the deep
     * trainer's collected-dict loop instead of the distributed
@@ -758,7 +745,7 @@ object CorpusPrep {
   val BpeDropoutRate = 0.3
   val BpeDropoutSeed = 13L
 
-  private[ext] def bpeDropKey(round: Column): Column =
+  private def bpeDropKey(round: Column): Column =
     concat(col("word"), lit(":"), round.cast("string"))
 
   /** The dropped (word, round) pairs — the `bpe_dropout_drops` aux
@@ -772,38 +759,45 @@ object CorpusPrep {
         lit(math.round(BpeDropoutRate * Sampling.Buckets)))
       .select(col("word"), col("round"))
 
+  /** The dropout dictionary: a merge table `(round, p, q)` folded in
+    * order through a (word, wc, syms) dict, skipping merge r for word
+    * w iff the seeded bucket of `w:r` lands under `rate` — one extra
+    * codegen branch in the same merge fold. Every 8 merges the chained
+    * dict is checkpointed: beyond ~18 chained projections the nested
+    * plan overflows the executor stack. */
+  private[ext] def bpeDropoutFold(dict: DataFrame,
+      merges: Seq[(Int, String, String)],
+      rate: Double = BpeDropoutRate): DataFrame = {
+    val thr = math.round(rate * Sampling.Buckets)
+    merges.zipWithIndex.foldLeft(dict) { case (d, ((r, p, q), i)) =>
+      val next = d.withColumn("syms",
+        when(Sampling.bucket(bpeDropKey(lit(r)), BpeDropoutSeed) < lit(thr),
+          col("syms")).otherwise(symMergeFold(p, q, p + q)))
+      if ((i + 1) % 8 == 0 && i + 1 < merges.length)
+        CorpusCache.checkpoint(next)
+      else next
+    }
+  }
+
   /** Encode through the trained merge table WITH BPE-dropout: the
-    * train loop is [[bpeFinalDict]]'s verbatim (argmaxes come from the
-    * clean chain — a dropped merge must not change what the NEXT
-    * round learns, only how this word encodes), while a parallel
-    * dropout dict applies each merge conditionally per word. At
-    * rate 0 the two chains are identical expressions, so the output
-    * hash-equals [[bpeEncodeIds]] (spec-pinned). Ids derive from the
-    * dropout dict's own symbol set by the same lexical-rank rule —
-    * a pure function of (corpus, seed, rate), which is what the
-    * cross-engine hash needs.
+    * merge table comes from the clean loop ([[bpeTrainRounds]] — a
+    * dropped merge must not change what the NEXT round learns, only
+    * how this word encodes), then [[bpeDropoutFold]] applies it
+    * conditionally per word. At rate 0 the fold is the clean chain,
+    * so the output hash-equals [[bpeEncodeIds]] (spec-pinned). Ids
+    * derive from the dropout dict's own symbol set by the same
+    * lexical-rank rule — a pure function of (corpus, seed, rate),
+    * which is what the cross-engine hash needs.
     *
     * Scale shape: [[bpeEncodeIds]]'s — the conditional fold is one
     * extra codegen branch per word; the drop decision is a narrow
     * hash, no new shuffle. */
   def bpeEncodeIdsDropout(docs: DataFrame, rate: Double = BpeDropoutRate,
       rounds: Int = BpeMergeRoundsN, cap: Int = BpeVocabCap): DataFrame = {
-    val thr = math.round(rate * Sampling.Buckets)
-    var clean = bpeWordDict(docs)
-    var dropped = clean
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      bpeTopPairRow(clean) match {
-        case None => exhausted = true
-        case Some((p, q, _)) =>
-          clean = bpeApplyMerge(clean, p, q)
-          dropped = bpeApplyMergeUnless(dropped, p, q,
-            Sampling.bucket(bpeDropKey(lit(r)), BpeDropoutSeed) < lit(thr))
-          r += 1
-      }
-    }
-    bpeEncodeIdsFrom(docs, dropped, cap)
+    val merges = bpeTrainRounds(docs, rounds)._2
+      .map { case (r, p, q, _) => (r, p, q) }
+    bpeEncodeIdsFrom(docs, bpeDropoutFold(bpeWordDict(docs), merges, rate),
+      cap)
   }
 
   // ------------------------------------------- unigram-LM tokenizer
@@ -855,18 +849,48 @@ object CorpusPrep {
           .limit(UnigramVocabCap))
   }
 
-  /** The vocabulary with integer nano-nat costs,
-    * cost = −ln(freq / Σfreq)·10⁹ — the [[TextAnalysis.lmBigramXent]]
-    * snap-once discipline: `ln` happens exactly here, the segmenter
-    * AND the DuckDB oracle both consume this table (as the
-    * `.aux/unigram_vocab` frame), so float parity can't bite. */
-  def unigramVocabCosts(docs: DataFrame): DataFrame = {
-    val v = unigramVocab(docs)
-    v.crossJoin(broadcast(v.agg(sum(col("freq")).as("tot"))))
-      .select(col("piece"), col("freq"),
-        round((log(col("tot")) - log(col("freq"))) * lit(1e9), 0)
+  /** The vocabulary with integer nano-nat costs (the segmenter AND
+    * the DuckDB oracle both consume this table, as the
+    * `.aux/unigram_vocab` frame). */
+  def unigramVocabCosts(docs: DataFrame): DataFrame =
+    snapCosts(unigramVocab(docs), "freq")
+
+  /** cost = round((ln Σfreq − ln freq)·10⁹) over a (piece, `freq`)
+    * vocabulary — the [[TextAnalysis.lmBigramXent]] snap-once
+    * discipline: every column-form unigram model runs `ln` exactly
+    * here, and the oracles read the snapped integers from the `.aux`
+    * tables these frames are written as, so float parity can't bite.
+    * `freq` keeps each model's own column name (the `.aux` schema).
+    * [[recost]] is the collected-model twin the trainer loop runs:
+    * the same arithmetic on the same JVM `Math.log`. */
+  private def snapCosts(v: DataFrame, freq: String): DataFrame =
+    v.crossJoin(broadcast(v.agg(sum(col(freq)).as("tot"))))
+      .select(col("piece"), col(freq),
+        round((log(col("tot")) - log(col(freq))) * lit(1e9), 0)
           .cast("long").as("cost"))
+
+  /** [[snapCosts]] over a collected (piece, freq) model. */
+  private def recost(fr: Seq[(String, Long)]): Seq[(String, Long, Long)] = {
+    val tot = fr.map(_._2).sum
+    fr.map { case (p, f) =>
+      (p, f, math.round((math.log(tot.toDouble) -
+        math.log(f.toDouble)) * 1e9))
+    }
   }
+
+  /** The dict words (word, wc) every unigram DP segments. */
+  private def unigramWords(docs: DataFrame): DataFrame =
+    bpeWordDict(docs).select(col("word"), col("wc"))
+
+  /** The segment tail every Viterbi segmentation gate lands: per dict
+    * word the optimum (total_cost, n_pieces) and n_best under
+    * `vocab`, ordered by word. */
+  private def unigramSegmentUnder(docs: DataFrame, vocab: DataFrame)
+      : DataFrame =
+    viterbiDp(unigramWords(docs), vocab)
+      .select(col("word"), col("wc"), col("total_cost"), col("n_pieces"),
+        col("n_best"))
+      .orderBy(col("word"))
 
   /** Viterbi segmentation of every dict word under the unigram
     * vocabulary: minimal total cost, ties to FEWER pieces, plus the
@@ -885,11 +909,7 @@ object CorpusPrep {
     * Long.MaxValue sentinel never flows into an addition.
     */
   def unigramSegment(docs: DataFrame): DataFrame =
-    viterbiDp(bpeWordDict(docs).select(col("word"), col("wc")),
-        unigramVocabCosts(docs))
-      .select(col("word"), col("wc"), col("total_cost"), col("n_pieces"),
-        col("n_best"))
-      .orderBy(col("word"))
+    unigramSegmentUnder(docs, unigramVocabCosts(docs))
 
   /** Path separator for the argmin segmentation string — \u0001 sorts
     * BELOW every `[a-z0-9]` content char, which is exactly what makes
@@ -1010,15 +1030,22 @@ object CorpusPrep {
     * ITS optimal path (with multiplicity), weighted by corpus word
     * frequency. */
   def unigramViterbiCounts(docs: DataFrame): DataFrame =
-    viterbiDp(bpeWordDict(docs).select(col("word"), col("wc")),
-        unigramVocabCosts(docs))
-      .select(col("word"), col("wc"),
-        explode(split(col("path"), UnigramPathSep)).as("piece"))
-      .filter(length(col("piece")) > 0)
+    pathPieces(viterbiDp(unigramWords(docs), unigramVocabCosts(docs)))
       .groupBy(col("piece"))
       .agg(sum(col("wc")).as("usage"),
         countDistinct(col("word")).as("n_words"))
       .orderBy(col("piece"))
+
+  /** One (word, wc, piece) row per piece of each word's argmin `path`,
+    * with multiplicity — the hard-EM E-step's unit of usage. */
+  private def pathPieces(dp: DataFrame): DataFrame =
+    dp.select(col("word"), col("wc"),
+        explode(split(col("path"), UnigramPathSep)).as("piece"))
+      .filter(length(col("piece")) > 0)
+
+  /** (piece, usage): argmin-path usage weighted by word frequency. */
+  private def pathUsage(dp: DataFrame): DataFrame =
+    pathPieces(dp).groupBy(col("piece")).agg(sum(col("wc")))
 
   /** M-step + prune: survivors are every single char (feasibility is
     * never pruned away — the SentencePiece rule) plus multi-char
@@ -1035,78 +1062,71 @@ object CorpusPrep {
 
   /** The pruned vocabulary with re-estimated nano-nat costs (the same
     * snap-once `ln` discipline; consumed as `.aux/unigram_vocab2`). */
-  def unigramVocabPrunedCosts(docs: DataFrame): DataFrame = {
-    val v = unigramVocabPruned(docs)
-    v.crossJoin(broadcast(v.agg(sum(col("freq2")).as("tot"))))
-      .select(col("piece"), col("freq2"),
-        round((log(col("tot")) - log(col("freq2"))) * lit(1e9), 0)
-          .cast("long").as("cost"))
-  }
+  def unigramVocabPrunedCosts(docs: DataFrame): DataFrame =
+    snapCosts(unigramVocabPruned(docs), "freq2")
 
   /** Round-2 segmentation under the pruned, re-estimated vocabulary —
     * the trainer loop closed: vocab → segment → usage → prune →
     * re-cost → segment. */
   def unigramSegmentPruned(docs: DataFrame): DataFrame =
-    viterbiDp(bpeWordDict(docs).select(col("word"), col("wc")),
-        unigramVocabPrunedCosts(docs))
-      .select(col("word"), col("wc"), col("total_cost"), col("n_pieces"),
-        col("n_best"))
-      .orderBy(col("word"))
+    unigramSegmentUnder(docs, unigramVocabPrunedCosts(docs))
 
-  /** Multi-round prune training — the production unigram loop: each
-    * round segments the dict under the current model, re-estimates
-    * usage from the argmin paths, prunes multi-char pieces under the
-    * floor (against the PREVIOUS round's survivors, so the vocabulary
-    * only shrinks), applies add-one smoothing, and re-costs. The
-    * model is ≤ cap + alphabet rows BY CONTRACT, so each round
-    * COLLECTS it and re-broadcasts a literal frame (the
-    * [[bpeTrainDeep]] discipline): plans stay ONE DP layer deep per
-    * round instead of nesting — the Catalyst 2^rounds analysis trap —
-    * and every round costs exactly one distributed job over the
-    * UNCHANGED word dict. Cost arithmetic is the same
-    * `round((ln tot − ln freq)·10⁹)` on the same JVM `Math.log`, so
-    * round 2 is BIT-EQUAL to the gated [[unigramSegmentPruned]]
-    * (spec-pinned AND hash-checked by the `unigram_segment_multi`
-    * gate against the same aux-2 oracle). Returns the final round's
-    * segmentation frame.
+  /** Multi-round prune training — the production unigram loop
+    * ([[unigramTrainLoop]]) under the usage-floor rule: each round
+    * re-estimates usage from the argmin paths, prunes multi-char
+    * pieces under [[UnigramPruneMin]] (against the PREVIOUS round's
+    * survivors, so the vocabulary only shrinks), applies add-one
+    * smoothing, and re-costs. One distributed job per round over the
+    * UNCHANGED word dict. Round 2 is BIT-EQUAL to the gated
+    * [[unigramSegmentPruned]] (spec-pinned AND hash-checked by the
+    * `unigram_segment_multi` gate against the same aux-2 oracle).
     */
-  def unigramTrainRounds(docs: DataFrame, rounds: Int): DataFrame = {
+  def unigramTrainRounds(docs: DataFrame, rounds: Int): DataFrame =
+    unigramTrainLoop(docs, rounds, 1L) { (words, vocab, _) =>
+      val usage = pieceCounts(pathUsage(viterbiDp(words, vocab)))
+      (usage, p => usage.getOrElse(p, 0L) >= UnigramPruneMin)
+    }
+
+  /** One unigram training round under a rule: given the dict words,
+    * the current model as a frame and its pieces, the rule returns
+    * the re-estimated usage per piece and which multi-char pieces
+    * survive. */
+  private type UnigramRound = (DataFrame, DataFrame, Seq[String]) =>
+    (Map[String, Long], String => Boolean)
+
+  /** The collected-model loop the three unigram trainers share: the
+    * round-1 model is the gated vocab, collected (≤ cap + alphabet
+    * rows BY CONTRACT); each further round applies `rule`, keeps
+    * every single char (feasibility is never pruned away) plus the
+    * surviving multi-char pieces, smooths usage by `smooth` (1, or
+    * 10⁴ for soft counts in 1e-4 units), and [[recost]]s. The model
+    * re-enters each round as a literal frame, the [[bpeTrainDeep]]
+    * discipline: plans stay ONE DP layer deep per round instead of
+    * nesting — the Catalyst 2^rounds analysis trap. Returns the final
+    * round's segmentation frame. */
+  private def unigramTrainLoop(docs: DataFrame, rounds: Int, smooth: Long)(
+      rule: UnigramRound): DataFrame = {
     require(rounds >= 1, "at least the initial model")
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = bpeWordDict(docs).select(col("word"), col("wc"))
-    def recost(fr: Seq[(String, Long)]): Seq[(String, Long, Long)] = {
-      val tot = fr.map(_._2).sum
-      fr.map { case (p, f) =>
-        (p, f, math.round((math.log(tot.toDouble) -
-          math.log(f.toDouble)) * 1e9))
-      }
-    }
-    // round-1 model: the gated vocab, collected (bounded by contract)
+    val words = unigramWords(docs)
     var model: Seq[(String, Long, Long)] = unigramVocabCosts(docs)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSeq
     for (_ <- 2 to rounds) {
-      val vdf = model.toDF("piece", "freq", "cost")
-      val usage = viterbiDp(words, vdf)
-        .select(col("wc"),
-          explode(split(col("path"), UnigramPathSep)).as("piece"))
-        .filter(length(col("piece")) > 0)
-        .groupBy(col("piece")).agg(sum(col("wc")).as("usage"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val survivors = model.collect {
-        case (p, _, _) if p.length == 1 =>
-          (p, usage.getOrElse(p, 0L) + 1L)
-        case (p, _, _) if usage.getOrElse(p, 0L) >= UnigramPruneMin =>
-          (p, usage(p) + 1L)
-      }
-      model = recost(survivors)
+      val (usage, keep) =
+        rule(words, model.toDF("piece", "freq", "cost"), model.map(_._1))
+      model = recost(model.collect {
+        case (p, _, _) if p.length == 1 || keep(p) =>
+          (p, usage.getOrElse(p, 0L) + smooth)
+      })
     }
-    viterbiDp(words, model.toDF("piece", "freq", "cost"))
-      .select(col("word"), col("wc"), col("total_cost"), col("n_pieces"),
-        col("n_best"))
-      .orderBy(col("word"))
+    unigramSegmentUnder(docs, model.toDF("piece", "freq", "cost"))
   }
+
+  /** A collected (piece, count) frame as a map. */
+  private def pieceCounts(df: DataFrame): Map[String, Long] =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   // ------------------------------------ unigram EM loss-based pruning
 
@@ -1139,8 +1159,7 @@ object CorpusPrep {
     * count underneath the dict.
     */
   def unigramEmLoss(docs: DataFrame): DataFrame =
-    unigramEmLossFrom(bpeWordDict(docs).select(col("word"), col("wc")),
-      unigramVocabCosts(docs))
+    unigramEmLossFrom(unigramWords(docs), unigramVocabCosts(docs))
 
   private[ext] def unigramEmLossFrom(words: DataFrame, vocab: DataFrame)
       : DataFrame =
@@ -1222,28 +1241,9 @@ object CorpusPrep {
   /** The EM-pruned vocabulary with re-estimated snap-once nano-nat
     * costs (consumed as `.aux/unigram_vocab_em` by the round-2
     * segment oracle — `ln` runs exactly here). */
-  def unigramVocabEmCosts(docs: DataFrame): DataFrame = {
-    val v = unigramVocabEmPruned(docs)
-    v.crossJoin(broadcast(v.agg(sum(col("freq2")).as("tot"))))
-      .select(col("piece"), col("freq2"),
-        round((log(col("tot")) - log(col("freq2"))) * lit(1e9), 0)
-          .cast("long").as("cost"))
-  }
+  def unigramVocabEmCosts(docs: DataFrame): DataFrame =
+    snapCosts(unigramVocabEmPruned(docs), "freq2")
 
-  /** Multi-round EM trainer — [[unigramTrainRounds]] with the
-    * SentencePiece loss criterion in place of the usage floor: each
-    * round segments under the current model, charges every argmin
-    * piece its exclusion-DP loss, drops the bottom 1/[[
-    * UnigramEmPruneDiv]] of multi-char pieces by (loss, piece), and
-    * re-costs survivors from add-one-smoothed usage. Same
-    * collected-model discipline (the model is ≤ cap + alphabet rows
-    * BY CONTRACT; one literal frame per round keeps plans one DP
-    * layer deep — the Catalyst 2^rounds trap); each round costs two
-    * distributed jobs over the unchanged word dict (base DP inside
-    * the loss lineage + usage). Round 2 is BIT-EQUAL to the gated
-    * single-prune path (spec-pinned, and the `unigram_train_em` gate
-    * hash-checks it against the `unigram_vocab_em` aux oracle).
-    */
   /** UTF-8 BYTE-sequence string ordering — the order UTF8String's
     * binary comparator and DuckDB's VARCHAR collation both implement.
     * Scala's default `String` ordering compares UTF-16 code UNITS,
@@ -1278,53 +1278,38 @@ object CorpusPrep {
         Ordering.Tuple2(Ordering.Long, Utf8Ordering))
       .take(multi.size / UnigramEmPruneDiv).map(_._1).toSet
 
-  def unigramTrainEmRounds(docs: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, "at least the initial model")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val words = bpeWordDict(docs).select(col("word"), col("wc"))
-    def recost(fr: Seq[(String, Long)]): Seq[(String, Long, Long)] = {
-      val tot = fr.map(_._2).sum
-      fr.map { case (p, f) =>
-        (p, f, math.round((math.log(tot.toDouble) -
-          math.log(f.toDouble)) * 1e9))
-      }
-    }
-    var model: Seq[(String, Long, Long)] = unigramVocabCosts(docs)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .toSeq
-    for (_ <- 2 to rounds) {
-      val vdf = model.toDF("piece", "freq", "cost")
-      // ONE base DP job per round, materialized, feeding both the
-      // usage aggregate and the exclusion-loss derivation (the loss
-      // lineage would otherwise re-run the identical DP)
-      val base = CorpusCache.checkpoint(viterbiDp(words, vdf)
+  /** Multi-round EM trainer — [[unigramTrainRounds]] with the
+    * SentencePiece loss criterion in place of the usage floor
+    * ([[emLossRound]] over argmin-path usage, add-one smoothing). Three
+    * jobs per round over the unchanged word dict (the checkpointed base
+    * DP, the usage and the loss collects). Round 2 is BIT-EQUAL to the gated single-prune path (spec-pinned, and
+    * the `unigram_train_em` gate hash-checks it against the
+    * `unigram_vocab_em` aux oracle).
+    */
+  def unigramTrainEmRounds(docs: DataFrame, rounds: Int): DataFrame =
+    unigramTrainLoop(docs, rounds, 1L)(emLossRound((_, _, base) =>
+      pathUsage(base)))
+
+  /** The EM round rule: segment under the current model, charge every
+    * argmin piece its exclusion-DP loss, drop the bottom
+    * 1/[[UnigramEmPruneDiv]] of multi-char pieces by (loss, piece in
+    * UTF-8 byte order), and re-estimate usage with `usageOf`
+    * (words, vocab, base) → (piece, usage). ONE base DP job per round,
+    * materialized, feeds both the usage estimator and the loss
+    * derivation (the loss lineage would otherwise re-run the identical
+    * DP). */
+  private def emLossRound(
+      usageOf: (DataFrame, DataFrame, DataFrame) => DataFrame): UnigramRound =
+    (words, vocab, pieces) => {
+      val base = CorpusCache.checkpoint(viterbiDp(words, vocab)
         .select(col("word"), col("wc"),
           col("total_cost").as("base_cost"), col("path")))
-      val usage = base
-        .select(col("wc"),
-          explode(split(col("path"), UnigramPathSep)).as("piece"))
-        .filter(length(col("piece")) > 0)
-        .groupBy(col("piece")).agg(sum(col("wc")).as("usage"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val loss = unigramEmLossFromBase(words, vdf, base)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val multi = model.collect {
-        case (p, _, _) if p.length >= 2 => (p, loss.getOrElse(p, 0L)) }
-      val prunedSet = emPruneBottom(multi)
-      val survivors = model.collect {
-        case (p, _, _) if p.length == 1 =>
-          (p, usage.getOrElse(p, 0L) + 1L)
-        case (p, _, _) if !prunedSet.contains(p) =>
-          (p, usage.getOrElse(p, 0L) + 1L)
-      }
-      model = recost(survivors)
+      val usage = pieceCounts(usageOf(words, vocab, base))
+      val loss = pieceCounts(unigramEmLossFromBase(words, vocab, base))
+      val pruned = emPruneBottom(pieces.filter(_.length >= 2)
+        .map(p => (p, loss.getOrElse(p, 0L))))
+      (usage, p => !pruned.contains(p))
     }
-    viterbiDp(words, model.toDF("piece", "freq", "cost"))
-      .select(col("word"), col("wc"), col("total_cost"), col("n_pieces"),
-        col("n_best"))
-      .orderBy(col("word"))
-  }
 
   // ---------------------------------------- unigram SOFT-EM (lattice)
 
@@ -1443,8 +1428,7 @@ object CorpusPrep {
     * Scale shape: [[viterbiDp]]'s exactly — broadcast ≤cap+alphabet
     * probe map, one fold per DICT word, ≤ K structs per position. */
   def unigramSegmentNbest(docs: DataFrame): DataFrame =
-    nbestDp(bpeWordDict(docs).select(col("word"), col("wc")),
-        unigramVocabCosts(docs))
+    nbestDp(unigramWords(docs), unigramVocabCosts(docs))
       .orderBy(col("word"), col("rank"))
 
   private[graft] def nbestDp(words: DataFrame,
@@ -1524,8 +1508,7 @@ object CorpusPrep {
     * sampled choice is a narrow per-row filter — no new shuffle of
     * anything corpus-sized. */
   def unigramSegmentSampled(docs: DataFrame): DataFrame =
-    sampledSpans(bpeWordDict(docs).select(col("word"), col("wc")),
-        unigramVocabCosts(docs))
+    sampledSpans(unigramWords(docs), unigramVocabCosts(docs))
       .withColumn("u",
         pmod(xxhash64(lit(SubwordSampleSeed), col("word")), col("tot")))
       .filter(col("u") >= col("cum") - col("w_x1e6") && col("u") < col("cum"))
@@ -1589,8 +1572,7 @@ object CorpusPrep {
   def unigramSampledDocStats(docs: DataFrame,
       epoch: Long = SubwordDocEpoch): DataFrame =
     unigramSampledDocStatsWith(docs,
-      sampledSpans(bpeWordDict(docs).select(col("word"), col("wc")),
-        unigramVocabCosts(docs)), epoch)
+      sampledSpans(unigramWords(docs), unigramVocabCosts(docs)), epoch)
 
   /** The document sampler over an already-derived span frame — the
     * streaming seam ([[graft.ext.TokenizerArtifact]] feeds spans from
@@ -1616,9 +1598,7 @@ object CorpusPrep {
     * [[unigramViterbiCounts]], gated with a full path-enumeration
     * re-derivation oracle. */
   def unigramSoftCounts(docs: DataFrame): DataFrame =
-    unigramSoftMarginals(
-        bpeWordDict(docs).select(col("word"), col("wc")),
-        unigramVocabCosts(docs))
+    unigramSoftMarginals(unigramWords(docs), unigramVocabCosts(docs))
       .groupBy(col("piece"))
       .agg(sum(col("wc") * col("e_x1e4")).as("expected_x1e4"),
         countDistinct(col("word")).as("n_words"))
@@ -1642,68 +1622,21 @@ object CorpusPrep {
     * (consumed as `.aux/unigram_vocab_em_soft` by the soft trainer's
     * round-2 segment oracle — the 1e-4 scaling cancels in the
     * ln-ratio). */
-  def unigramVocabEmSoftCosts(docs: DataFrame): DataFrame = {
-    val v = unigramVocabEmSoft(docs)
-    v.crossJoin(broadcast(v.agg(sum(col("freq2_x1e4")).as("tot"))))
-      .select(col("piece"), col("freq2_x1e4"),
-        round((log(col("tot")) - log(col("freq2_x1e4"))) * lit(1e9), 0)
-          .cast("long").as("cost"))
-  }
+  def unigramVocabEmSoftCosts(docs: DataFrame): DataFrame =
+    snapCosts(unigramVocabEmSoft(docs), "freq2_x1e4")
 
   /** Multi-round SOFT-EM trainer — [[unigramTrainEmRounds]] with the
-    * E-step count estimator swapped to lattice expected counts: each
-    * round segments under the current model (ONE materialized base DP
-    * feeding the loss derivation AND the Viterbi scaling of the
-    * marginal pass), charges argmin pieces their exclusion loss,
-    * drops the bottom 1/[[UnigramEmPruneDiv]] by (loss, piece in
-    * UTF-8 byte order), and re-costs survivors from add-one-smoothed
-    * EXPECTED usage in 1e-4 units. Same collected-model discipline.
-    * Round 2 is BIT-EQUAL to the gated single-prune soft path (the
+    * E-step count estimator swapped to lattice expected counts (the
+    * materialized base DP also feeds the Viterbi scaling of the
+    * marginal pass), smoothed by one unit in 1e-4 units. Round 2 is
+    * BIT-EQUAL to the gated single-prune soft path (the
     * `unigram_train_em_soft` gate hash-checks it against the
     * `unigram_vocab_em_soft` aux oracle). */
-  def unigramTrainEmSoftRounds(docs: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, "at least the initial model")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val words = bpeWordDict(docs).select(col("word"), col("wc"))
-    def recost(fr: Seq[(String, Long)]): Seq[(String, Long, Long)] = {
-      val tot = fr.map(_._2).sum
-      fr.map { case (p, f) =>
-        (p, f, math.round((math.log(tot.toDouble) -
-          math.log(f.toDouble)) * 1e9))
-      }
-    }
-    var model: Seq[(String, Long, Long)] = unigramVocabCosts(docs)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .toSeq
-    for (_ <- 2 to rounds) {
-      val vdf = model.toDF("piece", "freq", "cost")
-      val base = CorpusCache.checkpoint(viterbiDp(words, vdf)
-        .select(col("word"), col("wc"),
-          col("total_cost").as("base_cost"), col("path")))
-      val usage = unigramSoftMarginalsFrom(words, vdf,
+  def unigramTrainEmSoftRounds(docs: DataFrame, rounds: Int): DataFrame =
+    unigramTrainLoop(docs, rounds, 10000L)(emLossRound((words, vocab, base) =>
+      unigramSoftMarginalsFrom(words, vocab,
           base.select(col("word"), col("base_cost").as("total_cost")))
-        .groupBy(col("piece"))
-        .agg(sum(col("wc") * col("e_x1e4")).as("expected_x1e4"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val loss = unigramEmLossFromBase(words, vdf, base)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val multi = model.collect {
-        case (p, _, _) if p.length >= 2 => (p, loss.getOrElse(p, 0L)) }
-      val prunedSet = emPruneBottom(multi)
-      val survivors = model.collect {
-        case (p, _, _) if p.length == 1 =>
-          (p, usage.getOrElse(p, 0L) + 10000L)
-        case (p, _, _) if !prunedSet.contains(p) =>
-          (p, usage.getOrElse(p, 0L) + 10000L)
-      }
-      model = recost(survivors)
-    }
-    viterbiDp(words, model.toDF("piece", "freq", "cost"))
-      .select(col("word"), col("wc"), col("total_cost"), col("n_pieces"),
-        col("n_best"))
-      .orderBy(col("word"))
-  }
+        .groupBy(col("piece")).agg(sum(col("wc") * col("e_x1e4")))))
 
   /** Per-document token statistics under the unigram tokenizer — the
     * encode-side composition (train → segment → encode, the
@@ -1774,16 +1707,8 @@ object CorpusPrep {
     * 0 (the LEFT join), matching the BPE gate's convention.
     */
   def unigramFertilityByLang(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("lang"))
-      .join(unigramEncodeStats(docs), Seq("doc_id"), "left")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(coalesce(col("n_words"), lit(0L))).as("n_words"),
-        sum(coalesce(col("n_pieces"), lit(0L))).as("n_pieces"))
-      .withColumn("fertility_x100",
-        expr("CASE WHEN n_words = 0 THEN NULL" +
-          " ELSE n_pieces * 100 div n_words END"))
-      .orderBy(col("lang"))
+    fertilityByLang(docs, unigramEncodeStats(docs), "left",
+      "n_words", "n_pieces", None)
 
   /** The segment oracle as one reusable statement, parametrized by
     * which vocabulary aux table it costs against (shared by the
@@ -2098,13 +2023,7 @@ object CorpusPrep {
           case None => exhausted = true
           case Some((p, q, cnt, cp, cq, key)) =>
             merges += ((r, p, q, cnt, cp, cq, key))
-            dict = dict.withColumn("syms",
-              aggregate(col("syms"), slice(col("syms"), 1, 0),
-                (acc, x) => when(size(acc) > 0 &&
-                    element_at(acc, -1) === lit(p) && x === lit(q),
-                  concat(slice(acc, lit(1), size(acc) - 1),
-                    array(lit(wpMerged(p, q)))))
-                  .otherwise(concat(acc, array(x)))))
+            dict = dict.withColumn("syms", symMergeFold(p, q, wpMerged(p, q)))
             if (r % WordPieceCheckpointEvery == 0)
               dict = CorpusCache.checkpoint(dict)
             r += 1
@@ -2460,9 +2379,27 @@ object CorpusPrep {
     * from the same materialized base dict as the per-word gate. */
   def wordPieceEncodeDocs(docs: DataFrame,
       rounds: Int = WordPieceRoundsN): DataFrame = {
+    val toks = docs.select(col("doc_id"),
+        posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "word")))
+      .filter(col("word").rlike("^[a-z0-9]+$") &&
+        length(col("word")) >= 2 &&
+        length(col("word")) <= WordPieceMaxWordLen)
+    wordPieceDocsDigest(docs, CorpusCache.checkpoint(wordPieceDict(docs)),
+      rounds, toks, "inner", lit(false))
+  }
+
+  /** The per-document digest tail both per-doc WordPiece surfaces
+    * share: train on the materialized `base` dict, greedy-encode its
+    * words, join the (doc_id, pos, word) token stream to the per-word
+    * encodes (`how`), and aggregate per document token/piece/unk
+    * counts plus an order-exact digest of the piece strings — a token
+    * where `wholeUnk` holds counts as ONE whole-word `[UNK]`. Docs
+    * with no tokens join back zero-filled. */
+  private def wordPieceDocsDigest(docs: DataFrame, base: DataFrame,
+      rounds: Int, toks: DataFrame, how: String, wholeUnk: Column)
+      : DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val base = CorpusCache.checkpoint(wordPieceDict(docs))
     val (_, vocab) = wordPieceTrainWith(base, rounds)
     val byWord = wordPieceEncodeWith(base.select(col("word"), col("wc")),
         vocab.toDF("piece"))
@@ -2470,11 +2407,6 @@ object CorpusPrep {
         when(col("is_unk") === 1, lit(1L)).otherwise(col("n_pieces"))
           .as("np"),
         col("pieces").as("ps"), col("is_unk").cast("long").as("unk"))
-    val toks = docs.select(col("doc_id"),
-        posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "word")))
-      .filter(col("word").rlike("^[a-z0-9]+$") &&
-        length(col("word")) >= 2 &&
-        length(col("word")) <= WordPieceMaxWordLen)
     // token-stream join-back: merge-hinted, never broadcast — byWord
     // is WORD-DICT-sized (uncapped, unlike bpeEncodeIds' ≤ cap ids
     // map), and its explode-derived lineage defeats size estimation
@@ -2487,13 +2419,14 @@ object CorpusPrep {
     // the exchange, so raw per-token rows shuffle where per-doc partial
     // collect buffers did — the 10–30× row compaction the map-side agg
     // buys outweighs the 2-task post-shuffle width AQE picks here.
-    val agg = toks.join(byWord.hint("merge"), "word")
+    val agg = toks.join(byWord.hint("merge"), Seq("word"), how)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
-        sum(col("unk")).as("n_unk"),
-        sum(col("np")).as("n_pieces"),
+        sum(when(wholeUnk, lit(1L)).otherwise(col("unk"))).as("n_unk"),
+        sum(when(wholeUnk, lit(1L)).otherwise(col("np"))).as("n_pieces"),
         md5(array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("ps")))),
+          array_sort(collect_list(struct(col("pos"),
+            when(wholeUnk, lit("[UNK]")).otherwise(col("ps")).as("ps")))),
           x => x.getField("ps")), " ")).as("pieces_md5"))
     docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -2510,20 +2443,8 @@ object CorpusPrep {
     * ANSI-safe NULL on a zero-token language. */
   def wordPieceFertilityByLang(docs: DataFrame,
       rounds: Int = WordPieceRoundsN): DataFrame =
-    wordPieceEncodeDocs(docs, rounds)
-      .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(col("n_pieces")).as("n_pieces"),
-        sum(col("n_unk")).as("n_unk"))
-      .withColumn("fertility_x100",
-        expr("CASE WHEN n_tokens = 0 THEN NULL" +
-          " ELSE n_pieces * 100 div n_tokens END"))
-      .withColumn("unk_x10k",
-        expr("CASE WHEN n_tokens = 0 THEN NULL" +
-          " ELSE n_unk * 10000 div n_tokens END"))
-      .orderBy(col("lang"))
+    fertilityByLang(docs, wordPieceEncodeDocs(docs, rounds), "inner",
+      "n_tokens", "n_pieces", Some("n_unk"))
 
   // ------------------------------------------- BERT basic tokenizer
   // (r12 #3: the production pre-tokenization surface — punctuation
@@ -2619,42 +2540,16 @@ object CorpusPrep {
     * v1 gate; the decoration and tokenization are scan-local. */
   def wordPieceEncodeDocsBert(docs: DataFrame,
       rounds: Int = WordPieceRoundsN): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val decorated = bertFixtureText(docs)
-    val base = CorpusCache.checkpoint(wordPieceDictBert(decorated))
-    val (_, vocab) = wordPieceTrainWith(base, rounds)
-    val byWord = wordPieceEncodeWith(base.select(col("word"), col("wc")),
-        vocab.toDF("piece"))
-      .select(col("word"),
-        when(col("is_unk") === 1, lit(1L)).otherwise(col("n_pieces"))
-          .as("np"),
-        col("pieces").as("ps"), col("is_unk").cast("long").as("unk"))
     val toks = decorated.select(col("doc_id"),
       posexplode(bertTokens(col("text"))).as(Seq("pos", "word")))
     // LEFT join: the only dict misses are the over-long tokens, which
     // resolve to the whole-word [UNK] fallback inline — every token
     // ≤ the length cap is in the dict by construction (same stream,
-    // same filter). Merge-hinted like the v1 gate (dict-sized,
-    // explode lineage defeats size estimation).
-    val long = length(col("word")) > WordPieceMaxWordLen
-    // no doc_id fan-out before the digest agg — see wordPieceEncodeDocs
-    val agg = toks.join(byWord.hint("merge"), Seq("word"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(long, lit(1L)).otherwise(col("unk"))).as("n_unk"),
-        sum(when(long, lit(1L)).otherwise(col("np"))).as("n_pieces"),
-        md5(array_join(transform(
-          array_sort(collect_list(struct(col("pos"),
-            when(long, lit("[UNK]")).otherwise(col("ps")).as("ps")))),
-          x => x.getField("ps")), " ")).as("pieces_md5"))
-    docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_unk"), lit(0L)).as("n_unk"),
-        coalesce(col("n_pieces"), lit(0L)).as("n_pieces"),
-        coalesce(col("pieces_md5"), md5(lit(""))).as("pieces_md5"))
-      .orderBy(col("doc_id"))
+    // same filter)
+    wordPieceDocsDigest(docs,
+      CorpusCache.checkpoint(wordPieceDictBert(decorated)), rounds, toks,
+      "left", length(col("word")) > WordPieceMaxWordLen)
   }
 
   /** WordPiece vocabulary cap for the ARTIFACT cross-corpus gates —
@@ -2862,20 +2757,32 @@ object CorpusPrep {
     * |languages|-row aggregate.
     */
   def bpeFertilityByLang(docs: DataFrame): DataFrame =
-    bpeEncodeIds(docs)
-      .join(docs.select(col("doc_id"), col("lang")), "doc_id")
+    fertilityByLang(docs,
+      bpeEncodeIds(docs).withColumn("n_ids", size(col("ids")).cast("long")),
+      "inner", "n_tokens", "n_ids", Some("n_unk"))
+
+  /** The per-language fertility aggregate behind the three
+    * `*FertilityByLang` gates: the corpus `lang` column joined (`how`)
+    * to a per-document encode, then ONE |languages|-row aggregate —
+    * `n_docs`, the sums of `tokens`, `pieces` and (if counted) `unk`,
+    * `fertility_x100` = pieces per token ×100 and `unk_x10k` = unks
+    * per token ×10⁴. Exact integer ratios, ANSI-safe NULL on a
+    * zero-token language; docs a LEFT join leaves unmatched count 0. */
+  private def fertilityByLang(docs: DataFrame, perDoc: DataFrame,
+      how: String, tokens: String, pieces: String, unk: Option[String])
+      : DataFrame = {
+    def perToken(n: String, scale: Int): Column =
+      expr(s"CASE WHEN $tokens = 0 THEN NULL ELSE $n * $scale div $tokens END")
+    val counts = Seq(tokens, pieces) ++ unk
+    val agg = docs.select(col("doc_id"), col("lang"))
+      .join(perDoc, Seq("doc_id"), how)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(size(col("ids")).cast("long")).as("n_ids"),
-        sum(col("n_unk")).as("n_unk"))
-      .withColumn("fertility_x100",
-        expr("CASE WHEN n_tokens = 0 THEN NULL" +
-          " ELSE n_ids * 100 div n_tokens END"))
-      .withColumn("unk_x10k",
-        expr("CASE WHEN n_tokens = 0 THEN NULL" +
-          " ELSE n_unk * 10000 div n_tokens END"))
+        counts.map(c => sum(coalesce(col(c), lit(0L))).as(c)): _*)
+      .withColumn("fertility_x100", perToken(pieces, 100))
+    unk.foldLeft(agg)((a, u) => a.withColumn("unk_x10k", perToken(u, 10000)))
       .orderBy(col("lang"))
+  }
 
   // ------------------------------------------------------- oracle twins
 

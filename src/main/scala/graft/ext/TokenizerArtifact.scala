@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.RunScratch
 import graft.sources.Tables
@@ -17,15 +18,24 @@ import graft.sources.Tables
   * The artifact layout is plain parquet under a directory, so the
   * "format" is the engine's own table format — no bespoke
   * serialization, readable by any engine (the DuckDB oracle could
-  * read it directly):
+  * read it directly). Seven tables over four families:
   *
-  *   <dir>/bpe_merges     (round, p, q, cnt)   — the learned merge
-  *                        table, the canonical BPE artifact
-  *   <dir>/bpe_vocab      (word, wc, syms)     — the merged
-  *                        word→symbols dictionary the encoder probes
-  *   <dir>/unigram_model  (piece, freq, cost)  — the unigram-LM
-  *                        vocabulary with snap-once integer
-  *                        nano-nat costs
+  *   <dir>/bpe_merges        (round, p, q, cnt) — the learned merge
+  *                           table, the canonical BPE artifact
+  *   <dir>/bpe_vocab         (word, wc, syms)   — the merged
+  *                           word→symbols dictionary the encoder
+  *                           probes
+  *   <dir>/bytebpe_merges    (round, p, q, cnt) — byte-level BPE's
+  *                           hex-pair merges
+  *   <dir>/bytebpe_vocab     (word, wc, syms)   — the merged
+  *                           pre-token dictionary
+  *   <dir>/wordpiece_merges  (round, p, q, cnt, cp, cq, score_key)
+  *   <dir>/wordpiece_vocab   (piece)            — the piece inventory
+  *                           the greedy encoder probes (plain =
+  *                           word-initial, `##` = continuation)
+  *   <dir>/unigram_model     (piece, freq, cost) — the unigram-LM
+  *                           vocabulary with snap-once integer
+  *                           nano-nat costs
   *
   * Scale shape: everything persisted is VOCABULARY-BOUNDED state
   * (the capped word dict / the capped piece vocabulary — the same
@@ -44,16 +54,17 @@ import graft.sources.Tables
   */
 object TokenizerArtifact {
 
-  /** Target rows per artifact parquet file. Write parallelism is
-    * DERIVED from the same constants the collect contracts bound the
-    * row counts with — `⌈cap / ArtifactRowsPerFile⌉` writer tasks —
-    * instead of a literal `coalesce(1)` (advisory r9 latent #2: a
-    * single-file write is correct under today's ≤2²⁰-row contract,
-    * but a raised cap must widen the write fan-out in the SAME
-    * motion, or the raise silently produces a one-task
-    * multi-gigabyte file). At the current caps: bpe_vocab = 2²⁰/2¹⁷
-    * = 8 files, unigram model and a default-depth merge table = 1 —
-    * the sizes stay artifact-like either way. */
+  /** Target rows per artifact parquet file for the contract-bounded
+    * tables (merge tables, the WordPiece vocab, the unigram model).
+    * Their write parallelism is DERIVED from the same constants the
+    * collect contracts bound the row counts with —
+    * `⌈cap / ArtifactRowsPerFile⌉` writer tasks — instead of a
+    * literal `coalesce(1)` (advisory r9 latent #2: a raised cap must
+    * widen the write fan-out in the SAME motion, or the raise
+    * silently produces a one-task multi-gigabyte file). At the
+    * current caps the unigram model and a default-depth merge table
+    * are 1 file each. The two merge-family vocab tables follow the
+    * actual row count instead ([[dictFrame]]). */
   val ArtifactRowsPerFile: Long = 1L << 17
 
   /** Alphabet bound for the unigram model's row-count contract
@@ -67,51 +78,51 @@ object TokenizerArtifact {
       .toInt
 
   /** Train (deep loop — the production-depth trainer) and persist
-    * both BPE artifacts. ONE distributed word count + capped
-    * collect, one driver loop, two vocabulary-bounded writes (fan-out
-    * tied to each table's row-count contract via
-    * [[artifactParts]]). */
+    * both BPE artifacts: ONE distributed word count + capped collect,
+    * one in-memory merge loop, two vocabulary-bounded writes
+    * ([[writeMergeArtifact]]). */
   def bpeWrite(docs: DataFrame, dir: String,
       rounds: Int = CorpusPrep.BpeMergeRoundsN): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val dictRows = CorpusPrep.bpeDictCollect(docs)
     val (merges, words) = CorpusPrep.bpeDeepLoop(dictRows, rounds)
-    merges.toDF("round", "p", "q", "cnt")
-      .repartition(artifactParts(rounds.toLong))
-      .write.mode("overwrite").parquet(s"$dir/bpe_merges")
-    // parallelize seam, not toDF (VERDICT r14 #2): the char-BPE dict
-    // is BpeDictCap-class (corpus-vocabulary-sized, 2²⁰ cap) — the
-    // same row class whose plan-embedded LocalRelation melted 5× under
-    // session heap pressure in the r14 sf1.0 sweep on the byte path.
-    writeDictDistributed(spark, dictRows.zip(words).toIndexedSeq
-      .map { case ((w, wc), syms) =>
-        org.apache.spark.sql.Row(w, wc, syms.toIndexedSeq) },
-      s"$dir/bpe_vocab")
+    writeMergeArtifact(docs.sparkSession, s"$dir/bpe", rounds, merges,
+      dictRows, words)
   }
 
-  /** Distributed write of a corpus-vocabulary-sized (word, wc, syms)
-    * dictionary: `parallelize` rows instead of embedding them as a
-    * `toDF` LocalRelation in the write plan (the r14 sweep catch —
-    * a vocabulary-sized LocalRelation re-serializes with every plan
-    * that references it and melts under session heap pressure).
-    * Fan-out tracks the actual row count, capped at the session's
-    * parallelism. Merge tables and cap-16/32 frames stay `toDF`:
-    * they are rounds/cap-bounded tiny. */
-  private def writeDictDistributed(spark: SparkSession,
-      rows: IndexedSeq[org.apache.spark.sql.Row], path: String): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("word",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("wc",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("syms",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType))))
+  /** The merge-family artifact writer (char- and byte-level BPE):
+    * `<prefix>_merges` (round, p, q, cnt), fan-out via
+    * [[artifactParts]] of the round count, and `<prefix>_vocab`
+    * (word, wc, syms), the merged dictionary, through [[dictFrame]]. */
+  private def writeMergeArtifact(spark: SparkSession, prefix: String,
+      rounds: Int, merges: Seq[(Int, String, String, Long)],
+      dictRows: Array[(String, Long)], words: Array[Array[String]]): Unit = {
+    import spark.implicits._
+    merges.toDF("round", "p", "q", "cnt")
+      .repartition(artifactParts(rounds.toLong))
+      .write.mode("overwrite").parquet(s"${prefix}_merges")
+    dictFrame(spark, "word STRING, wc BIGINT, syms ARRAY<STRING>",
+        dictRows.zip(words).toIndexedSeq.map { case ((w, wc), syms) =>
+          Row(w, wc, syms.toIndexedSeq) })
+      .write.mode("overwrite").parquet(s"${prefix}_vocab")
+  }
+
+  /** A corpus-vocabulary-sized dictionary (≤ [[CorpusPrep.BpeDictCap]]
+    * rows by the collect contract) as a DISTRIBUTED frame:
+    * `parallelize` the rows instead of embedding them as a `toDF`
+    * LocalRelation in the plan (the r14 sf1.0 sweep catch — a
+    * vocabulary-sized LocalRelation re-serializes with every plan
+    * that references it and melted 5× under session heap pressure).
+    * Fan-out rule: `min(defaultParallelism, rows / 10000 + 1)`
+    * slices — one per 10⁴ rows, capped at the session's parallelism —
+    * and a write of the frame emits at most one file per slice. Merge
+    * tables and cap-16/32 frames stay `toDF`: they are
+    * rounds/cap-bounded tiny. */
+  private[ext] def dictFrame(spark: SparkSession, ddl: String,
+      rows: IndexedSeq[Row]): DataFrame = {
     val parts = math.max(1, math.min(
       spark.sparkContext.defaultParallelism, rows.length / 10000 + 1))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
-      .write.mode("overwrite").parquet(path)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, parts),
+      StructType.fromDDL(ddl))
   }
 
   /** Encode documents through a PERSISTED BPE artifact: load the
@@ -127,7 +138,8 @@ object TokenizerArtifact {
     * (VERDICT r13 #4 — the BPE side of the streaming
     * subword-regularization pair): each vocab word's symbols
     * re-derive from its characters by folding the PERSISTED merge
-    * table, skipping merge r for word w iff the seeded
+    * table ([[CorpusPrep.bpeDropoutFold]], the in-lineage gate's
+    * fold), skipping merge r for word w iff the seeded
     * (word, round) hash bucket lands under the rate — train state
     * untouched (dropout is an encode-time reinterpretation of the
     * same merges, Provilkov et al. 2020), and the whole frame is a
@@ -137,28 +149,14 @@ object TokenizerArtifact {
     * by the artifact's vocabulary contract. */
   private def bpeDropoutDictFrom(spark: SparkSession, dir: String)
       : DataFrame = {
-    val thr = math.round(CorpusPrep.BpeDropoutRate * Sampling.Buckets)
     val merges = spark.read.parquet(s"$dir/bpe_merges")
       .orderBy(col("round")).collect()
       .map(r => (r.getAs[Int]("round"), r.getAs[String]("p"),
         r.getAs[String]("q")))
-    var dict = spark.read.parquet(s"$dir/bpe_vocab")
-      .select(col("word"), col("wc"), split(col("word"), "").as("syms"))
-    merges.zipWithIndex.foreach { case ((rd, p, q), i) =>
-      dict = CorpusPrep.bpeApplyMergeUnless(dict, p, q,
-        Sampling.bucket(CorpusPrep.bpeDropKey(lit(rd)),
-          CorpusPrep.BpeDropoutSeed) < lit(thr))
-      // checkpoint cadence (ADVICE r14): one bpeApplyMergeUnless per
-      // persisted merge chains an unbounded per-round projection —
-      // beyond ~18 rounds the nested plan overflows the executor
-      // stack (the known iterative-plan-depth failure mode). Truncate
-      // every 8 merges, matching the other deep loops' localCheckpoint
-      // discipline; the final checkpoint below covers the tail. Inert
-      // at today's 3-round bpeWrite default.
-      if ((i + 1) % 8 == 0 && i + 1 < merges.length)
-        dict = CorpusCache.checkpoint(dict)
-    }
-    CorpusCache.checkpoint(dict)
+    CorpusCache.checkpoint(CorpusPrep.bpeDropoutFold(
+      spark.read.parquet(s"$dir/bpe_vocab")
+        .select(col("word"), col("wc"), split(col("word"), "").as("syms")),
+      merges.toSeq))
   }
 
   /** Train (deep loop) and persist both WordPiece artifacts —
@@ -244,31 +242,15 @@ object TokenizerArtifact {
   }
 
   /** Train (deep loop over byte symbols) and persist the BYTE-LEVEL
-    * BPE artifacts — the fourth tokenizer family joins the lifecycle:
-    *
-    *   <dir>/bytebpe_merges  (round, p, q, cnt) — hex-pair merges
-    *   <dir>/bytebpe_vocab   (word, wc, syms)   — the merged
-    *                         pre-token dictionary (≤ dictCap rows by
-    *                         the collect contract, loud at the cap)
-    *
-    * Input is the caller's (already decorated) corpus — byte-BPE has
-    * no eligibility filter, every pre-token trains. */
+    * BPE artifacts (`bytebpe_merges`, `bytebpe_vocab`) through the
+    * same writer as [[bpeWrite]]. Input is the caller's (already
+    * decorated) corpus — byte-BPE has no eligibility filter, every
+    * pre-token trains. */
   def byteBpeWrite(docs: DataFrame, dir: String,
       rounds: Int = ByteBpe.ByteBpeRounds): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val (merges, dictRows, words) = ByteBpe.trainDeep(docs, rounds)
-    merges.toDF("round", "p", "q", "cnt")
-      .repartition(artifactParts(rounds.toLong))
-      .write.mode("overwrite").parquet(s"$dir/bytebpe_merges")
-    // parallelize, not toDF: the byte dict is corpus-vocabulary-sized
-    // and a plan-embedded LocalRelation of it melts under session
-    // heap pressure (the r14 sweep catch) — the shared seam
-    // [[writeDictDistributed]], same as the char-BPE vocab write.
-    writeDictDistributed(spark, dictRows.zip(words).toIndexedSeq
-      .map { case ((w, wc), syms) =>
-        org.apache.spark.sql.Row(w, wc, syms.toIndexedSeq) },
-      s"$dir/bytebpe_vocab")
+    writeMergeArtifact(docs.sparkSession, s"$dir/bytebpe", rounds, merges,
+      dictRows, words)
   }
 
   /** Load the persisted byte-BPE state as the encode-side
@@ -276,17 +258,15 @@ object TokenizerArtifact {
     * (≤ rounds rows) collects into a foldable minted-symbol→id map
     * literal and the vocabulary's symbol arrays resolve through it in
     * one narrow projection — the dict never round-trips the driver
-    * (it is corpus-vocabulary-sized, not cap-16-sized). Ids are the
-    * same pure function of the trained state as
-    * [[ByteBpe.symbolIds]]: byte value for 2-hex-char bases,
-    * 255 + first-minting round for minted symbols. */
+    * (it is corpus-vocabulary-sized, not cap-16-sized). Ids follow
+    * [[ByteBpe.symbolIds]]' rule: byte value for 2-hex-char bases,
+    * [[ByteBpe.mintedIds]] for minted symbols. */
   private def byteBpeLoadDict(spark: SparkSession, dir: String)
       : DataFrame = {
-    val merges = spark.read.parquet(s"$dir/bytebpe_merges").collect()
-      .map(r => (r.getAs[Int]("round"), r.getAs[String]("p"),
-        r.getAs[String]("q")))
-    val minted: Map[String, Long] = merges.groupBy(m => m._2 + m._3)
-      .map { case (s, ms) => s -> (255L + ms.map(_._1).min) }
+    val minted = ByteBpe.mintedIds(
+      spark.read.parquet(s"$dir/bytebpe_merges").collect()
+        .map(r => (r.getAs[Int]("round"), r.getAs[String]("p"),
+          r.getAs[String]("q"))).toSeq)
     CorpusCache.checkpoint(spark.read.parquet(s"$dir/bytebpe_vocab")
       .select(col("word"), transform(col("syms"), s =>
         when(length(s) === 2, conv(s, 16, 10).cast("long"))

@@ -297,6 +297,44 @@ class CorpusPrepSpec extends AnyFunSuite {
       === CorpusPrep.unigramSegment(docs).collect().toSeq)
   }
 
+  test("unigram trainers past depth 2: rounds 3 and 4 pinned, each unlike round 2") {
+    // order-insensitive pin: row count + md5 of the sorted rendered rows
+    def pin(df: org.apache.spark.sql.DataFrame): (Int, String) = {
+      val rows = df.collect().map(_.mkString("|")).sorted
+      (rows.length, java.security.MessageDigest.getInstance("MD5")
+        .digest(rows.mkString("\n").getBytes("UTF-8"))
+        .map(b => f"${b & 0xff}%02x").mkString)
+    }
+    val fixture = graft.sources.Tables.documents(spark,
+      "/root/testdata/sf0.001")
+    // the floor trainer reaches its fixed point at depth 2 on the
+    // sf0.001 (and sf0.01) fixture — depths 2 to 5 are identical there
+    // — so it is pinned on a hand corpus whose rounds keep
+    // re-estimating usage (depths 2, 3 and 4 all differ)
+    val floorDocs = docsOf(1L -> ("caa caa caa bbccc abccb abccb " +
+      "ab ab ab ab cb cb cb cb baaa baaa baaa baaa"))
+    val cases = Seq(
+      ("floor", floorDocs, CorpusPrep.unigramTrainRounds _),
+      ("em", fixture, CorpusPrep.unigramTrainEmRounds _),
+      ("soft", fixture, CorpusPrep.unigramTrainEmSoftRounds _))
+    val expected = Map(
+      // recorded at the commit before the trainers shared one loop
+      ("floor", 3) -> ((6, "89e4e8024079a99bd6ece2387fd9915c")),
+      ("floor", 4) -> ((6, "d2e303e6dbc1b5aa75cfa3f38171740f")),
+      ("em", 3) -> ((30, "b1f21d39ec2f2fb8e9d96588e92d60f2")),
+      ("em", 4) -> ((30, "54bdf13fc22df110d17780608249faa0")),
+      ("soft", 3) -> ((30, "d0f187626b602f290c69495b88736274")),
+      ("soft", 4) -> ((30, "595362a8a6e57107bb22950ea9c914fd")))
+    for ((name, docs, train) <- cases) {
+      val depth2 = pin(train(docs, 2))
+      for (depth <- Seq(3, 4)) {
+        val got = pin(train(docs, depth))
+        assert(got === expected((name, depth)), s"$name at depth $depth")
+        assert(got._2 !== depth2._2, s"$name at depth $depth equals depth 2")
+      }
+    }
+  }
+
   test("tokenizer comparison: fertility floors, identical word stream on both sides") {
     // tiny corpus: BPE (3 merges) collapses ab and abab to one id
     // each; unigram has no abab piece (freq 1 < floor) -> 1 + 1 + 2
@@ -685,17 +723,27 @@ class CorpusPrepSpec extends AnyFunSuite {
     val docs = docsOf(1L -> "banana bandana banana abba abba cabbage")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_artifact_parts_spec").toString
-    TokenizerArtifact.bpeWrite(docs, dir)
-    TokenizerArtifact.unigramWrite(docs, dir)
-    def partFiles(sub: String): Int =
-      new java.io.File(s"$dir/$sub").listFiles()
-        .count(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-    val vocabFiles = partFiles("bpe_vocab")
-    assert(vocabFiles >= 1 &&
-      vocabFiles <= artifactParts(CorpusPrep.BpeDictCap.toLong))
-    val modelFiles = partFiles("unigram_model")
-    assert(modelFiles === 1) // cap + alphabet bound fits one file
+    try {
+      TokenizerArtifact.bpeWrite(docs, dir)
+      TokenizerArtifact.byteBpeWrite(docs, dir)
+      TokenizerArtifact.unigramWrite(docs, dir)
+      def partFiles(sub: String): Int =
+        new java.io.File(s"$dir/$sub").listFiles()
+          .count(f => f.getName.startsWith("part-") &&
+            f.getName.endsWith(".parquet"))
+      // both merge families share one vocab writer, whose fan-out is
+      // min(defaultParallelism, rows / 10000 + 1): one file for a
+      // one-document dictionary
+      for (sub <- Seq("bpe_vocab", "bytebpe_vocab")) {
+        val vocabFiles = partFiles(sub)
+        assert(vocabFiles >= 1 &&
+          vocabFiles <= artifactParts(CorpusPrep.BpeDictCap.toLong), sub)
+        assert(vocabFiles === 1, sub)
+      }
+      val modelFiles = partFiles("unigram_model")
+      assert(modelFiles === 1) // cap + alphabet bound fits one file
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
   }
 
   test("soft-EM marginals equal exhaustive path-space expectations; trainer round 2 = single soft prune") {
