@@ -34,7 +34,8 @@ import graft.sources.Tables
   *     derive identical symbol streams from multi-byte input with
   *     plain string ops (`hex(encode(word))` both sides).
   *   - Training reuses the deep-trainer discipline
-  *     ([[CorpusPrep.bpeDeepLoop]], made alphabet-generic): ONE
+  *     ([[CorpusPrep.deepMergeLoop]], the merge families' shared
+  *     loop, under a hex-byte count-scored rule): ONE
   *     distributed map-side-combined pre-token count, a ≤ dictCap
   *     collect (loud warning at the cap), then the incremental
   *     delta-count lazy-PQ merge loop at memory speed — the
@@ -68,7 +69,7 @@ import graft.sources.Tables
 object ByteBpe {
 
   /** Merge depth of the GATE (the deep loop handles production depth
-    * the same way — see [[CorpusPrep.bpeDeepLoop]]; 6 rounds mint
+    * the same way — see [[CorpusPrep.deepMergeLoop]]; 6 rounds mint
     * multi-byte merges over the decorated fixture while keeping the
     * oracle's unrolled chain tractable). */
   val ByteBpeRounds = 6
@@ -91,13 +92,14 @@ object ByteBpe {
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
 
   /** Capped dict collect with the loud-cap contract
-    * ([[CorpusPrep.warnIfDictCapped]]). */
+    * ([[CorpusPrep.dictCollect]]). */
   def byteDictCollect(docs: DataFrame,
       dictCap: Int = CorpusPrep.BpeDictCap): Array[(String, Long)] =
-    CorpusPrep.warnIfDictCapped(byteDict(docs)
-      .orderBy(col("wc").desc, col("word")).limit(dictCap)
-      .select(col("word"), col("wc")).collect()
-      .map(r => (r.getString(0), r.getLong(1))), dictCap, "byteDictCollect")
+    CorpusPrep.dictCollect(byteDict(docs), dictCap, "byteDictCollect")
+
+  /** The count-scored merge rule over hex-byte symbols. */
+  private val ByteRule =
+    CorpusPrep.MergeRule(hexSyms, _ + _, likelihoodRatio = false)
 
   /** Deep-trained byte-BPE state: (merge table, dict rows, per-word
     * merged symbol sequences). */
@@ -106,8 +108,8 @@ object ByteBpe {
       : (Seq[(Int, String, String, Long)], Array[(String, Long)],
          Array[Array[String]]) = {
     val dictRows = byteDictCollect(docs, dictCap)
-    val (merges, words) = CorpusPrep.bpeDeepLoop(dictRows, rounds, hexSyms)
-    (merges, dictRows, words)
+    val (merges, words) = CorpusPrep.deepMergeLoop(dictRows, rounds, ByteRule)
+    (CorpusPrep.countMerges(merges), dictRows, words)
   }
 
   /** Symbol → id over a trained merge table: byte value for base

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -322,10 +322,10 @@ object CorpusPrep {
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
       .withColumn("syms", split(col("word"), ""))
 
-  /** Adjacent-pair frequencies over the current symbol dictionary,
-    * reduced to the single argmax pair (count desc, then lexical —
-    * deterministic under ties in both engines). */
-  private def bpeTopPair(dict: DataFrame): DataFrame =
+  /** Adjacent-pair frequencies `(p, q, cnt)` over the current symbol
+    * dictionary — the statistic both merge families' distributed
+    * trainers rank. */
+  private def adjacentPairCounts(dict: DataFrame): DataFrame =
     // the size guard matters: a fully-merged word collapses to ONE
     // symbol, where `sequence(1, 0)` DESCENDS and the element_at
     // probes throw under ANSI — such words simply have no pairs
@@ -338,23 +338,6 @@ object CorpusPrep {
         .as("pr"))
       .groupBy(col("pr.p").as("p"), col("pr.q").as("q"))
       .agg(sum(col("wc")).as("cnt"))
-      .orderBy(col("cnt").desc, col("p"), col("q"))
-      .limit(1)
-
-  /** The current argmax pair, COLLECTED — one row by construction
-    * (`limit 1` over a deterministic total order), the same
-    * bounded-by-contract driver round-trip as a Lloyd centroid pull:
-    * folding it back in as a literal keeps each round's plan ONE
-    * `aggregate`-map layer deep. The previous shape — `crossJoin(
-    * broadcast(top))` with `top` derived from the same dict — embedded
-    * the prior round's plan TWICE per round, so plan size (and
-    * Catalyst analysis time) grew 2^rounds: invisible at the gate's 3
-    * rounds, a hang at exhaustion depth. `None` = no adjacent pairs
-    * remain (every word fully merged).
-    */
-  private def bpeTopPairRow(dict: DataFrame): Option[(String, String, Long)] =
-    bpeTopPair(dict).collect().headOption
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
 
   /** Greedy-leftmost merge of the chosen pair inside every word's
     * symbol array — one `aggregate` fold per word, entirely inside
@@ -372,29 +355,52 @@ object CorpusPrep {
           array(lit(merged))))
         .otherwise(concat(acc, array(x))))
 
-  private def bpeApplyMerge(dict: DataFrame, p: String, q: String): DataFrame =
-    dict.withColumn("syms", symMergeFold(p, q, p + q))
-
-  /** The distributed merge loop: each round collects the argmax pair
-    * and folds it through the dict, stopping early at exhaustion
-    * (every word fully merged). Returns the merged word dictionary —
-    * the trained state the encode-side operators read — and the merge
-    * table `(round, p, q, cnt)`. */
-  private def bpeTrainRounds(docs: DataFrame, rounds: Int)
-      : (DataFrame, Seq[(Int, String, String, Long)]) = {
-    var dict = bpeWordDict(docs)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, Long)]
+  /** The distributed merge loop both merge families' in-lineage
+    * trainers share: each round collects the argmax row of `ranked`
+    * (its first two columns are `p`, `q`) and folds the merge through
+    * the dict, stopping early at exhaustion (every word fully merged).
+    * Returns the merged dict — the trained state the encode-side
+    * operators read — and the round-numbered argmax rows.
+    *
+    * The argmax is COLLECTED — one row by construction (`limit 1` over
+    * a deterministic total order), the same bounded-by-contract driver
+    * round-trip as a Lloyd centroid pull: folding it back in as a
+    * literal keeps each round's plan ONE `aggregate`-map layer deep,
+    * where a `crossJoin(broadcast(top))` with `top` derived from the
+    * same dict would embed the prior round's plan TWICE per round
+    * (plan size and Catalyst analysis time growing 2^rounds, a hang at
+    * exhaustion depth). Every [[WordPieceCheckpointEvery]] rounds the
+    * chained dict materializes, capping plan depth. */
+  private def mergeRoundsLoop(base: DataFrame, rounds: Int,
+      ranked: DataFrame => DataFrame, merged: (String, String) => String)
+      : (DataFrame, Seq[(Int, Row)]) = {
+    var dict = base
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, Row)]
     var exhausted = false
     while (merges.length < rounds && !exhausted) {
-      bpeTopPairRow(dict) match {
+      ranked(dict).limit(1).collect().headOption match {
         case None => exhausted = true
-        case Some((p, q, cnt)) =>
-          merges += ((merges.length + 1, p, q, cnt))
-          dict = bpeApplyMerge(dict, p, q)
+        case Some(top) =>
+          val (p, q) = (top.getString(0), top.getString(1))
+          merges += ((merges.length + 1, top))
+          dict = dict.withColumn("syms", symMergeFold(p, q, merged(p, q)))
+          if (merges.length % WordPieceCheckpointEvery == 0)
+            dict = CorpusCache.checkpoint(dict)
       }
     }
     (dict, merges.toSeq)
+  }
+
+  /** The distributed BPE merge loop: argmax by count desc, then
+    * lexical — deterministic under ties in both engines. Returns the
+    * merged word dictionary and the merge table `(round, p, q, cnt)`. */
+  private def bpeTrainRounds(docs: DataFrame, rounds: Int)
+      : (DataFrame, Seq[(Int, String, String, Long)]) = {
+    val (dict, merges) = mergeRoundsLoop(bpeWordDict(docs), rounds,
+      adjacentPairCounts(_).orderBy(col("cnt").desc, col("p"), col("q")),
+      _ + _)
+    (dict, merges.map { case (r, m) =>
+      (r, m.getString(0), m.getString(1), m.getLong(2)) })
   }
 
   /** Multi-round BPE tokenizer training — the iterative merge loop
@@ -444,56 +450,28 @@ object CorpusPrep {
     */
   val BpeDictCap = 1 << 20
 
-  /** PRODUCTION-DEPTH BPE training — the same merge semantics as
-    * [[bpeMergeRounds]] at vocabulary depth (10⁴–10⁵ merges), laid out
-    * the way a real trainer runs: the corpus-sized work (the word
-    * count) happens ONCE as a distributed map-side-combined shuffle,
-    * the dictionary — vocabulary-bounded state, ≤ [[BpeDictCap]] rows
-    * by contract — is collected, and the merge loop runs driver-side
-    * at memory speed. The per-round distributed loop of
-    * [[bpeMergeRounds]] pays a full Spark job per merge (~0.3 s of
-    * scheduling for microseconds of work once the dict is
-    * vocabulary-sized); 50k merges would be ~4 h of pure job overhead
-    * for state that fits in tens of MB. Collecting bounded state and
-    * iterating locally is the same judgment call as Lloyd's k-means
-    * centroid collect ([[Similarity]]) — the scale-honest shape, not a
-    * shortcut.
-    *
-    * The loop itself is the incremental algorithm production trainers
-    * use (HuggingFace tokenizers' shape): pair counts are maintained
-    * by DELTA updates — a merge touches only the words that contain
-    * the merged pair (tracked by a pair→words index) — and the argmax
-    * comes from a lazy-invalidation priority queue (stale entries
-    * discarded on pop against the live count), so a round costs
-    * O(affected words × their length + log #pairs), not O(dict).
-    * Tie-break matches the distributed loop and the SQL oracle
-    * exactly: count DESC, then lexically smallest (p, q).
-    *
-    * Stops early when no pairs remain (every word fully merged) —
-    * the returned table then has fewer than `rounds` rows.
-    */
   /** The deep trainer's capped dictionary pull — ONE distributed
-    * word-count + a ≤ dictCap-row collect. */
+    * word-count + a ≤ dictCap-row collect ([[dictCollect]]). */
   def bpeDictCollect(docs: DataFrame,
       dictCap: Int = BpeDictCap): Array[(String, Long)] =
-    warnIfDictCapped(bpeWordDict(docs)
-      .orderBy(col("wc").desc, col("word")).limit(dictCap)
-      .select(col("word"), col("wc")).collect()
-      .map(r => (r.getString(0), r.getLong(1))), dictCap, "bpeDictCollect")
+    dictCollect(bpeWordDict(docs), dictCap, "bpeDictCollect")
 
-  /** Loud cap signal for the deep trainers' dictionary collects
-    * (ADVICE r12): truncation at `dictCap` is a legitimate production
-    * knob (train on the top-cap words by (wc desc, word) — the
-    * deterministic order CorpusPrepSpec pins), but the deep GATES are
-    * hash-checked against FULL-dict oracles, so a corpus whose
-    * vocabulary exceeds the cap would silently drift from them (the
-    * deep encode's word spine shrinks with the dict, making the drift
-    * invisible until a hash mismatch). A limit that returns exactly
-    * `dictCap` rows means the cap bound (or the corpus met it exactly
-    * — indistinguishable): say so loudly instead of drifting in
-    * silence. */
-  private[ext] def warnIfDictCapped(rows: Array[(String, Long)],
-      dictCap: Int, what: String): Array[(String, Long)] = {
+  /** The capped `(word, wc)` collect every merge family's deep trainer
+    * runs: the top-`dictCap` words by (wc desc, word), the
+    * deterministic order CorpusPrepSpec pins. Truncation at the cap is
+    * a legitimate production knob, but the deep GATES are hash-checked
+    * against FULL-dict oracles, so a corpus whose vocabulary exceeds
+    * the cap would silently drift from them (the deep encode's word
+    * spine shrinks with the dict, making the drift invisible until a
+    * hash mismatch). A collect that returns exactly `dictCap` rows
+    * means the cap bound (or the corpus met it exactly —
+    * indistinguishable): the caller `what` says so loudly instead of
+    * drifting in silence (ADVICE r12). */
+  private[ext] def dictCollect(dict: DataFrame, dictCap: Int,
+      what: String): Array[(String, Long)] = {
+    val rows = dict.orderBy(col("wc").desc, col("word")).limit(dictCap)
+      .select(col("word"), col("wc")).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
     if (rows.length >= dictCap)
       Console.err.println(s"[$what] collected dictionary FILLED " +
         s"dictCap=$dictCap rows — training proceeds on the top-$dictCap " +
@@ -502,13 +480,31 @@ object CorpusPrep {
     rows
   }
 
+  /** PRODUCTION-DEPTH BPE training — the same merge semantics as
+    * [[bpeMergeRounds]] at vocabulary depth (10⁴–10⁵ merges), laid out
+    * the way a real trainer runs: the corpus-sized work (the word
+    * count) happens ONCE as a distributed map-side-combined shuffle,
+    * the dictionary — vocabulary-bounded state, ≤ [[BpeDictCap]] rows
+    * by contract — is collected, and the merge loop
+    * ([[deepMergeLoop]]) runs driver-side at memory speed. The
+    * per-round distributed loop of [[bpeMergeRounds]] pays a full
+    * Spark job per merge (~0.3 s of scheduling for microseconds of
+    * work once the dict is vocabulary-sized); 50k merges would be ~4 h
+    * of pure job overhead for state that fits in tens of MB.
+    * Collecting bounded state and iterating locally is the same
+    * judgment call as Lloyd's k-means centroid collect
+    * ([[Similarity]]) — the scale-honest shape, not a shortcut.
+    *
+    * Stops early when no pairs remain (every word fully merged) —
+    * the returned table then has fewer than `rounds` rows.
+    */
   def bpeTrainDeep(docs: DataFrame, rounds: Int,
       dictCap: Int = BpeDictCap): DataFrame = {
     val spark = docs.sparkSession
-    val dictRows = bpeDictCollect(docs, dictCap)
-    val (merges, _) = bpeDeepLoop(dictRows, rounds)
     import spark.implicits._
-    merges.toDF("round", "p", "q", "cnt").orderBy(col("round"))
+    countMerges(deepMergeLoop(bpeDictCollect(docs, dictCap), rounds,
+        CharBpe)._1)
+      .toDF("round", "p", "q", "cnt").orderBy(col("round"))
   }
 
   /** The deep trainer's FINAL symbol dictionary (word, wc, merged
@@ -521,118 +517,194 @@ object CorpusPrep {
       dictCap: Int = BpeDictCap): DataFrame = {
     val spark = docs.sparkSession
     val dictRows = bpeDictCollect(docs, dictCap)
-    val (_, words) = bpeDeepLoop(dictRows, rounds)
+    val (_, words) = deepMergeLoop(dictRows, rounds, CharBpe)
     import spark.implicits._
     dictRows.zip(words).toIndexedSeq
       .map { case ((w, wc), syms) => (w, wc, syms.toIndexedSeq) }
       .toDF("word", "wc", "syms")
   }
 
-  /** The driver-side merge loop shared by [[bpeTrainDeep]] (wants the
-    * merge table) and [[bpeTrainDeepDict]] (wants the final words
-    * state). */
-  /** `init` is the word → initial-symbol-sequence decomposition:
-    * per-character for the char-level trainers (default), UTF-8
-    * hex-byte pairs for [[ByteBpe]] — the merge/argmax machinery is
-    * alphabet-agnostic (symbols are opaque strings, merge = concat). */
-  private[ext] def bpeDeepLoop(dictRows: Array[(String, Long)], rounds: Int,
-      init: String => Array[String] = _.split("").filter(_.nonEmpty))
-      : (Seq[(Int, String, String, Long)], Array[Array[String]]) = {
-    val words: Array[Array[String]] = dictRows.map(r => init(r._1))
-    val wcs: Array[Long] = dictRows.map(_._2)
+  /** One merge family's rule for [[deepMergeLoop]]: `init` decomposes
+    * a word into its initial symbols (characters, UTF-8 hex-byte pairs
+    * for [[ByteBpe]], `##`-marked characters for WordPiece), `merged`
+    * spells the symbol a merge of (p, q) mints, and
+    * `likelihoodRatio` picks the argmax score: the pair count (BPE) or
+    * WordPiece's ⌊cnt·SCALE / (cp·cq)⌋, which reads the symbol counts.
+    * Symbols are opaque strings, so the loop is alphabet-agnostic. */
+  private[ext] final case class MergeRule(init: String => Array[String],
+      merged: (String, String) => String, likelihoodRatio: Boolean)
 
+  private def chars(word: String): Array[String] =
+    word.split("").filter(_.nonEmpty)
+
+  private[ext] val CharBpe = MergeRule(chars, _ + _, likelihoodRatio = false)
+
+  private val WordPieceRule = MergeRule(
+    w => chars(w).zipWithIndex
+      .map { case (c, i) => if (i == 0) c else "##" + c },
+    wpMerged, likelihoodRatio = true)
+
+  /** The count-scored view of [[deepMergeLoop]]'s merges: `(round, p,
+    * q, cnt)`. */
+  private[ext] def countMerges(
+      merges: Seq[(Int, String, String, Long, Long, Long, Long)])
+      : Seq[(Int, String, String, Long)] =
+    merges.map(m => (m._1, m._2, m._3, m._4))
+
+  /** The driver-side merge loop every merge family's deep trainer
+    * shares — the incremental algorithm production trainers use
+    * (HuggingFace tokenizers' shape): pair counts are maintained by
+    * DELTA updates — a merge touches only the words that contain the
+    * merged pair (tracked by a pair→words index) — and the argmax comes
+    * from a lazy-invalidation priority queue (an entry is discarded on
+    * pop unless it equals the pair's LIVE score, so a stale entry can
+    * only be discarded, never selected), so a round costs
+    * O(affected words × their length + log #pairs), not O(dict).
+    * Tie-break matches the distributed loop and the SQL oracles
+    * exactly: score DESC, then lexically smallest (p, q) (ASCII
+    * symbols, so Java and UTF8 binary order agree).
+    *
+    * The one structural delta of WordPiece's likelihood-ratio score:
+    * it depends on the SINGLE-symbol counts, and a merge changes
+    * cp/cq for EVERY live pair touching p, q or the minted symbol — not
+    * just the pairs whose own count moved. So under that rule the loop
+    * keeps symbol counts and a symbol→pairs index, and a round
+    * re-prices those pairs too before the next pop: O(pairs adjacent
+    * to p, q, m), bounded by the live-pair degree of three symbols, not
+    * by the dict. Count-scored rules skip both. Ratio scores floor in
+    * BigInt — the driver twin of the engine's DECIMAL(38,0) `div` and
+    * the oracle's HUGEINT `//`: all three floor the same rational, so
+    * the argmax order is identical by construction.
+    *
+    * Returns the merges `(round, p, q, cnt, cp, cq, score)` (cp = cq =
+    * 0 and score = cnt under a count-scored rule) and every word's
+    * final symbols. Stops early when no pairs remain. */
+  private[ext] def deepMergeLoop(dictRows: Array[(String, Long)],
+      rounds: Int, rule: MergeRule)
+      : (Seq[(Int, String, String, Long, Long, Long, Long)],
+         Array[Array[String]]) = {
     import scala.collection.mutable
-    val counts = mutable.HashMap.empty[(String, String), Long]
-    val where = mutable.HashMap.empty[(String, String), mutable.Set[Int]]
-    // pop order: highest count first, then lexically smallest (p, q)
+    type Pair = (String, String)
+    val ratio = rule.likelihoodRatio
+    val words: Array[Array[String]] = dictRows.map(r => rule.init(r._1))
+    val wcs: Array[Long] = dictRows.map(_._2)
+    val pairCounts = mutable.HashMap.empty[Pair, Long]
+    val where = mutable.HashMap.empty[Pair, mutable.Set[Int]]
+    val symCounts = mutable.HashMap.empty[String, Long]
+    val pairsBySym = mutable.HashMap.empty[String, mutable.Set[Pair]]
+    // pairs whose live score moved since they were last enqueued
+    val dirty = mutable.Set.empty[Pair]
+    // pop order: highest score first, then lexically smallest (p, q)
     val pq = mutable.PriorityQueue.empty[(Long, String, String)](
       Ordering.fromLessThan[(Long, String, String)] { (a, b) =>
         if (a._1 != b._1) a._1 < b._1
         else if (a._2 != b._2) a._2 > b._2
         else a._3 > b._3
       })
-    def bump(p: (String, String), d: Long, w: Int): Unit = {
-      val c = counts.getOrElse(p, 0L) + d
-      if (c <= 0L) {
-        counts.remove(p)
-        // a zero GLOBAL count means the pair occurs in no word —
-        // its (possibly stale) index entry can go too
-        where.remove(p)
-      } else {
-        counts(p) = c
-        // lazy-invalidation invariant: the LIVE count value must
-        // always be present in the queue, or the exact-match pop
-        // check discards every stale entry and the pair becomes
-        // permanently unselectable (the decremented-argmax path:
-        // a merge destroys some occurrences of a pair that survives
-        // elsewhere) — so enqueue on every live update, not only on
-        // positive deltas
-        pq.enqueue((c, p._1, p._2))
-      }
-      if (d > 0) where.getOrElseUpdate(p, mutable.Set.empty) += w
-      ()
+    val scale = BigInt(WordPieceScoreScale)
+    // exact flooring in BigInt: cp·cq overflows Long past ~10⁹ counts,
+    // the quotient never does (cnt ≤ min(cp, cq) ⇒ score ≤ SCALE)
+    def liveScore(p: Pair): Option[Long] = pairCounts.get(p).map { cnt =>
+      if (!ratio) cnt
+      else ((BigInt(cnt) * scale) /
+        (BigInt(symCounts(p._1)) * BigInt(symCounts(p._2)))).toLong
     }
-    for (w <- words.indices; i <- 0 until words(w).length - 1)
-      bump((words(w)(i), words(w)(i + 1)), wcs(w), w)
-
-    def mergeGreedy(syms: Array[String], p: String, q: String): Array[String] = {
-      val out = mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < syms.length) {
-        if (i + 1 < syms.length && syms(i) == p && syms(i + 1) == q) {
-          out += p + q; i += 2
-        } else { out += syms(i); i += 1 }
-      }
-      out.toArray
+    def pairsOf(syms: Array[String]): Iterator[Pair] =
+      syms.iterator.zip(syms.iterator.drop(1))
+    def dropPair(p: Pair): Unit = {
+      pairCounts.remove(p); where.remove(p); dirty -= p
+      if (ratio) for (s <- Seq(p._1, p._2)) pairsBySym.get(s).foreach(_ -= p)
     }
+    def addWord(w: Int): Unit = {
+      val c = wcs(w)
+      for (p <- pairsOf(words(w))) {
+        pairCounts(p) = pairCounts.getOrElse(p, 0L) + c
+        where.getOrElseUpdate(p, mutable.Set.empty) += w
+        dirty += p
+        if (ratio) for (s <- Seq(p._1, p._2))
+          pairsBySym.getOrElseUpdate(s, mutable.Set.empty) += p
+      }
+      if (ratio)
+        for (s <- words(w)) symCounts(s) = symCounts.getOrElse(s, 0L) + c
+    }
+    def removeWord(w: Int): Unit = {
+      val c = wcs(w)
+      for (p <- pairsOf(words(w))) {
+        val nc = pairCounts(p) - c
+        if (nc <= 0L) dropPair(p) else { pairCounts(p) = nc; dirty += p }
+      }
+      if (ratio) for (s <- words(w)) symCounts(s) -= c
+    }
+    // lazy-invalidation invariant: every pair's LIVE score must be in
+    // the queue, or the exact-match pop check discards every stale
+    // entry and the pair becomes permanently unselectable (the
+    // decremented-argmax path: a merge destroys some occurrences of a
+    // pair that survives elsewhere) — so every moved pair re-enqueues
+    def enqueueDirty(): Unit = {
+      for (p <- dirty; s <- liveScore(p)) pq.enqueue((s, p._1, p._2))
+      dirty.clear()
+    }
+    words.indices.foreach(addWord)
+    enqueueDirty()
 
-    val merges = mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var r = 1
+    val merges = mutable.ArrayBuffer
+      .empty[(Int, String, String, Long, Long, Long, Long)]
     var exhausted = false
-    while (r <= rounds && !exhausted) {
-      // lazy invalidation: discard queue entries whose count is stale
+    while (merges.length < rounds && !exhausted) {
       var top: Option[(Long, String, String)] = None
       while (top.isEmpty && pq.nonEmpty) {
-        val (c, p, q) = pq.dequeue()
-        if (counts.get((p, q)).contains(c)) top = Some((c, p, q))
+        val e = pq.dequeue()
+        if (liveScore((e._2, e._3)).contains(e._1)) top = Some(e)
       }
       top match {
         case None => exhausted = true
-        case Some((cnt, p, q)) =>
-          merges += ((r, p, q, cnt))
-          val touched = where.getOrElse((p, q), mutable.Set.empty).toArray
-          for (w <- touched) {
+        case Some((score, p, q)) =>
+          val pr = (p, q)
+          merges += ((merges.length + 1, p, q, pairCounts(pr),
+            symCounts.getOrElse(p, 0L), symCounts.getOrElse(q, 0L), score))
+          val m = rule.merged(p, q)
+          for (w <- where.getOrElse(pr, mutable.Set.empty).toArray) {
             val old = words(w)
             // a word in the index may be stale (merged away earlier);
             // only re-derive words that still contain the pair
-            val has = (0 until old.length - 1)
-              .exists(i => old(i) == p && old(i + 1) == q)
-            if (has) {
-              for (i <- 0 until old.length - 1)
-                bump((old(i), old(i + 1)), -wcs(w), w)
-              val nw = mergeGreedy(old, p, q)
-              words(w) = nw
-              // compact the pair→words index as we go: pairs the
-              // merge destroyed in THIS word must forget it, or the
-              // index only ever grows and every later merge rescans
-              // long-stale words (memory + wasted rescans at 10⁴⁺
-              // merge depth over a ~10⁶-word dict)
-              val kept = (0 until nw.length - 1)
-                .map(i => (nw(i), nw(i + 1))).toSet
-              for (i <- 0 until old.length - 1) {
-                val op = (old(i), old(i + 1))
-                if (!kept.contains(op)) where.get(op).foreach(_ -= w)
-              }
-              for (i <- 0 until nw.length - 1)
-                bump((nw(i), nw(i + 1)), wcs(w), w)
+            if (pairsOf(old).contains(pr)) {
+              removeWord(w)
+              words(w) = mergeGreedy(old, p, q, m)
+              // compact the pair→words index as we go: pairs the merge
+              // destroyed in THIS word must forget it, or the index only
+              // ever grows and every later merge rescans long-stale
+              // words (memory + wasted rescans at 10⁴⁺ merge depth over
+              // a ~10⁶-word dict)
+              val kept = pairsOf(words(w)).toSet
+              for (op <- pairsOf(old) if !kept(op))
+                where.get(op).foreach(_ -= w)
+              addWord(w)
             }
           }
-          where.remove((p, q))
-          counts.remove((p, q))
-          r += 1
+          dropPair(pr)
+          // denominator dirt: every live pair adjacent to p, q or the
+          // minted symbol re-prices even if its own count never moved
+          if (ratio)
+            for (s <- Seq(p, q, m); dp <- pairsBySym.getOrElse(s, Nil))
+              dirty += dp
+          enqueueDirty()
       }
     }
     (merges.toSeq, words)
+  }
+
+  /** `syms` with every non-overlapping (p, q), leftmost first, replaced
+    * by `m` — the driver twin of [[symMergeFold]]. */
+  private def mergeGreedy(syms: Array[String], p: String, q: String,
+      m: String): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == p && syms(i + 1) == q) {
+        out += m; i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.toArray
   }
 
   /** Encode-side vocabulary cap: top-[[BpeVocabCap]] words by corpus
@@ -1916,34 +1988,33 @@ object CorpusPrep {
   val WordPieceScoreScale = "1000000000000000000" // 10^18
 
   /** The WordPiece word dictionary: [[bpeWordDict]]'s filter plus the
-    * word-length cap, symbols marked BERT-style (first char plain,
-    * continuations `##`-prefixed). */
+    * word-length cap, symbols marked BERT-style ([[wordPieceDictOf]]). */
   def wordPieceDict(docs: DataFrame): DataFrame =
-    docs.select(explode(TextAnalysis.tokens(col("text"))).as("word"))
+    wordPieceDictOf(docs
+      .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
       .filter(col("word").rlike("^[a-z0-9]+$") && length(col("word")) >= 2 &&
-        length(col("word")) <= WordPieceMaxWordLen)
-      .groupBy(col("word")).agg(count(lit(1)).as("wc"))
+        length(col("word")) <= WordPieceMaxWordLen))
+
+  /** A token stream `word` counted to a (word, wc, syms) WordPiece dict,
+    * symbols marked BERT-style: first char plain, continuations
+    * `##`-prefixed. */
+  private def wordPieceDictOf(tokens: DataFrame): DataFrame =
+    tokens.groupBy(col("word")).agg(count(lit(1)).as("wc"))
       .withColumn("syms",
         transform(split(col("word"), ""),
           (c, i) => when(i === 0, c).otherwise(concat(lit("##"), c))))
 
   /** One WordPiece training round's statistics: adjacent-pair counts
     * joined with both symbols' occurrence counts and the exact
-    * integer score key — the frame the argmax row is drawn from. */
+    * integer score key, ranked by the argmax order (score desc, then
+    * lexical). Singles are BROADCAST BY STRUCTURE: the symbol-type
+    * set grows by ONE per round, so it is ≤ alphabet + rounds rows at
+    * any corpus size. */
   private def wordPieceRoundStats(dict: DataFrame): DataFrame = {
-    val pairs = dict.select(col("wc"), explode(
-        when(size(col("syms")) >= 2,
-          transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("p"),
-              element_at(col("syms"), i + 1).as("q"))))
-          .otherwise(array().cast("array<struct<p:string,q:string>>")))
-        .as("pr"))
-      .groupBy(col("pr.p").as("p"), col("pr.q").as("q"))
-      .agg(sum(col("wc")).as("cnt"))
     val singles = dict
       .select(col("wc"), explode(col("syms")).as("sym"))
       .groupBy(col("sym")).agg(sum(col("wc")).as("scnt"))
-    pairs
+    adjacentPairCounts(dict)
       .join(broadcast(singles.select(col("sym").as("p"),
         col("scnt").as("cp"))), "p")
       .join(broadcast(singles.select(col("sym").as("q"),
@@ -1953,20 +2024,8 @@ object CorpusPrep {
           "(CAST(cp AS DECIMAL(38,0)) * CAST(cq AS DECIMAL(38,0)))"))
       .select(col("p"), col("q"), col("cnt"), col("cp"), col("cq"),
         col("score_key"))
+      .orderBy(col("score_key").desc, col("p"), col("q"))
   }
-
-  /** The round's argmax, collected — the [[bpeTopPairRow]] contract
-    * (1 row by a deterministic total order: score desc, then
-    * lexical). Singles are BROADCAST BY STRUCTURE: the symbol-type
-    * set grows by ONE per round, so it is ≤ alphabet + rounds rows at
-    * any corpus size. */
-  private def wordPieceTopRow(dict: DataFrame)
-      : Option[(String, String, Long, Long, Long, Long)] =
-    wordPieceRoundStats(dict)
-      .orderBy(col("score_key").desc, col("p"), col("q")).limit(1)
-      .collect().headOption
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)))
 
   /** The continuation marker stripped off the RIGHT side of a merge:
     * `a ⧺ ##b → ab`, `##b ⧺ ##c → ##bc`. */
@@ -1992,47 +2051,32 @@ object CorpusPrep {
     finally { base.unpersist(); () }
   }
 
+  /** Lineage-truncation cadence for the distributed merge loop
+    * ([[mergeRoundsLoop]]): every this-many rounds the chained dict
+    * materializes (`localCheckpoint`), capping plan depth — without it
+    * the per-round `aggregate` folds nest until Catalyst's
+    * executor-side tree transforms overflow the stack (measured: ~18
+    * chained WordPiece rounds kill the executor; the `##` marking makes
+    * the WordPiece loop exhaust deeper than its BPE twin on like
+    * corpora). The standard iterative-Spark discipline (ALS/GraphX
+    * checkpoint cadence); production-depth training uses
+    * [[deepMergeLoop]] regardless. */
+  val WordPieceCheckpointEvery = 8
+
   /** The loop body over an ALREADY-MATERIALIZED base dict (persist or
     * localCheckpoint — the caller owns the lifecycle), split out so
     * [[wordPieceEncodeWords]] can train AND extract the word list
     * from ONE materialized base instead of re-deriving the corpus
     * dict per consumer (ADVICE round 11). */
-  /** Lineage-truncation cadence for the distributed WordPiece loop:
-    * every this-many rounds the chained dict materializes
-    * (`localCheckpoint`), capping plan depth — without it the
-    * per-round `aggregate` folds nest until Catalyst's executor-side
-    * tree transforms overflow the stack (measured: ~18 chained
-    * WordPiece rounds kill the executor; the `##` marking makes this
-    * loop exhaust deeper than its BPE twin on like corpora). The
-    * standard iterative-Spark discipline (ALS/GraphX checkpoint
-    * cadence); production-depth training uses [[wordPieceDeepLoop]]
-    * regardless. */
-  val WordPieceCheckpointEvery = 8
-
   private def wordPieceTrainWith(base: DataFrame, rounds: Int)
       : (Seq[(Int, String, String, Long, Long, Long, Long)],
          Seq[String]) = {
-    {
-      var dict: DataFrame = base
-      val merges = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, String, String, Long, Long, Long, Long)]
-      var r = 1
-      var exhausted = false
-      while (r <= rounds && !exhausted) {
-        wordPieceTopRow(dict) match {
-          case None => exhausted = true
-          case Some((p, q, cnt, cp, cq, key)) =>
-            merges += ((r, p, q, cnt, cp, cq, key))
-            dict = dict.withColumn("syms", symMergeFold(p, q, wpMerged(p, q)))
-            if (r % WordPieceCheckpointEvery == 0)
-              dict = CorpusCache.checkpoint(dict)
-            r += 1
-        }
-      }
-      val vocab = dict.select(explode(col("syms")).as("piece"))
-        .distinct().collect().map(_.getString(0)).toSeq
-      (merges.toSeq, vocab)
-    }
+    val (dict, merges) =
+      mergeRoundsLoop(base, rounds, wordPieceRoundStats, wpMerged)
+    val vocab = dict.select(explode(col("syms")).as("piece"))
+      .distinct().collect().map(_.getString(0)).toSeq
+    (merges.map { case (r, m) => (r, m.getString(0), m.getString(1),
+      m.getLong(2), m.getLong(3), m.getLong(4), m.getLong(5)) }, vocab)
   }
 
   /** WordPiece training — the merge table (round, p, q, cnt, cp, cq,
@@ -2170,190 +2214,24 @@ object CorpusPrep {
   }
 
   /** The WordPiece deep trainer's capped dictionary pull —
-    * [[bpeDictCollect]]'s twin over the WordPiece word filter (ONE
-    * distributed word-count + a ≤ dictCap-row collect; the `##`
-    * symbol marking is re-derived driver-side from the word itself,
-    * so only (word, wc) crosses the wire). Shares [[BpeDictCap]]: the
-    * same memory-resident-state contract, the same cap discipline. */
+    * [[bpeDictCollect]]'s twin over the WordPiece word filter (the
+    * `##` symbol marking is re-derived driver-side from the word
+    * itself, so only (word, wc) crosses the wire). Shares
+    * [[BpeDictCap]]: the same memory-resident-state contract, the same
+    * cap discipline. */
   def wordPieceDictCollect(docs: DataFrame,
       dictCap: Int = BpeDictCap): Array[(String, Long)] =
-    warnIfDictCapped(wordPieceDict(docs)
-      .orderBy(col("wc").desc, col("word")).limit(dictCap)
-      .select(col("word"), col("wc")).collect()
-      .map(r => (r.getString(0), r.getLong(1))), dictCap,
-      "wordPieceDictCollect")
+    dictCollect(wordPieceDict(docs), dictCap, "wordPieceDictCollect")
 
-  /** PRODUCTION-DEPTH WordPiece training — [[bpeDeepLoop]]'s
-    * discipline (collect the vocabulary-bounded dict once, merge at
-    * driver memory speed) ported to the likelihood-ratio argmax
-    * (VERDICT round 11 #1). The per-round distributed loop
+  /** PRODUCTION-DEPTH WordPiece training on an ALREADY-COLLECTED
+    * dictionary: [[deepMergeLoop]] under the likelihood-ratio rule, the
+    * merge table alone. The per-round distributed loop
     * ([[wordPieceMergeRounds]]) pays a full Spark job per merge; a
     * production BERT vocabulary needs ~3·10⁴ rounds, which only the
-    * collected-dict loop can price in minutes.
-    *
-    * The one structural delta from the BPE loop: WordPiece's score
-    * `⌊cnt·SCALE / (cp·cq)⌋` depends on the SINGLE-symbol counts, and
-    * a merge changes cp/cq/c(pq′) for EVERY live pair touching p, q
-    * or the minted symbol — not just the pairs whose own count moved.
-    * So alongside the pair→words index the loop keeps a symbol→pairs
-    * index, and a round re-prices (re-enqueues at the live score)
-    * the union of count-dirty pairs and denominator-dirty pairs
-    * before the next pop. The lazy-invalidation pop check recomputes
-    * the LIVE score (never trusts the stored one), so a stale entry
-    * can only be discarded, never selected. Scores floor in BigInt —
-    * the driver twin of the engine's DECIMAL(38,0) `div` and the
-    * oracle's HUGEINT `//`: all three floor the same rational, so the
-    * argmax order is identical by construction.
-    *
-    * Cost shape: a round pays O(touched words × length) for the count
-    * deltas plus O(pairs adjacent to p, q, m) for the re-pricing —
-    * the second term is WordPiece's intrinsic extra over BPE (the
-    * denominator coupling), bounded by the live-pair degree of three
-    * symbols, not by the dict. Tie-break matches the distributed loop
-    * and the SQL oracle exactly: score DESC, then lexically smallest
-    * (p, q) (ASCII symbols, so Java and UTF8 binary order agree).
-    * Stops early when no pairs remain.
-    */
-  private[ext] def wordPieceDeepLoop(dictRows: Array[(String, Long)],
-      rounds: Int)
-      : (Seq[(Int, String, String, Long, Long, Long, Long)],
-         Array[Array[String]]) = {
-    val scale = BigInt(WordPieceScoreScale)
-    val words: Array[Array[String]] = dictRows.map { case (w, _) =>
-      w.split("").filter(_.nonEmpty).zipWithIndex
-        .map { case (c, i) => if (i == 0) c else "##" + c }
-    }
-    val wcs: Array[Long] = dictRows.map(_._2)
-
-    import scala.collection.mutable
-    val pairCounts = mutable.HashMap.empty[(String, String), Long]
-    val symCounts = mutable.HashMap.empty[String, Long]
-    val where = mutable.HashMap.empty[(String, String), mutable.Set[Int]]
-    val pairsBySym =
-      mutable.HashMap.empty[String, mutable.Set[(String, String)]]
-    // pop order: highest score first, then lexically smallest (p, q)
-    val pq = mutable.PriorityQueue.empty[(Long, String, String)](
-      Ordering.fromLessThan[(Long, String, String)] { (a, b) =>
-        if (a._1 != b._1) a._1 < b._1
-        else if (a._2 != b._2) a._2 > b._2
-        else a._3 > b._3
-      })
-    // exact flooring in BigInt: cp·cq overflows Long past ~10⁹ counts,
-    // the quotient never does (cnt ≤ min(cp, cq) ⇒ score ≤ SCALE)
-    def liveScore(p: (String, String)): Option[Long] =
-      pairCounts.get(p).map { cnt =>
-        ((BigInt(cnt) * scale) /
-          (BigInt(symCounts(p._1)) * BigInt(symCounts(p._2)))).toLong
-      }
-    def indexPair(p: (String, String)): Unit = {
-      pairsBySym.getOrElseUpdate(p._1, mutable.Set.empty) += p
-      pairsBySym.getOrElseUpdate(p._2, mutable.Set.empty) += p
-      ()
-    }
-    def dropPairIndex(p: (String, String)): Unit = {
-      pairsBySym.get(p._1).foreach(_ -= p)
-      pairsBySym.get(p._2).foreach(_ -= p)
-    }
-
-    for (w <- words.indices) {
-      val ws = words(w); val c = wcs(w)
-      for (s <- ws) symCounts(s) = symCounts.getOrElse(s, 0L) + c
-      for (i <- 0 until ws.length - 1) {
-        val p = (ws(i), ws(i + 1))
-        pairCounts(p) = pairCounts.getOrElse(p, 0L) + c
-        where.getOrElseUpdate(p, mutable.Set.empty) += w
-        indexPair(p)
-      }
-    }
-    for (p <- pairCounts.keys)
-      liveScore(p).foreach(s => pq.enqueue((s, p._1, p._2)))
-
-    def mergeGreedy(syms: Array[String], p: String, q: String,
-        m: String): Array[String] = {
-      val out = mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < syms.length) {
-        if (i + 1 < syms.length && syms(i) == p && syms(i + 1) == q) {
-          out += m; i += 2
-        } else { out += syms(i); i += 1 }
-      }
-      out.toArray
-    }
-
-    val merges = mutable.ArrayBuffer
-      .empty[(Int, String, String, Long, Long, Long, Long)]
-    val dirty = mutable.Set.empty[(String, String)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      // lazy invalidation against the LIVE score (stored scores go
-      // stale through the denominator as well as the count)
-      var top: Option[(Long, String, String)] = None
-      while (top.isEmpty && pq.nonEmpty) {
-        val (k, p, q) = pq.dequeue()
-        if (liveScore((p, q)).contains(k)) top = Some((k, p, q))
-      }
-      top match {
-        case None => exhausted = true
-        case Some((key, p, q)) =>
-          val pr = (p, q)
-          merges += ((r, p, q, pairCounts(pr), symCounts(p), symCounts(q),
-            key))
-          val m = wpMerged(p, q)
-          dirty.clear()
-          val touched = where.getOrElse(pr, mutable.Set.empty).toArray
-          for (w <- touched) {
-            val old = words(w)
-            val has = (0 until old.length - 1)
-              .exists(i => old(i) == p && old(i + 1) == q)
-            if (has) {
-              val c = wcs(w)
-              for (i <- 0 until old.length - 1) {
-                val op = (old(i), old(i + 1))
-                val nc = pairCounts(op) - c
-                if (nc <= 0L) {
-                  pairCounts.remove(op); where.remove(op)
-                  dropPairIndex(op); dirty -= op
-                } else { pairCounts(op) = nc; dirty += op }
-              }
-              for (s <- old) symCounts(s) = symCounts(s) - c
-              val nw = mergeGreedy(old, p, q, m)
-              words(w) = nw
-              for (s <- nw) symCounts(s) = symCounts.getOrElse(s, 0L) + c
-              val kept = (0 until nw.length - 1)
-                .map(i => (nw(i), nw(i + 1))).toSet
-              for (i <- 0 until old.length - 1) {
-                val op = (old(i), old(i + 1))
-                if (!kept.contains(op)) where.get(op).foreach(_ -= w)
-              }
-              for (i <- 0 until nw.length - 1) {
-                val np = (nw(i), nw(i + 1))
-                pairCounts(np) = pairCounts.getOrElse(np, 0L) + c
-                where.getOrElseUpdate(np, mutable.Set.empty) += w
-                indexPair(np); dirty += np
-              }
-            }
-          }
-          pairCounts.remove(pr); where.remove(pr)
-          dropPairIndex(pr); dirty -= pr
-          // denominator dirt: every live pair adjacent to p, q or the
-          // minted symbol re-prices even if its own count never moved
-          for (s <- Seq(p, q, m);
-               dp <- pairsBySym.getOrElse(s, mutable.Set.empty))
-            dirty += dp
-          for (dp <- dirty; sc <- liveScore(dp))
-            pq.enqueue((sc, dp._1, dp._2))
-          r += 1
-      }
-    }
-    (merges.toSeq, words)
-  }
-
-  /** The deep merge loop on an ALREADY-COLLECTED dictionary: the
-    * merge table alone, without the distributed dictionary pull. */
+    * collected-dict loop can price in minutes. */
   def wordPieceDeepMerges(dictRows: Array[(String, Long)], rounds: Int)
       : Seq[(Int, String, String, Long, Long, Long, Long)] =
-    wordPieceDeepLoop(dictRows, rounds)._1
+    deepMergeLoop(dictRows, rounds, WordPieceRule)._1
 
   /** Per-DOCUMENT WordPiece encode, FIXTURE-CHARSET CONTRAST ARM
     * (VERDICT r13 #3 resolution): this v1 surface keeps the
@@ -2522,12 +2400,8 @@ object CorpusPrep {
     * 2-char floor), symbols marked BERT-style. Over-long tokens never
     * enter the dict: they encode as whole-word `[UNK]` downstream. */
   def wordPieceDictBert(docs: DataFrame): DataFrame =
-    docs.select(explode(bertTokens(col("text"))).as("word"))
-      .filter(length(col("word")).between(1, WordPieceMaxWordLen))
-      .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-      .withColumn("syms",
-        transform(split(col("word"), ""),
-          (c, i) => when(i === 0, c).otherwise(concat(lit("##"), c))))
+    wordPieceDictOf(docs.select(explode(bertTokens(col("text"))).as("word"))
+      .filter(length(col("word")).between(1, WordPieceMaxWordLen)))
 
   /** Per-document WordPiece encode over BERT pre-tokenization — the
     * production-charset twin of [[wordPieceEncodeDocs]] (whose
@@ -2565,15 +2439,17 @@ object CorpusPrep {
     * bind-on-fixture discipline as [[BpeVocabCap]]. */
   val WordPieceVocabCap = 32
 
-  /** The trained inventory under a vocabulary cap: pieces ranked by
-    * occurrence weight over the FINAL dict (Σ wc per symbol
-    * occurrence), deterministic tie-break (weight DESC, piece) —
+  /** The deep-trained inventory of a collected dict under a vocabulary
+    * cap: [[deepMergeLoop]] under the likelihood-ratio rule, then
+    * pieces ranked by occurrence weight over the FINAL dict (Σ wc per
+    * symbol occurrence), deterministic tie-break (weight DESC, piece) —
     * derivable by both engines from the trained state alone. */
-  private[ext] def wordPieceVocabOf(wcs: Array[Long],
-      words: Array[Array[String]], cap: Int): Seq[String] = {
+  private[ext] def wordPieceVocabOf(dictRows: Array[(String, Long)],
+      rounds: Int, cap: Int): Seq[String] = {
+    val (_, words) = deepMergeLoop(dictRows, rounds, WordPieceRule)
     val usage = scala.collection.mutable.HashMap.empty[String, Long]
     for (i <- words.indices; s <- words(i))
-      usage(s) = usage.getOrElse(s, 0L) + wcs(i)
+      usage(s) = usage.getOrElse(s, 0L) + dictRows(i)._2
     usage.toSeq.sortBy { case (p, u) => (-u, p) }.take(cap).map(_._1)
   }
 
@@ -2586,7 +2462,7 @@ object CorpusPrep {
       dictCap: Int = BpeDictCap): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    wordPieceDeepLoop(wordPieceDictCollect(docs, dictCap), rounds)._1
+    wordPieceDeepMerges(wordPieceDictCollect(docs, dictCap), rounds)
       .toDF("round", "p", "q", "cnt", "cp", "cq", "score_key")
       .orderBy(col("round"))
   }
@@ -2601,10 +2477,8 @@ object CorpusPrep {
     val spark = docs.sparkSession
     import spark.implicits._
     val dictRows = wordPieceDictCollect(docs, dictCap)
-    val (_, words) = wordPieceDeepLoop(dictRows, rounds)
-    val vocab = words.iterator.flatten.toSet.toSeq
     wordPieceEncodeWith(dictRows.toSeq.toDF("word", "wc"),
-      vocab.toDF("piece"))
+      wordPieceVocabOf(dictRows, rounds, Int.MaxValue).toDF("piece"))
   }
 
   // ------------------------------------------------------------ queries

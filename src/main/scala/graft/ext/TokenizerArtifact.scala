@@ -18,7 +18,7 @@ import graft.sources.Tables
   * The artifact layout is plain parquet under a directory, so the
   * "format" is the engine's own table format — no bespoke
   * serialization, readable by any engine (the DuckDB oracle could
-  * read it directly). Seven tables over four families:
+  * read it directly). Six tables over four families:
   *
   *   <dir>/bpe_merges        (round, p, q, cnt) — the learned merge
   *                           table, the canonical BPE artifact
@@ -29,7 +29,6 @@ import graft.sources.Tables
   *                           hex-pair merges
   *   <dir>/bytebpe_vocab     (word, wc, syms)   — the merged
   *                           pre-token dictionary
-  *   <dir>/wordpiece_merges  (round, p, q, cnt, cp, cq, score_key)
   *   <dir>/wordpiece_vocab   (piece)            — the piece inventory
   *                           the greedy encoder probes (plain =
   *                           word-initial, `##` = continuation)
@@ -77,6 +76,13 @@ object TokenizerArtifact {
     math.max(1L, (cap + ArtifactRowsPerFile - 1) / ArtifactRowsPerFile)
       .toInt
 
+  /** The contract-bounded table writer: ≤ `cap` rows by a collect
+    * contract, fanned out to [[artifactParts]]`(cap)` files. */
+  private def writeBounded(table: DataFrame, cap: Long, path: String)
+      : Unit =
+    table.repartition(artifactParts(cap)).write.mode("overwrite")
+      .parquet(path)
+
   /** Train (deep loop — the production-depth trainer) and persist
     * both BPE artifacts: ONE distributed word count + capped collect,
     * one in-memory merge loop, two vocabulary-bounded writes
@@ -84,9 +90,10 @@ object TokenizerArtifact {
   def bpeWrite(docs: DataFrame, dir: String,
       rounds: Int = CorpusPrep.BpeMergeRoundsN): Unit = {
     val dictRows = CorpusPrep.bpeDictCollect(docs)
-    val (merges, words) = CorpusPrep.bpeDeepLoop(dictRows, rounds)
-    writeMergeArtifact(docs.sparkSession, s"$dir/bpe", rounds, merges,
-      dictRows, words)
+    val (merges, words) =
+      CorpusPrep.deepMergeLoop(dictRows, rounds, CorpusPrep.CharBpe)
+    writeMergeArtifact(docs.sparkSession, s"$dir/bpe", rounds,
+      CorpusPrep.countMerges(merges), dictRows, words)
   }
 
   /** The merge-family artifact writer (char- and byte-level BPE):
@@ -97,9 +104,8 @@ object TokenizerArtifact {
       rounds: Int, merges: Seq[(Int, String, String, Long)],
       dictRows: Array[(String, Long)], words: Array[Array[String]]): Unit = {
     import spark.implicits._
-    merges.toDF("round", "p", "q", "cnt")
-      .repartition(artifactParts(rounds.toLong))
-      .write.mode("overwrite").parquet(s"${prefix}_merges")
+    writeBounded(merges.toDF("round", "p", "q", "cnt"), rounds.toLong,
+      s"${prefix}_merges")
     dictFrame(spark, "word STRING, wc BIGINT, syms ARRAY<STRING>",
         dictRows.zip(words).toIndexedSeq.map { case ((w, wc), syms) =>
           Row(w, wc, syms.toIndexedSeq) })
@@ -159,35 +165,29 @@ object TokenizerArtifact {
       merges.toSeq))
   }
 
-  /** Train (deep loop) and persist both WordPiece artifacts —
-    * completing the artifact lifecycle for the third tokenizer
-    * family (VERDICT r11 #1):
+  /** Train (deep loop) and persist the WordPiece artifact — the
+    * artifact lifecycle of the third tokenizer family (VERDICT r11 #1):
     *
-    *   <dir>/wordpiece_merges  (round, p, q, cnt, cp, cq, score_key)
     *   <dir>/wordpiece_vocab   (piece)  — the piece inventory the
     *                           greedy encoder probes (plain =
     *                           word-initial, `##` = continuation)
     *
-    * The vocab is ≤ alphabet + rounds rows by the one-new-symbol-
-    * per-round contract; the merge table ≤ rounds rows — both
-    * megabytes at any corpus scale, fan-out via [[artifactParts]]. */
+    * Greedy encoding reads only the inventory, so the merge table
+    * stays in the trainer (the `wordpiece_merges` gate derives it in
+    * lineage). `vocabCap` is the `vocab_size` truncation at WRITE time
+    * (the production knob): the persisted inventory keeps the top-cap
+    * pieces by occurrence weight, and encode-side [UNK]s follow from
+    * the artifact alone. ≤ alphabet + rounds rows by the
+    * one-new-symbol-per-round contract — megabytes at any corpus
+    * scale, fan-out via [[artifactParts]]. */
   def wordPieceWrite(docs: DataFrame, dir: String,
       rounds: Int = CorpusPrep.WordPieceRoundsN,
       vocabCap: Int = Int.MaxValue): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val dictRows = CorpusPrep.wordPieceDictCollect(docs)
-    val (merges, words) = CorpusPrep.wordPieceDeepLoop(dictRows, rounds)
-    merges.toDF("round", "p", "q", "cnt", "cp", "cq", "score_key")
-      .repartition(artifactParts(rounds.toLong))
-      .write.mode("overwrite").parquet(s"$dir/wordpiece_merges")
-    // vocab_size truncation at WRITE time (the production knob): the
-    // persisted inventory keeps the top-cap pieces by occurrence
-    // weight; encode-side [UNK]s follow from the artifact alone
-    CorpusPrep
-      .wordPieceVocabOf(dictRows.map(_._2), words, vocabCap).toDF("piece")
-      .repartition(artifactParts(rounds.toLong + UnigramAlphabetBound))
-      .write.mode("overwrite").parquet(s"$dir/wordpiece_vocab")
+    writeBounded(CorpusPrep.wordPieceVocabOf(
+        CorpusPrep.wordPieceDictCollect(docs), rounds, vocabCap).toDF("piece"),
+      rounds.toLong + UnigramAlphabetBound, s"$dir/wordpiece_vocab")
   }
 
   /** Greedy-encode a corpus's word dict through a PERSISTED WordPiece
@@ -210,10 +210,9 @@ object TokenizerArtifact {
     * artifact carries them, so encode-side float parity is moot by
     * construction (readers never re-run `ln`). */
   def unigramWrite(docs: DataFrame, dir: String): Unit =
-    CorpusPrep.unigramVocabCosts(docs)
-      .repartition(artifactParts(
-        CorpusPrep.UnigramVocabCap.toLong + UnigramAlphabetBound))
-      .write.mode("overwrite").parquet(s"$dir/unigram_model")
+    writeBounded(CorpusPrep.unigramVocabCosts(docs),
+      CorpusPrep.UnigramVocabCap.toLong + UnigramAlphabetBound,
+      s"$dir/unigram_model")
 
   /** Per-document encode stats through a PERSISTED unigram model:
     * load, UNK-COVER (SentencePiece's unk piece as model

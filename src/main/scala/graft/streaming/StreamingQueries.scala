@@ -1396,6 +1396,14 @@ object StreamingQueries {
     CompactedState.awaitCompactions(base)
   }
 
+  /** Batch-size bound under which the near-dup band probe BROADCASTS
+    * the batch side (≤ this many docs ⇒ ≤ ×[[graft.ext.Dedup]] band
+    * count rows — bounded by the trigger, not by any corpus
+    * estimate) and the accumulated index streams map-side. Above it,
+    * the merge join — a bulk batch is the same order as the index
+    * slice it reads. */
+  val ProbeBatchMaxDocs = 10000L
+
   /** Streaming incremental NEAR-dup — the continuous-ingest form of
     * [[graft.ext.Dedup.minhashPairsAgainst]], and the banded twin of
     * [[streamDedupIncremental]] (which drops only EXACT bag-of-words
@@ -1421,14 +1429,6 @@ object StreamingQueries {
     * ((band, band_key) / doc_id) and each ingest reads them as the
     * probe build — written once, never rewritten.
     */
-  /** Batch-size bound under which the near-dup band probe BROADCASTS
-    * the batch side (≤ this many docs ⇒ ≤ ×[[graft.ext.Dedup]] band
-    * count rows — bounded by the trigger, not by any corpus
-    * estimate) and the accumulated index streams map-side. Above it,
-    * the merge join — a bulk batch is the same order as the index
-    * slice it reads. */
-  val ProbeBatchMaxDocs = 10000L
-
   def streamNearDupIncremental(spark: SparkSession, dir: String,
       nBatches: Int = 3): DataFrame = {
     val base = prepareDedupStream(spark, dir, nBatches,

@@ -12,7 +12,7 @@ import graft.ext.ByteBpe
   * recount, and the structural no-UNK guarantee — including the
   * cross-corpus byte fallback the training corpus never saw.
   */
-class ByteBpeSpec extends AnyFunSuite {
+class ByteBpeSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-bytebpe-test")
 
@@ -108,7 +108,7 @@ class ByteBpeSpec extends AnyFunSuite {
     val docs = docsOf(
       1L -> "the cat sat on the mat, the cat ran!",
       2L -> "a cat and a bat met the rat 42 times")
-    val dir = java.nio.file.Files.createTempDirectory("bytebpe_art").toString
+    val dir = tempDir("bytebpe_art").toString
     TokenizerArtifact.byteBpeWrite(docs, dir, rounds = 6)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").collect()

@@ -12,7 +12,7 @@ import graft.ext.{CorpusPrep, Embeddings}
   * eye — the gate then hash-checks the same code paths against DuckDB
   * on the fixture corpus.
   */
-class CorpusPrepSpec extends AnyFunSuite {
+class CorpusPrepSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-corpusprep-test")
 
@@ -454,8 +454,7 @@ class CorpusPrepSpec extends AnyFunSuite {
     val docs = docsOf(
       1L -> "banana bandana banana abba abba cabbage",
       2L -> "aaaa aaab abab banana cabbage dada dada dada")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tok_artifact_spec").toString
+    val dir = tempDir("graft_tok_artifact_spec").toString
     // BPE: write, reload in a fresh lineage, encode — id arrays equal
     TokenizerArtifact.bpeWrite(docs, dir)
     val inline = CorpusPrep.bpeEncodeIds(docs).collect()
@@ -488,8 +487,7 @@ class CorpusPrepSpec extends AnyFunSuite {
     // banana (seen) and introduces zzz (unseen → unk)
     val train = docsOf(1L -> "banana banana cabbage banana cabbage")
     val enc = docsOf(2L -> "banana zzz banana", 3L -> "zzz zzz")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tok_cross_spec").toString
+    val dir = tempDir("graft_tok_cross_spec").toString
     TokenizerArtifact.bpeWrite(train, dir)
     val out = TokenizerArtifact.bpeEncodeIds(enc, dir).collect()
       .map(r => r.getLong(0) ->
@@ -511,8 +509,7 @@ class CorpusPrepSpec extends AnyFunSuite {
     val train = docsOf(1L -> "banana banana cabbage banana cabbage")
     // zz is entirely unseen chars; banana is fully trained
     val enc = docsOf(2L -> "banana zz")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_unigram_cross_spec").toString
+    val dir = tempDir("graft_unigram_cross_spec").toString
     TokenizerArtifact.unigramWrite(train, dir)
     val out = TokenizerArtifact.unigramEncodeStats(enc, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
@@ -721,29 +718,32 @@ class CorpusPrepSpec extends AnyFunSuite {
     // written artifacts carry at most the derived file count (empty
     // writer partitions may emit no file) and at least one
     val docs = docsOf(1L -> "banana bandana banana abba abba cabbage")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_artifact_parts_spec").toString
-    try {
-      TokenizerArtifact.bpeWrite(docs, dir)
-      TokenizerArtifact.byteBpeWrite(docs, dir)
-      TokenizerArtifact.unigramWrite(docs, dir)
-      def partFiles(sub: String): Int =
-        new java.io.File(s"$dir/$sub").listFiles()
-          .count(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-      // both merge families share one vocab writer, whose fan-out is
-      // min(defaultParallelism, rows / 10000 + 1): one file for a
-      // one-document dictionary
-      for (sub <- Seq("bpe_vocab", "bytebpe_vocab")) {
-        val vocabFiles = partFiles(sub)
-        assert(vocabFiles >= 1 &&
-          vocabFiles <= artifactParts(CorpusPrep.BpeDictCap.toLong), sub)
-        assert(vocabFiles === 1, sub)
-      }
-      val modelFiles = partFiles("unigram_model")
-      assert(modelFiles === 1) // cap + alphabet bound fits one file
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(dir))
+    val dir = tempDir("graft_artifact_parts_spec").toString
+    TokenizerArtifact.bpeWrite(docs, dir)
+    TokenizerArtifact.byteBpeWrite(docs, dir)
+    TokenizerArtifact.wordPieceWrite(docs, dir)
+    TokenizerArtifact.unigramWrite(docs, dir)
+    // the artifact layout: six tables over four families, and nothing
+    // else (WordPiece persists only its inventory)
+    assert(new java.io.File(dir).list().toSet === Set("bpe_merges",
+      "bpe_vocab", "bytebpe_merges", "bytebpe_vocab", "wordpiece_vocab",
+      "unigram_model"))
+    def partFiles(sub: String): Int =
+      new java.io.File(s"$dir/$sub").listFiles()
+        .count(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+    // both merge families share one vocab writer, whose fan-out is
+    // min(defaultParallelism, rows / 10000 + 1): one file for a
+    // one-document dictionary
+    for (sub <- Seq("bpe_vocab", "bytebpe_vocab")) {
+      val vocabFiles = partFiles(sub)
+      assert(vocabFiles >= 1 &&
+        vocabFiles <= artifactParts(CorpusPrep.BpeDictCap.toLong), sub)
+      assert(vocabFiles === 1, sub)
+    }
+    // cap + alphabet bound fits one file
+    assert(partFiles("wordpiece_vocab") === 1)
+    assert(partFiles("unigram_model") === 1)
   }
 
   test("soft-EM marginals equal exhaustive path-space expectations; trainer round 2 = single soft prune") {
@@ -1122,6 +1122,9 @@ class CorpusPrepSpec extends AnyFunSuite {
     val w2 = stderrOf(
       assert(CorpusPrep.bpeDictCollect(docs, dictCap = 3).length === 3))
     assert(w2.contains("dictCap=3") && w2.contains("bpeDictCollect"))
+    val w3 = stderrOf(
+      assert(graft.ext.ByteBpe.byteDictCollect(docs, dictCap = 3).length === 3))
+    assert(w3.contains("dictCap=3") && w3.contains("byteDictCollect"))
     // comfortably under the cap: silent
     assert(stderrOf(
       assert(CorpusPrep.wordPieceDictCollect(docs, dictCap = 100)

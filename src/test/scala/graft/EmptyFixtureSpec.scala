@@ -11,12 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * all-empty mirror of sf0.001 and runs EVERY SparkEntry query over
   * it: each must produce a frame (empty or not) without throwing.
   */
-class EmptyFixtureSpec extends AnyFunSuite {
+class EmptyFixtureSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-empty-test")
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val dir = tempDir("graft_empty").toString
     graft.sources.Tables.allTables.foreach { t =>
       val src =
         if (t == "events") graft.sources.Tables.events(spark, "/root/testdata/sf0.001")

@@ -12,7 +12,7 @@ import graft.sources.Tables
 /** North-star extension operators: determinism, semantics, and the
   * approximation-quality properties the gate can't check.
   */
-class ExtSpec extends AnyFunSuite {
+class ExtSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-ext-test")
   val dir = "/root/testdata/sf0.001"
@@ -983,7 +983,7 @@ class ExtSpec extends AnyFunSuite {
   test("layout upsert overwrites only the touched partition, byte-identical elsewhere") {
     import graft.ext.Layout
     val docs = Tables.documents(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val tmp = tempDir("graft_upsert").toString
     Layout.writePartitioned(docs, tmp, Seq("lang"), Seq("source", "doc_id"))
     def filesOf(lang: String) =
       new java.io.File(s"$tmp/lang=$lang").listFiles()
@@ -1016,7 +1016,7 @@ class ExtSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val key = "spark.sql.sources.partitionOverwriteMode"
     val docs = Tables.documents(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert_conf").toString
+    val tmp = tempDir("graft_upsert_conf").toString
     Layout.writePartitioned(docs, tmp, Seq("lang"), Seq("doc_id"))
     val lang = docs.select("lang").distinct().orderBy("lang").head().getString(0)
     val before = spark.conf.getOption(key)

@@ -23,7 +23,7 @@ import graft.streaming.StreamingQueries
   * write start no `chmod` or `readlink` process, and the replay leaves
   * no checkpoint for an `rm -rf` at JVM exit.
   */
-class LocalFsSpec extends AnyFunSuite {
+class LocalFsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-localfs-test")
   val dir = "/root/testdata/sf0.001"
@@ -38,7 +38,7 @@ class LocalFsSpec extends AnyFunSuite {
   /** Run `ops` once through the fork-free and once through the stock
     * raw filesystem, each in its own sibling root; return both roots. */
   private def bothWays(umask: String)(ops: (FileSystem, JPath) => Unit): (JPath, JPath) = {
-    val parent = Files.createTempDirectory("graft_localfs")
+    val parent = tempDir("graft_localfs")
     val (mine, stock) = (parent.resolve("forkfree"), parent.resolve("stock"))
     Files.createDirectory(mine); Files.createDirectory(stock)
     ops(initialized(new ForkFreeRawLocalFileSystem, umask), mine)
@@ -100,7 +100,7 @@ class LocalFsSpec extends AnyFunSuite {
       } catch { case e: FileNotFoundException => Left(e.getClass.getName) }
     }
     val names = Seq("file.txt", "dir", "link", "dangling", "missing")
-    val parent = Files.createTempDirectory("graft_localfs_links")
+    val parent = tempDir("graft_localfs_links")
     val results = Seq("forkfree", "stock").map { side =>
       val root = Files.createDirectory(parent.resolve(side))
       Files.write(root.resolve("file.txt"), "twelve bytes".getBytes)
@@ -144,10 +144,10 @@ class LocalFsSpec extends AnyFunSuite {
 
     // a session-level checkpoint root keeps the replay's checkpoint
     // after the query stops, so its files can be inspected
-    val ckptRoot = Files.createTempDirectory("graft_localfs_ckpt")
+    val ckptRoot = tempDir("graft_localfs_ckpt")
     val session = spark.newSession()
     session.conf.set("spark.sql.streaming.checkpointLocation", ckptRoot.toString)
-    val out = Files.createTempDirectory("graft_localfs_upsert").resolve("t").toString
+    val out = tempDir("graft_localfs_upsert").resolve("t").toString
 
     val rec = new Recording()
     rec.enable("jdk.ProcessStart")

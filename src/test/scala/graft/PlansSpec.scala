@@ -11,7 +11,7 @@ import graft.sources.Tables
   * change results, (b) land a raw-nanos bound in the parquet scan's
   * PushedFilters.
   */
-class PlansSpec extends AnyFunSuite {
+class PlansSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-plans-test")
   val dir = "/root/testdata/sf0.001"
@@ -494,7 +494,7 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("partitioned layout: scan prunes to the matching partition directory") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_layout_plan").toString
+    val tmp = tempDir("graft_layout_plan").toString
     graft.ext.Layout.writePartitioned(Tables.documents(spark, dir), tmp,
       partitionCols = Seq("lang"), sortCols = Seq("source", "doc_id"))
     val langs = new java.io.File(tmp).listFiles().filter(_.isDirectory)

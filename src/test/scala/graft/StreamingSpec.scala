@@ -18,7 +18,7 @@ case class Ev(ts: Timestamp, user_id: Long, value: Double, event_type: String)
   * idempotent. MemoryStream + processAllAvailable makes all of it
   * synchronous and deterministic.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-streaming-test")
   private val smallFixture = "/root/testdata/sf0.001"
@@ -202,7 +202,7 @@ class StreamingSpec extends AnyFunSuite {
     val wire = graft.gen.OrderGen.ordersJson(spark, 2000)
       .select(col("value")).as[String].collect().toSeq
 
-    val queueDir = java.nio.file.Files.createTempDirectory("graft_wire_e2e")
+    val queueDir = tempDir("graft_wire_e2e")
     val decoded = graft.sources.Connectors.consumeOrders(spark,
       Map("format" -> "text", "path" -> queueDir.toString))
     val agg = decoded.groupBy(col("channel_id"))
@@ -371,7 +371,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val all = eventsFromFixture(600)
     val (h1, h2) = all.splitAt(300)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_test_fanout_${System.nanoTime()}"
+    val base = tempDir("graft_test_fanout_").toString
     val in = MemoryStream[Ev]
     val q = StreamingQueries.dualSinkFanout(in.toDF(),
       s"$base/a", s"$base/b", s"$base/ckpt")
@@ -397,7 +397,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val all = eventsFromFixture(400)
     val (h1, h2) = all.splitAt(200)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_test_tornfanout_${System.nanoTime()}"
+    val base = tempDir("graft_test_tornfanout_").toString
     val in = MemoryStream[Ev]
     // crash AFTER sink A landed batch 0, BEFORE sink B — the torn
     // window the Scaladoc reasons about, now executed
@@ -530,7 +530,7 @@ class StreamingSpec extends AnyFunSuite {
   test("ingestion path: stream to partitioned parquet with checkpoint, exactly-once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val tmp = tempDir("graft_ingest").toString
     val in = MemoryStream[Ev]
     val q = StreamingQueries.ingest(in.toDF(), s"$tmp/data", s"$tmp/ckpt")
     val data = eventsFromFixture(300)
@@ -549,7 +549,7 @@ class StreamingSpec extends AnyFunSuite {
     // Re-land sf0.001 events in the written-by-Spark layout and assert
     // both the update-mode replay and the sentinel-flushed append
     // replay see every row.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirlayout").toString
+    val dir = tempDir("graft_dirlayout").toString
     graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     assert(new java.io.File(s"$dir/events.parquet").isDirectory)
@@ -991,8 +991,7 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("doc_id", "source", "text")
     assert(TokenizerArtifact.encodeLegs.map(_.gate).distinct.size === 6)
     TokenizerArtifact.encodeLegs.foreach { leg =>
-      val art = java.nio.file.Files
-        .createTempDirectory(s"graft_${leg.gate}_schema").toString
+      val art = tempDir(s"graft_${leg.gate}_schema").toString
       leg.write(docs, art)
       val produced = leg.open(spark, art)(docs).schema
       val declared = StructType.fromDDL(leg.landedDdl)
@@ -1007,8 +1006,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingQueries.CompactedState
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_state_failfold").toString
+    val base = tempDir("graft_state_failfold").toString
     val content = StructType(Seq(StructField("fp", LongType)))
     def histAt(id: Long): Set[Long] =
       CompactedState.read(spark, base, content, id)
@@ -1048,8 +1046,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingQueries.CompactedState
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_state_lifecycle").toString
+    val base = tempDir("graft_state_lifecycle").toString
     val content = StructType(Seq(StructField("fp", LongType)))
     // state from a 'previous life': batch 7's delta is on disk, but
     // the (deleted-and-recreated) checkpoint restarts ids at 0 — an
@@ -1075,8 +1072,7 @@ class StreamingSpec extends AnyFunSuite {
     // — the layout the Hadoop-FS probe (advisory-r10 hygiene) must
     // route to the directory branch; a java.io.File-style probe gone
     // wrong would read the file branch and fail on a directory path
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_events_dirlayout")
+    val tmp = tempDir("graft_events_dirlayout")
     val evDir = tmp.resolve("events.parquet")
     java.nio.file.Files.createDirectories(evDir)
     java.nio.file.Files.copy(
@@ -1170,8 +1166,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingQueries.CompactedState
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_state_buckets").toString
+    val base = tempDir("graft_state_buckets").toString
     val content = StructType(Seq(StructField("k", LongType)))
     val n = CompactedState.DefaultStateBuckets
     // 5 batches × 64 keys, cadence 2 + major 2: minor at 2, minor at 4
@@ -1223,8 +1218,7 @@ class StreamingSpec extends AnyFunSuite {
       CompactedState.PruneMinLeaves)
     // a fresh root with two delta appendlets sits far below the
     // threshold — the regime where a read must not pay for a prune job
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_state_fresh").toString
+    val fresh = tempDir("graft_state_fresh").toString
     (0L to 1L).foreach { id =>
       CompactedState.append(
         spark.range(id * 4, id * 4 + 4).select(col("id").as("k")),
@@ -1239,8 +1233,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingQueries.CompactedState
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_state_brange").toString
+    val base = tempDir("graft_state_brange").toString
     val content = StructType(Seq(StructField("k", LongType)))
     val n = 2048 // > ConsolidateOverBuckets → the consolidated layout
     assert(n > CompactedState.ConsolidateOverBuckets)
