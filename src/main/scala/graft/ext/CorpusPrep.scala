@@ -185,27 +185,6 @@ object CorpusPrep {
   /** Span width (words) for cross-document repeated-span coverage. */
   val SpanN = 8
 
-  /** Cross-document repeated-span coverage, the signal behind exact
-    * substring deduplication (Lee et al. 2022, "Deduplicating
-    * Training Data Makes Language Models Better"): for each document,
-    * the fraction of its tokens covered by at least one [[SpanN]]-word
-    * gram that also occurs in ANOTHER document. Overlapping hits
-    * merge via interval union (gaps-and-islands over gram start
-    * positions: a gram at `pos` covers `[pos, pos+n)`; a new island
-    * starts when `pos` exceeds the running max end), so a long shared
-    * passage counts its tokens once, not once per gram. Only
-    * documents with ≥1 cross-doc span are emitted — at scale the
-    * output feeds span-removal or doc-drop, and the clean majority
-    * never materializes (same contract as [[decontaminate]]).
-    *
-    * Scale shape: the gram-frequency aggregation and the hit join are
-    * the wordcount family — shuffles keyed on the gram string,
-    * map-side combined; the join is `hint("merge")`-pinned because
-    * BOTH sides sit on explode-derived lineage whose size Catalyst
-    * cannot estimate (the round-4 broadcast-over-Generate hazard).
-    * The island windows partition by doc_id — per-task state is
-    * bounded by one document's hit count, never the corpus.
-    */
   /** Merged duplicated-span intervals per document:
     * `(doc_id, n_tokens, island, st, en)` with `[st, en)` in 0-based
     * token positions — the shared core of [[spanDupStats]] (coverage
@@ -237,6 +216,27 @@ object CorpusPrep {
       .agg(min(col("pos")).as("st"), (max(col("pos")) + lit(n)).as("en"))
   }
 
+  /** Cross-document repeated-span coverage, the signal behind exact
+    * substring deduplication (Lee et al. 2022, "Deduplicating
+    * Training Data Makes Language Models Better"): for each document,
+    * the fraction of its tokens covered by at least one [[SpanN]]-word
+    * gram that also occurs in ANOTHER document. Overlapping hits
+    * merge via interval union (gaps-and-islands over gram start
+    * positions: a gram at `pos` covers `[pos, pos+n)`; a new island
+    * starts when `pos` exceeds the running max end), so a long shared
+    * passage counts its tokens once, not once per gram. Only
+    * documents with ≥1 cross-doc span are emitted — at scale the
+    * output feeds span-removal or doc-drop, and the clean majority
+    * never materializes (same contract as [[decontaminate]]).
+    *
+    * Scale shape: the gram-frequency aggregation and the hit join are
+    * the wordcount family — shuffles keyed on the gram string,
+    * map-side combined; the join is `hint("merge")`-pinned because
+    * BOTH sides sit on explode-derived lineage whose size Catalyst
+    * cannot estimate (the round-4 broadcast-over-Generate hazard).
+    * The island windows partition by doc_id — per-task state is
+    * bounded by one document's hit count, never the corpus.
+    */
   def spanDupStats(docs: DataFrame, n: Int = SpanN): DataFrame =
     spanIslands(docs, n)
       .groupBy(col("doc_id"), col("n_tokens"))
@@ -2763,18 +2763,15 @@ object CorpusPrep {
          |FROM d$rounds ORDER BY word""".stripMargin
   }
 
-  /** The unrolled merge chain extended with the ENCODE derivation —
-    * capped vocab, lexical symbol ids, per-word id arrays, and the
-    * per-document reassembly — as CTEs ending at `eagg(doc_id, ids,
-    * n_tokens, n_unk)`. The reassembly is deliberately a DIFFERENT
-    * formulation from the engine's struct-sort fold (lateral unnest +
-    * ordered `list()` aggregates), per the oracle-independence
-    * discipline.
-    */
-  /** The encode derivation as CTEs over any post-merge dictionary CTE
-    * `dictCte` — shared by the plain, cross-corpus and DROPOUT encode
-    * oracles (the dropout chain swaps in its conditionally-merged
-    * dict, everything downstream is identical). */
+  /** The ENCODE derivation as CTEs over any post-merge dictionary CTE
+    * `dictCte` — capped vocab, lexical symbol ids, per-word id arrays,
+    * and the per-document reassembly — ending at `eagg(doc_id, ids,
+    * n_tokens, n_unk)`. Shared by the plain, cross-corpus and DROPOUT
+    * encode oracles (the dropout chain swaps in its
+    * conditionally-merged dict, everything downstream is identical).
+    * The reassembly is deliberately a DIFFERENT formulation from the
+    * engine's struct-sort fold (lateral unnest + ordered `list()`
+    * aggregates), per the oracle-independence discipline. */
   private def bpeEncodeTailSql(dictCte: String,
       encodeWhere: String = ""): String =
     s"""vw AS (SELECT word, syms FROM $dictCte

@@ -551,11 +551,6 @@ object Curation {
       |      '/$', '') AS canon_url
       |  FROM u)""".stripMargin
 
-  /** The staged CTE prefix (quality → exact dedup → pair join →
-    * recursive closure → curated) — ONE copy shared by both oracles,
-    * with [[TextAnalysis]]'s gated quality SQL inlined verbatim for
-    * bit parity.
-    */
   /** The quality→exact-dedup CTE prefix (q/pass/kept/kd) — shared by
     * the exact-arm chain below AND the minhash-arm oracle. */
   private lazy val qualityKdCte: String = {
@@ -606,6 +601,11 @@ object Curation {
        |    ON kd.doc_id = dl.node
        |  WHERE dl.node IS NULL)""".stripMargin
 
+  /** The staged CTE prefix (quality → exact dedup → pair join →
+    * recursive closure → curated) — ONE copy shared by both oracles,
+    * with [[TextAnalysis]]'s gated quality SQL inlined verbatim for
+    * bit parity.
+    */
   private lazy val stagesCte: String = {
     s"""$qualityKdCte,
        |t AS (

@@ -131,11 +131,9 @@ object Dedup {
           tokensNorm(col("text")), shingleK))).as("sh"))
       .filter(size(col("sh")) > 0))
 
-  /** Default LSH band count — named so consumers sizing per-batch
-    * band-key volume (the streaming near-dup's probe-saturation
-    * break-even, VERDICT r12 #1) derive from the same constant the
-    * banding uses: ≤ docs × [[DefaultMinhashBands]] band rows per
-    * batch. */
+  /** Default LSH band count, shared by [[minhashBandKeys]],
+    * [[minhashPairs]] and [[minhashPairsAgainst]]: ≤ docs ×
+    * [[DefaultMinhashBands]] band rows per call. */
   val DefaultMinhashBands = 16
 
   /** (doc_id, band, band_key): the banded signature keys — the whole
@@ -536,6 +534,28 @@ object Dedup {
 
   // ------------------------------------------- components / clustering
 
+  /** Eagerly materialize `df` as a persisted `InternalRow` RDD and
+    * rebuild the frame over it — a per-round plan barrier with LEAF
+    * statistics. The iterative loop below cannot use
+    * `Dataset.localCheckpoint`: Spark 4 rewrites the source plan's
+    * Statistics onto the checkpointed node
+    * (`LogicalRDD.fromDataset`), so round-over-round checkpoints
+    * compound size-in-bytes estimates multiplicatively until the
+    * driver livelocks multiplying million-digit BigIntegers during
+    * planning (measured: the 2000-hop-chain spec went from seconds to
+    * stuck). Returns the barrier frame plus the RDD handle so the
+    * loop can release the previous round's blocks.
+    */
+  private[graft] def roundBarrier(df: DataFrame)
+      : (DataFrame,
+         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    val rdd = df.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    rdd.count() // eager
+    (org.apache.spark.sql.graftbridge.Bridge.internalDf(
+      df.sparkSession, rdd, df.schema), rdd)
+  }
+
   /** Connected components over a near-dup pair set: the clustering
     * step every real dedup pipeline runs AFTER pair generation (keep
     * one representative per component, not per pair — A~B and B~C
@@ -577,28 +597,6 @@ object Dedup {
     * the 1M/2M-edge rehearsals and ladder rungs still measure the
     * distributed rounds.
     */
-  /** Eagerly materialize `df` as a persisted `InternalRow` RDD and
-    * rebuild the frame over it — a per-round plan barrier with LEAF
-    * statistics. The iterative loop below cannot use
-    * `Dataset.localCheckpoint`: Spark 4 rewrites the source plan's
-    * Statistics onto the checkpointed node
-    * (`LogicalRDD.fromDataset`), so round-over-round checkpoints
-    * compound size-in-bytes estimates multiplicatively until the
-    * driver livelocks multiplying million-digit BigIntegers during
-    * planning (measured: the 2000-hop-chain spec went from seconds to
-    * stuck). Returns the barrier frame plus the RDD handle so the
-    * loop can release the previous round's blocks.
-    */
-  private[graft] def roundBarrier(df: DataFrame)
-      : (DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // eager
-    (org.apache.spark.sql.graftbridge.Bridge.internalDf(
-      df.sparkSession, rdd, df.schema), rdd)
-  }
-
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 30, localMaxEdges: Long = 1L << 20): DataFrame = {
     val spark = pairs.sparkSession

@@ -27,15 +27,6 @@ import graft.sources.Tables
   */
 object Layout {
 
-  /** Write `df` as a partitioned parquet layout:
-    * directory-partitioned by `partitionCols`, rows sorted by
-    * `sortCols` within each file, at most `maxRecordsPerFile` rows
-    * per file. The `repartition` on the partition columns routes each
-    * output partition's rows to one task (one writer per partition ×
-    * at-most-maxRecords file splits); `sortWithinPartitions` orders
-    * rows inside each task so every written file carries monotone
-    * `sortCols` ranges — the layout parquet min/max pruning exploits.
-    */
   /** Read a layout THIS engine just wrote back with its KNOWN schema.
     * Schema inference fails on the empty case — an all-empty write
     * under `partitionBy` leaves a file-less (dynamic-overwrite: even
@@ -63,6 +54,15 @@ object Layout {
     else spark.read.schema(schema).parquet(path)
   }
 
+  /** Write `df` as a partitioned parquet layout:
+    * directory-partitioned by `partitionCols`, rows sorted by
+    * `sortCols` within each file, at most `maxRecordsPerFile` rows
+    * per file. The `repartition` on the partition columns routes each
+    * output partition's rows to one task (one writer per partition ×
+    * at-most-maxRecords file splits); `sortWithinPartitions` orders
+    * rows inside each task so every written file carries monotone
+    * `sortCols` ranges — the layout parquet min/max pruning exploits.
+    */
   def writePartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String], sortCols: Seq[String],
       maxRecordsPerFile: Long = 1000000L): Unit =

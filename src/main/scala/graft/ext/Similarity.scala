@@ -1173,18 +1173,6 @@ object Similarity {
   // universal; a production screen tunes this to its eval suite
   val DecontamThreshold = 0.33
 
-  /** DuckDB twins force DOUBLE[] so both engines do double-precision
-    * sequential accumulation — results match to the last bit, surviving
-    * round(…, 6).
-    *
-    * The ANN oracles consume Verify-materialized aux state (bucket /
-    * cluster assignments, PQ codes + lookup tables) and independently
-    * re-run candidate generation + exact re-rank in SQL: approximate
-    * *recall* is a property of the assignments, but given the
-    * assignments the result set is fully deterministic — so the gate
-    * is an exact hash-match, and recall itself is asserted vs brute
-    * force in ScalaTest.
-    */
   /** The IVF-PQ candidate CTEs shared by the `sim_ann_ivfpq` and
     * `sim_ivfpq_recall` oracles: probe-filtered ADC scoring re-run
     * from the materialized model state (codes + probes with their
@@ -1210,6 +1198,18 @@ object Similarity {
        |           ORDER BY approx_cos DESC, neighbor_id) AS crank
        |  FROM scored) WHERE crank <= ${GateK * PqRerank})""".stripMargin
 
+  /** DuckDB twins force DOUBLE[] so both engines do double-precision
+    * sequential accumulation — results match to the last bit, surviving
+    * round(…, 6).
+    *
+    * The ANN oracles consume Verify-materialized aux state (bucket /
+    * cluster assignments, PQ codes + lookup tables) and independently
+    * re-run candidate generation + exact re-rank in SQL: approximate
+    * *recall* is a property of the assignments, but given the
+    * assignments the result set is fully deterministic — so the gate
+    * is an exact hash-match, and recall itself is asserted vs brute
+    * force in ScalaTest.
+    */
   val oracles: Map[String, String] = Map(
     "sim_ann_ivfpq" ->
       s"""WITH $ivfPqCandCtes

@@ -298,7 +298,7 @@ object StreamingQueries {
     * concurrent or replaying read can resolve (reads' boundaries only
     * grow), so reader/GC races are impossible by construction rather
     * than by locking. [[awaitCompactions]] joins in-flight folds at
-    * stream shutdown so tests and rehearsals observe a quiesced
+    * stream shutdown so gates and specs observe a quiesced
     * layout.
     *
     * At 100 TB the generation write is where the index acquires its
@@ -315,212 +315,6 @@ object StreamingQueries {
       * `majorRuns · cadence` batches, off-thread; reads touch at most
       * this many run dirs. */
     val DefaultMajorRuns = 4
-
-    /** Fold-time hash buckets on the state's JOIN KEY (round-11: the
-      * band-bucketed read path). Folds written with `bucketCols` land
-      * `__bucket=K/` subdirs (K = pmod(hash(keys), n)); a read that
-      * knows which keys it will probe passes their bucket set and
-      * opens ONLY those subdirs. The prune factor is
-      * min(1, distinctProbeKeys/nBuckets)-ish — a point-lookup batch
-      * against a huge index opens a handful of dirs; a batch whose
-      * key count exceeds the bucket count opens them all (hash
-      * buckets cannot prune a large random key set — that regime's
-      * bound is the flat LSM read fan-in, not the bucket prune). At
-      * 100 TB the constant rises with the state's file budget; 64
-      * keeps local fold writes one-file-per-bucket cheap.
-      *
-      * LINEAGE INVARIANT: the bucket count is part of the state root's
-      * identity — a read prunes with the SAME N the folds were written
-      * under (different N ⇒ a probe's bucket id no longer names the
-      * dir its key was filed in, and the prune silently drops
-      * matches). Change N only with a fresh state root (or after a
-      * full re-fold); unbucketed dirs are always safe because reads
-      * pass them through whole. */
-    val DefaultStateBuckets = 64
-
-    /** Bucket count above which a fold CONSOLIDATES (round-12, VERDICT
-      * r11 #2): at N ≤ this the round-11 one-dir-per-bucket layout is
-      * cheap and maximally prunable; past it, N dirs × files per fold
-      * becomes the small-file blow-up the round-11 rehearsal measured
-      * (ramp folds at N=2048 degraded ~19× from thousands of tiny
-      * files), so the fold writes [[FoldLeafGroups]] `__brange=LO_HI`
-      * dirs instead — each a CONTIGUOUS bucket span with the bucket id
-      * persisted as a SORTED leading data column. Reads dir-prune to
-      * the spans their probe buckets intersect and push
-      * `__bucket IN (...)` into the parquet scan, so row groups
-      * outside the probed buckets are skipped on column statistics:
-      * high N prices as bytes-not-read within few files, not as
-      * files-opened. The bucket FUNCTION and the lineage invariant (N
-      * fixed per root) are untouched — only the on-disk grouping of
-      * bucket ids changes, and reads handle all three layouts
-      * (unbucketed / per-bucket / consolidated) side by side in one
-      * state root. */
-    val ConsolidateOverBuckets: Int = DefaultStateBuckets
-
-    /** Leaf dirs (= writer tasks) per CONSOLIDATED fold — sized to the
-      * unbucketed fold's own write fan-out (the shuffle-partition
-      * count), so consolidation never writes more files than the
-      * CONTROL layout it replaces. */
-    val FoldLeafGroups: Int = 32
-
-    /** Fold-INPUT byte size below which a fold writes UNBUCKETED even
-      * when `bucketCols` are set: a small fold's 64-way dynamic-
-      * partition write (shuffle + per-bucket files) costs more than
-      * any read it could ever prune, and reads handle mixed
-      * bucketed/unbucketed layouts anyway — so bucketing engages only
-      * once the fold is big enough that pruned reads repay the write
-      * fan-out. 16 MB ≈ the point where one fold ≈ one healthy
-      * parquet file per bucket stops being small-file litter. */
-    val DefaultBucketMinFoldBytes: Long = 16L << 20
-
-    /** Total on-disk bytes under `dirs` — FS metadata only (the
-      * fold-size probe behind [[DefaultBucketMinFoldBytes]]). */
-    private def dirBytes(spark: SparkSession, dirs: Seq[String]): Long = {
-      val conf = spark.sessionState.newHadoopConf()
-      dirs.map { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-      }.sum
-    }
-
-    /** The write- AND read-side bucket function — one definition so a
-      * probe's bucket of a key always equals the bucket the fold
-      * filed that key under (Murmur3 via `hash`, non-negative via
-      * `pmod`). */
-    def bucketOf(keys: Seq[org.apache.spark.sql.Column], n: Int)
-        : org.apache.spark.sql.Column =
-      pmod(hash(keys: _*), lit(n))
-
-    /** Distinct bucket ids the probe frame's keys hash into — the
-      * read-prune set. The collect is bounded by `n` (a constant, not
-      * data): it returns bucket IDS, never keys or rows. */
-    def bucketsHit(probe: DataFrame,
-        keys: Seq[org.apache.spark.sql.Column], n: Int): Set[Int] =
-      probe.select(bucketOf(keys, n).as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSet
-
-    /** Expected fraction of an N-bucket layout that a probe of `k`
-      * (not-necessarily-distinct) keys hits under uniform hashing:
-      * 1 − (1 − 1/n)^k. Callers pass the probe ROW count for `k` — an
-      * upper bound on its distinct keys — which biases the estimate
-      * HIGH, i.e. toward skipping the prune: the safe direction,
-      * since an unpruned read is exact (only slower), while the
-      * bound needs no extra distinct-count job. */
-    def expectedSaturation(k: Long, n: Int): Double =
-      1.0 - math.pow(1.0 - 1.0 / math.max(1, n), k.toDouble)
-
-    /** Probe-saturation break-even (VERDICT r12 #1): above this
-      * expected hit fraction, a pruned read SKIPS the [[bucketsHit]]
-      * job and the pushed `__bucket` filter and reads the state
-      * unpruned — a probe that blankets the buckets pays the prune
-      * machinery to save (almost) no reads. Measured basis (the
-      * round-12 consolidated-fold rehearsal, BASELINE.md): 50-doc
-      * probes at N=2048 — 800 band keys, expected saturation ≈ 0.32 —
-      * won 0.73–0.84× CONTROL with the prune ON; 500-doc probes —
-      * 8000 keys, ≈ 0.98 — paid 1.6–1.8× CONTROL for the prune job +
-      * filter at a batch size where reads aren't the floor. 0.75
-      * splits the regimes with margin on both sides (and bypasses the
-      * always-saturated N=64 band reads the round-11 arms documented
-      * as point-lookup-only). */
-    val PruneMaxSaturation = 0.75
-
-    /** Should a read pay for a prune set, given the probe's key-count
-      * upper bound? Callers gate on the leaf floor
-      * ([[PruneMinLeaves]]) first; this adds the saturation ceiling. */
-    def pruneWorthwhile(probeKeys: Long, n: Int): Boolean =
-      expectedSaturation(probeKeys, n) <= PruneMaxSaturation
-
-    /** Fold-leaf count below which computing a [[bucketsHit]] prune
-      * set cannot pay for itself: the prune set costs one (small)
-      * Spark job per read, so against a state of fewer leaf files
-      * than one fully-bucketed fold the job dispatch outweighs every
-      * open it could save — callers read unpruned and the per-batch
-      * cost is exactly the pre-bucketing path's (measured: the
-      * round-11 prune jobs at gate-scale state cost
-      * `stream_neardup_incremental` ~+1.3 s before this threshold). */
-    val PruneMinLeaves: Int = DefaultStateBuckets
-
-    /** The unpruned leaf count a [[read]] at `id` would open — the
-      * FS-METADATA-only proxy callers compare against
-      * [[PruneMinLeaves]] before paying for a [[bucketsHit]] job.
-      * Same listing the read itself performs (cheap on any FS that
-      * can serve the read at all); no data is touched. */
-    def foldLeafTotal(spark: SparkSession, base: String,
-        id: Long): Int = {
-      val g = gens(spark, base).filter(_ < id).maxOption
-      val rs = runIds(spark, base)
-        .filter(r => r < id && g.forall(r > _))
-      val b = (g.toSeq ++ rs).maxOption.getOrElse(-1L)
-      val ds = deltaIds(spark, base).filter(d => d < id && d >= b)
-      val (_, total) = expandBuckets(spark,
-        g.map(n => s"$base/compact/gen=$n").toSeq ++
-          rs.map(n => s"$base/runs/run=$n"), None)
-      total + ds.size
-    }
-
-    /** (openedLeafPaths, totalLeafPaths) of the most recent [[read]]
-      * per state root: how many bucket dirs the prune actually opened
-      * vs the unpruned layout (StreamingSpec asserts it).
-      * Measurement-only; never read by any operator. */
-    val readStats =
-      new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-
-    /** Expand a fold dir into its bucket leaf dirs when the fold was
-      * written bucketed — `__bucket=K` (one bucket per dir) or
-      * `__brange=LO_HI` (consolidated span per dir) — keeping only
-      * the leaves `needed` buckets can live in when a prune set is
-      * given; an unbucketed dir (pre-bucketing generations in an
-      * upgraded lineage, and every delta) passes through whole.
-      * Returns (paths, totalLeafCount) so reads can report the
-      * prune. A kept `__brange` leaf still holds unprobed buckets —
-      * [[readDirs]]' pushed `__bucket` filter finishes the prune at
-      * row-group granularity. */
-    private def expandBuckets(spark: SparkSession, dirs: Seq[String],
-        needed: Option[Set[Int]]): (Seq[String], Int) = {
-      val conf = spark.sessionState.newHadoopConf()
-      var total = 0
-      val out = dirs.flatMap { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(conf)
-        val names =
-          if (!fs.exists(p)) Seq.empty
-          else fs.listStatus(p).toSeq.filter(_.isDirectory)
-            .map(_.getPath.getName)
-        val kids = names.filter(n =>
-          n.startsWith("__bucket=") || n.startsWith("__brange="))
-        if (kids.isEmpty) { total += 1; Seq(d) }
-        else {
-          total += kids.size
-          kids.filter { k =>
-            needed.forall { ns =>
-              if (k.startsWith("__bucket=")) ns(k.stripPrefix("__bucket=").toInt)
-              else k.stripPrefix("__brange=").split('_') match {
-                // defensive parse (ADVICE r12): a malformed span dir
-                // (rename debris, a future layout) must name itself
-                // in the failure instead of surfacing as a bare
-                // MatchError deep inside a state read
-                // nonEmpty matters: "".forall(_.isDigit) is vacuously
-                // true, so '__brange=_5' would otherwise fall through
-                // to ''.toInt and throw a raw NumberFormatException
-                // instead of the self-naming failure below (ADVICE r13).
-                // The length cap keeps an absurd numeral (> 9 digits)
-                // out of toInt overflow for the same reason.
-                case Array(lo, hi) if lo.nonEmpty && hi.nonEmpty &&
-                    lo.length <= 9 && hi.length <= 9 &&
-                    lo.forall(_.isDigit) && hi.forall(_.isDigit) =>
-                  ns.exists(b => b >= lo.toInt && b <= hi.toInt)
-                case _ => throw new IllegalStateException(
-                  s"unparseable consolidated-fold dir '$k' under $d — " +
-                    "expected __brange=LO_HI with numeric bounds; the " +
-                    "state root holds foreign or truncated debris")
-              }
-            }
-          }.map(k => s"$d/$k")
-        }
-      }
-      (out, total)
-    }
 
     /** Partition-dir names under `path` with the given `key=` prefix,
       * via the Hadoop FS API — a `java.io.File` listing would be
@@ -553,45 +347,20 @@ object StreamingQueries {
 
     /** Union of explicitly-listed partition dirs with the KNOWN
       * content schema (empty frame when nothing is listed — the same
-      * no-inference rule as [[graft.ext.Layout.readBack]]). With a
-      * prune set, the read carries the persisted `__bucket` column
-      * (consolidated-fold files only; everywhere else it reads NULL,
-      * which the filter passes whole) and pushes
-      * `__bucket IS NULL OR __bucket IN (needed)` into the scan —
-      * inside a consolidated leaf, row groups sorted outside the
-      * probed buckets never leave disk (parquet column statistics).
-      * Exact for an equi-join on the fold's bucket keys: a filtered
-      * row's key hashes to an unprobed bucket, so it could never
-      * match. */
+      * no-inference rule as [[graft.ext.Layout.readBack]]). */
     private def readDirs(spark: SparkSession, content: StructType,
-        paths: Seq[String],
-        needed: Option[Set[Int]] = None): DataFrame =
+        paths: Seq[String]): DataFrame =
       if (paths.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], content)
-      else needed match {
-        case Some(ns) =>
-          val aug = StructType(content.fields :+
-            org.apache.spark.sql.types.StructField("__bucket",
-              org.apache.spark.sql.types.IntegerType, nullable = true))
-          spark.read.schema(aug).parquet(paths: _*)
-            .filter(col("__bucket").isNull ||
-              col("__bucket").isin(ns.toSeq: _*))
-            .select(content.fieldNames.map(col).toIndexedSeq: _*)
-        case None =>
-          spark.read.schema(content).parquet(paths: _*)
-            .select(content.fieldNames.map(col).toIndexedSeq: _*)
-      }
+      else spark.read.schema(content).parquet(paths: _*)
+        .select(content.fieldNames.map(col).toIndexedSeq: _*)
 
-    /** All state rows from batches strictly before `id`. Returns
-      * exactly the `content` columns. `needed` (from [[bucketsHit]])
-      * prunes BUCKETED fold dirs to the buckets the caller will
-      * probe — exact for an equi-join on the fold's `bucketCols`
-      * (equal keys share a bucket, so unopened buckets cannot hold a
-      * match); unbucketed dirs and deltas are always read whole. */
+    /** All state rows from batches strictly before `id`: the newest
+      * generation below `id`, the runs after it and the deltas since
+      * the last fold boundary. Returns exactly the `content` columns. */
     def read(spark: SparkSession, base: String,
-        content: StructType, id: Long,
-        needed: Option[Set[Int]] = None): DataFrame = {
+        content: StructType, id: Long): DataFrame = {
       // lifecycle guard: batch ids restart at 0 if the CHECKPOINT is
       // deleted while the state root survives — the stale state would
       // then silently read as empty history (every G resolves below
@@ -601,9 +370,11 @@ object StreamingQueries {
       // (reads run at batch start; a crash replay leaves at most
       // id's own == id partitions), so anything > id can only mean
       // the mismatch: fail fast instead of deduping against nothing.
-      val futureGens = gens(spark, base).filter(_ > id)
-      val futureRuns = runIds(spark, base).filter(_ > id)
-      val futureDeltas = deltaIds(spark, base).filter(_ > id)
+      val (allGens, allRuns, allDeltas) =
+        (gens(spark, base), runIds(spark, base), deltaIds(spark, base))
+      val futureGens = allGens.filter(_ > id)
+      val futureRuns = allRuns.filter(_ > id)
+      val futureDeltas = allDeltas.filter(_ > id)
       require(futureGens.isEmpty && futureRuns.isEmpty &&
           futureDeltas.isEmpty,
         s"state root $base holds partitions beyond batch $id " +
@@ -611,28 +382,14 @@ object StreamingQueries {
           s"${futureRuns.sorted.mkString(",")}; deltas " +
           s"${futureDeltas.sorted.mkString(",")}) — the checkpoint and " +
           "the state index must live and die together")
-      readAt(spark, base, content, id, needed)
-    }
-
-    /** The guard-free read core — also the major fold's input (the
-      * fold runs while LATER batches append `> id` partitions, which
-      * the lifecycle guard would misread as a dead checkpoint; the
-      * strict `< id` filters below make them invisible instead). */
-    private def readAt(spark: SparkSession, base: String,
-        content: StructType, id: Long,
-        needed: Option[Set[Int]] = None): DataFrame = {
-      val g = gens(spark, base).filter(_ < id).maxOption
-      val rs = runIds(spark, base)
-        .filter(r => r < id && g.forall(r > _)).sorted
+      val g = allGens.filter(_ < id).maxOption
+      val rs = allRuns.filter(r => r < id && g.forall(r > _)).sorted
       val b = (g.toSeq ++ rs).maxOption.getOrElse(-1L)
-      val ds = deltaIds(spark, base).filter(d => d < id && d >= b).sorted
-      val (foldPaths, foldLeafTotal) = expandBuckets(spark,
+      val ds = allDeltas.filter(d => d < id && d >= b).sorted
+      readDirs(spark, content,
         g.map(n => s"$base/compact/gen=$n").toSeq ++
-          rs.map(n => s"$base/runs/run=$n"), needed)
-      val deltaPaths = ds.map(n => s"$base/delta/batch_id=$n")
-      readStats.put(base,
-        (foldPaths.size + deltaPaths.size, foldLeafTotal + deltaPaths.size))
-      readDirs(spark, content, foldPaths ++ deltaPaths, needed)
+          rs.map(n => s"$base/runs/run=$n") ++
+          ds.map(n => s"$base/delta/batch_id=$n"))
     }
 
     /** Per-batch delta landing — [[writeBatchIdempotent]] under the
@@ -646,8 +403,7 @@ object StreamingQueries {
       * is the commit point), so a replayed trigger has nothing to
       * redo. */
     private def publishFold(df: DataFrame, sortCols: Seq[String],
-        target: String, bucketCols: Seq[String] = Seq.empty,
-        nBuckets: Int = DefaultStateBuckets): Unit = {
+        target: String): Unit = {
       val spark = df.sparkSession
       val fs = new org.apache.hadoop.fs.Path(target)
         .getFileSystem(spark.sessionState.newHadoopConf())
@@ -656,44 +412,12 @@ object StreamingQueries {
       val staging = new org.apache.hadoop.fs.Path(
         tPath.getParent, s".staging_${tPath.getName.replace('=', '_')}")
       fs.delete(staging, true)
-      if (bucketCols.nonEmpty && nBuckets > ConsolidateOverBuckets) {
-        // CONSOLIDATED fold (high N): few __brange=LO_HI span dirs,
-        // the bucket id persisted as the SORTED leading data column —
-        // reads dir-prune to intersecting spans and finish the prune
-        // with a pushed __bucket IN filter over the column statistics
-        // (bytes-not-read), so N can track the state's file budget
-        // without multiplying files
-        val groups = math.min(nBuckets, FoldLeafGroups)
-        val perGroup = (nBuckets + groups - 1) / groups
-        df.withColumn("__bucket", bucketOf(bucketCols.map(col), nBuckets))
-          .withColumn("__brange", concat_ws("_",
-            expr(s"(__bucket div $perGroup) * $perGroup"),
-            expr(s"least($nBuckets - 1, " +
-              s"(__bucket div $perGroup) * $perGroup + $perGroup - 1)")))
-          .repartition(col("__brange"))
-          .sortWithinPartitions(
-            (Seq("__brange", "__bucket") ++ sortCols).map(col): _*)
-          .write.mode("overwrite").partitionBy("__brange")
-          .parquet(staging.toString)
-      } else if (bucketCols.nonEmpty) {
-        // bucketed fold: __bucket=K subdirs on the join-key hash, one
-        // writer task per bucket (repartition ON the bucket), rows
-        // sorted (__bucket, sortCols) so the dynamic-partition writer
-        // finds its required clustering already satisfied and the
-        // within-bucket sortCols order survives into the files
-        df.withColumn("__bucket", bucketOf(bucketCols.map(col), nBuckets))
-          .repartition(col("__bucket"))
-          .sortWithinPartitions(("__bucket" +: sortCols).map(col): _*)
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(staging.toString)
-      } else {
-        val laid =
-          if (sortCols.nonEmpty)
-            df.repartition(sortCols.map(col): _*)
-              .sortWithinPartitions(sortCols.map(col): _*)
-          else df
-        laid.write.mode("overwrite").parquet(staging.toString)
-      }
+      val laid =
+        if (sortCols.nonEmpty)
+          df.repartition(sortCols.map(col): _*)
+            .sortWithinPartitions(sortCols.map(col): _*)
+        else df
+      laid.write.mode("overwrite").parquet(staging.toString)
       fs.mkdirs(tPath.getParent)
       require(fs.rename(staging, tPath) || fs.exists(tPath),
         s"fold publish rename $staging -> $tPath failed")
@@ -728,8 +452,8 @@ object StreamingQueries {
       ()
     }
 
-    /** Fold on the cadence (0 disables — the pre-compaction layout,
-      * kept for the rehearsal's control arm): a synchronous MINOR
+    /** Fold on the cadence (0 disables — the flat-delta layout the
+      * specs compare every compacting run against): a synchronous MINOR
       * fold of the ≤cadence deltas since the last boundary into
       * `runs/run=id`, then — once `majorRuns` runs accumulate — an
       * ASYNC major fold of everything < id into `compact/gen=id`.
@@ -737,10 +461,7 @@ object StreamingQueries {
     def maybeCompact(spark: SparkSession, base: String,
         content: StructType, id: Long, cadence: Int,
         sortCols: Seq[String] = Seq.empty,
-        majorRuns: Int = DefaultMajorRuns,
-        bucketCols: Seq[String] = Seq.empty,
-        nBuckets: Int = DefaultStateBuckets,
-        bucketMinBytes: Long = DefaultBucketMinFoldBytes): Unit =
+        majorRuns: Int = DefaultMajorRuns): Unit =
       if (cadence > 0 && id > 0 && id % cadence == 0) {
         val g = gens(spark, base).filter(_ < id).maxOption
         val priorRuns = runIds(spark, base)
@@ -749,16 +470,10 @@ object StreamingQueries {
         val minorIn = deltaIds(spark, base)
           .filter(d => d < id && d >= b).sorted
           .map(n => s"$base/delta/batch_id=$n")
-        // size-gate the bucket layout per fold: tiny minors write one
-        // sorted file, big ones land bucketed; reads mix both freely
-        val minorBuckets =
-          if (dirBytes(spark, minorIn) >= bucketMinBytes) bucketCols
-          else Seq.empty
         publishFold(readDirs(spark, content, minorIn), sortCols,
-          s"$base/runs/run=$id", minorBuckets, nBuckets)
+          s"$base/runs/run=$id")
         if (priorRuns.size + 1 >= majorRuns)
-          triggerMajor(spark, base, content, id, sortCols, bucketCols,
-            nBuckets, bucketMinBytes)
+          triggerMajor(spark, base, content, id, sortCols)
       }
 
     /** Start the major fold on a daemon thread unless one is already
@@ -767,14 +482,11 @@ object StreamingQueries {
       * fold failure only logs: state stays on the previous
       * generation + runs, costing read fan-in, never correctness. */
     private def triggerMajor(spark: SparkSession, base: String,
-        content: StructType, id: Long, sortCols: Seq[String],
-        bucketCols: Seq[String], nBuckets: Int,
-        bucketMinBytes: Long): Unit = {
+        content: StructType, id: Long, sortCols: Seq[String]): Unit = {
       val stale = inflight.get(base)
       if (stale != null && !stale.isAlive) inflight.remove(base, stale)
       val t = new Thread(() => {
-        try majorFold(spark, base, content, id, sortCols, bucketCols,
-          nBuckets, bucketMinBytes)
+        try majorFold(spark, base, content, id, sortCols)
         catch { case e: Throwable =>
           System.err.println(
             s"[compacted-state] major fold gen=$id at $base failed: $e")
@@ -792,12 +504,12 @@ object StreamingQueries {
       * still resolves G with runs (G, id) and deltas ≥ that boundary,
       * all preserved; later batches resolve gen=id or newer. Runs in
       * (G, id] stay until the NEXT major's GC — redundant but
-      * unreachable, bounded by majorRuns dirs. */
+      * unreachable, bounded by majorRuns dirs. The fold lists its
+      * input itself instead of calling [[read]]: later batches append
+      * `> id` partitions while it runs, which read's lifecycle guard
+      * would misread as a dead checkpoint. */
     private def majorFold(spark: SparkSession, base: String,
-        content: StructType, id: Long, sortCols: Seq[String],
-        bucketCols: Seq[String] = Seq.empty,
-        nBuckets: Int = DefaultStateBuckets,
-        bucketMinBytes: Long = DefaultBucketMinFoldBytes): Unit = {
+        content: StructType, id: Long, sortCols: Seq[String]): Unit = {
       val compactDir = new org.apache.hadoop.fs.Path(s"$base/compact")
       val fs = compactDir
         .getFileSystem(spark.sessionState.newHadoopConf())
@@ -810,7 +522,7 @@ object StreamingQueries {
       if (!fs.exists(new org.apache.hadoop.fs.Path(target))) {
         // input = gen(G) ∪ runs (G, id] ∪ deltas [boundary, id): with
         // run=id just written the delta leg is empty; the ≤ id run
-        // bound (vs readAt's strict <) is what lets the fold consume
+        // bound (vs read's strict <) is what lets the fold consume
         // its own batch's minor run — batch id's DELTA stays excluded
         // so gen=id covers exactly the state strictly before id
         val rs = runIds(spark, base)
@@ -818,18 +530,11 @@ object StreamingQueries {
         val b = (g.toSeq ++ rs).maxOption.getOrElse(-1L)
         val ds = deltaIds(spark, base)
           .filter(d => d < id && d >= b).sorted
-        // fold inputs expand bucketed dirs to their leaves (no prune:
-        // the fold rewrites everything) so a mixed bucketed/unbucketed
-        // union never trips partition-column discovery
-        val (foldIn, _) = expandBuckets(spark,
+        publishFold(readDirs(spark, content,
           g.map(n => s"$base/compact/gen=$n").toSeq ++
-            rs.map(n => s"$base/runs/run=$n"), None)
-        val allIn = foldIn ++ ds.map(n => s"$base/delta/batch_id=$n")
-        val genBuckets =
-          if (dirBytes(spark, allIn) >= bucketMinBytes) bucketCols
-          else Seq.empty
-        publishFold(readDirs(spark, content, allIn),
-          sortCols, target, genBuckets, nBuckets)
+            rs.map(n => s"$base/runs/run=$n") ++
+            ds.map(n => s"$base/delta/batch_id=$n")),
+          sortCols, target)
       }
       val bKeep = (g.toSeq ++
         runIds(spark, base).filter(_ < id)).maxOption.getOrElse(-1L)
@@ -1274,8 +979,8 @@ object StreamingQueries {
     * first-batch-wins rule as a NOT EXISTS over smaller mod classes
     * (two same-fp docs in ONE batch both survive, exactly the
     * anti-join semantics). At 100 TB the state side is the
-    * append-only fingerprint index bucketed by fp — each ingest
-    * reads it as the anti-join build, never rewrites it.
+    * append-only fingerprint index, its folds sorted by fp — each
+    * ingest reads it as the anti-join build.
     */
   def streamDedupIncremental(spark: SparkSession, dir: String,
       nBatches: Int = 3): DataFrame = {
@@ -1390,19 +1095,11 @@ object StreamingQueries {
       } finally { cached.unpersist(); () }
     }
     // quiesce: a major fold kicked off by a late batch may still be
-    // in flight — join it so callers (gates, specs, rehearsals)
+    // in flight — join it so callers (gates, specs)
     // observe a settled layout and the session never stops under a
     // running fold job
     CompactedState.awaitCompactions(base)
   }
-
-  /** Batch-size bound under which the near-dup band probe BROADCASTS
-    * the batch side (≤ this many docs ⇒ ≤ ×[[graft.ext.Dedup]] band
-    * count rows — bounded by the trigger, not by any corpus
-    * estimate) and the accumulated index streams map-side. Above it,
-    * the merge join — a bulk batch is the same order as the index
-    * slice it reads. */
-  val ProbeBatchMaxDocs = 10000L
 
   /** Streaming incremental NEAR-dup — the continuous-ingest form of
     * [[graft.ext.Dedup.minhashPairsAgainst]], and the banded twin of
@@ -1425,9 +1122,9 @@ object StreamingQueries {
     * are pure per-document functions, which is what makes the state
     * append-only AND the DuckDB oracle able to re-derive the whole
     * first-batch-wins closure from the full-corpus aux features. At
-    * 100 TB both indexes are bucketed on their join keys
+    * 100 TB both indexes fold sorted on their join keys
     * ((band, band_key) / doc_id) and each ingest reads them as the
-    * probe build — written once, never rewritten.
+    * probe build.
     */
   def streamNearDupIncremental(spark: SparkSession, dir: String,
       nBatches: Int = 3): DataFrame = {
@@ -1444,10 +1141,7 @@ object StreamingQueries {
   def runNearDupStream(spark: SparkSession, dir: String, base: String,
       afterWrites: Long => Unit = _ => (),
       compactCadence: Int = 2,
-      majorRuns: Int = CompactedState.DefaultMajorRuns,
-      nBuckets: Int = CompactedState.DefaultStateBuckets,
-      bucketMinBytes: Long = CompactedState.DefaultBucketMinFoldBytes)
-      : Unit = {
+      majorRuns: Int = CompactedState.DefaultMajorRuns): Unit = {
     import graft.ext.Dedup
     import org.apache.spark.sql.types.{ArrayType, IntegerType}
     val outDir = s"$base/out"
@@ -1461,8 +1155,8 @@ object StreamingQueries {
     drainBatches(spark, dir, base, afterWrites) { (batch, id) =>
       val s = batch.sparkSession
       val cached = batch.persist()
-      // minhash bands/shingles each feed THREE consumers (bucket
-      // probe or verify join + state append) — persist so the
+      // minhash bands/shingles each feed more than one consumer (band
+      // or verify join + state append) — persist so the
       // per-doc minhash runs once per batch, not per consumer
       val bBands = Dedup.minhashBandKeys(cached.toDF()).persist()
       val bSh = Dedup.minhashShingles(cached.toDF()).persist()
@@ -1472,75 +1166,16 @@ object StreamingQueries {
         // STRICTLY EARLIER batches only — batch N's own partitions
         // may be (partially) visible on crash-replay of N; the
         // guard lives inside CompactedState.read (gens AND deltas).
-        // Both history reads are BUCKET-PRUNED (round 11) once the
-        // state outgrows PruneMinLeaves (below it, computing the
-        // prune set costs more than the opens it saves — gate-scale
-        // batches take the exact pre-bucketing path) AND the probe
-        // stays under the saturation break-even (round 13, VERDICT
-        // r12 #1: a probe whose keys would blanket the buckets pays
-        // the bucketsHit job + pushed filter to save almost no
-        // reads — measured 1.6–1.8× CONTROL on 500-doc probes at
-        // N=2048; such batches read unpruned, exact either way):
-        // the band index opens only buckets the batch's band keys
-        // hash into, and the shingle index opens only buckets
-        // holding a CANDIDATE's doc_hist — candidate-proportional
-        // fan-in on the wide (shingle-array) state, exact by the
-        // equi-join/shared-bucket argument in CompactedState.read.
-        val largeBandState = CompactedState.foldLeafTotal(s, bandsDir,
-          id) >= CompactedState.PruneMinLeaves
-        // lazy: below the leaf floor (gate scale) no decision needs
-        // the count, and the pre-bucketing path stays count-free
-        lazy val batchDocs = cached.count()
-        val pruneBands = largeBandState && CompactedState.pruneWorthwhile(
-          batchDocs * graft.ext.Dedup.DefaultMinhashBands, nBuckets)
-        val hBands = CompactedState.read(s, bandsDir, bandContent, id,
-          if (pruneBands) Some(CompactedState.bucketsHit(bBands,
-            Seq(col("band"), col("band_key")), nBuckets))
-            // post-hoc ceiling on the ACTUAL set (the estimate is
-            // an upper bound, so this rarely fires — but a weirdly
-            // dispersed key set shouldn't carry a useless filter)
-            .filter(_.size <=
-              CompactedState.PruneMaxSaturation * nBuckets)
-          else None)
-        val bNew = bBands
+        val hHist = CompactedState.read(s, bandsDir, bandContent, id)
+          .select(col("band"), col("band_key"), col("doc_id").as("doc_hist"))
+        val cand0 = bBands
           .select(col("band"), col("band_key"), col("doc_id").as("doc_new"))
-        val hHist = hBands.select(col("band"), col("band_key"),
-          col("doc_id").as("doc_hist"))
-        // join-side dispatch on the MEASURED batch size (cached —
-        // the count is a cache scan, and the broadcast bound is the
-        // trigger's own size, never a corpus-derived estimate): a
-        // trickle batch (≤ ProbeBatchMaxDocs docs ⇒ ≤ ×bands
-        // band-key rows) against a LARGE index broadcasts, and the
-        // index (pruned or not) STREAMS map-side — no shuffle/sort
-        // of corpus-proportional state to admit a small batch; a
-        // bulk batch (or a state still below the prune threshold,
-        // where the count job is the dominant cost) takes the merge
-        // join. Dispatch keys on the STATE size, decoupled from the
-        // saturation gate (round-13 rehearsal, run-pair measured:
-        // a saturation-bypassed 500-doc probe ran 3.8 s under the
-        // broadcast and 7.1 s when it fell back to the merge join —
-        // sorting the full index to admit a trickle is the cost the
-        // broadcast exists to avoid, pruned slice or whole).
-        val cand0 = (if (largeBandState && batchDocs <= ProbeBatchMaxDocs)
-            hHist.join(broadcast(bNew), Seq("band", "band_key"))
-          else bNew.join(hHist.hint("merge"), Seq("band", "band_key")))
+          .join(hHist.hint("merge"), Seq("band", "band_key"))
           .select(col("doc_new"), col("doc_hist"))
           .dropDuplicates("doc_new", "doc_hist")
           .persist()
         cand += cand0
-        // shingle-side break-even is POST-HOC — the candidate count
-        // isn't known without a job, so the prune set is computed
-        // as before (one job, as in r12) and the saturation ceiling
-        // decides only whether the pushed filter is worth carrying
-        // (the job is sunk; a blanketing set saves nothing)
-        val hSh = CompactedState.read(s, shDir, shContent, id,
-          if (CompactedState.foldLeafTotal(s, shDir, id) >=
-              CompactedState.PruneMinLeaves)
-            Some(CompactedState.bucketsHit(cand0,
-              Seq(col("doc_hist")), nBuckets))
-              .filter(_.size <=
-                CompactedState.PruneMaxSaturation * nBuckets)
-          else None)
+        val hSh = CompactedState.read(s, shDir, shContent, id)
         val dropped = cand0
           .join(bSh.select(col("doc_id").as("doc_new"),
             col("sh").as("sh_n")).hint("merge"), "doc_new")
@@ -1572,13 +1207,9 @@ object StreamingQueries {
         CompactedState.append(bSh.select(col("doc_id"), col("sh")), id, shDir)
         CompactedState.maybeCompact(s, bandsDir, bandContent, id,
           compactCadence, sortCols = Seq("band", "band_key"),
-          majorRuns = majorRuns,
-          bucketCols = Seq("band", "band_key"), nBuckets = nBuckets,
-          bucketMinBytes = bucketMinBytes)
+          majorRuns = majorRuns)
         CompactedState.maybeCompact(s, shDir, shContent, id,
-          compactCadence, sortCols = Seq("doc_id"), majorRuns = majorRuns,
-          bucketCols = Seq("doc_id"), nBuckets = nBuckets,
-          bucketMinBytes = bucketMinBytes)
+          compactCadence, sortCols = Seq("doc_id"), majorRuns = majorRuns)
       } finally {
         cand.foreach(_.unpersist())
         bBands.unpersist(); bSh.unpersist(); cached.unpersist(); ()

@@ -136,8 +136,9 @@ class ConnectorsSpec extends AnyFunSuite {
       .select(col("order_id"), (col("amount") * 2).as("paid"))
     Seq("bk_orders", "bk_payments").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"/tmp/graft_warehouse/$t")
-      if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
+      val loc = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), t)
+      loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
     }
     // both sides bucketed on the join key at write time: the join
     // plan must read buckets directly, with no Exchange on either side

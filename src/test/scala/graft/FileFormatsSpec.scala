@@ -10,7 +10,7 @@ import graft.sources.FileFormats
   * row bit-for-bit on adversarial content (embedded quotes, commas,
   * braces, backslashes — the shapes a `props` JSON column carries).
   */
-class FileFormatsSpec extends AnyFunSuite {
+class FileFormatsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-fileformats-test")
 
@@ -26,7 +26,7 @@ class FileFormatsSpec extends AnyFunSuite {
   }
 
   test("JSON round-trip preserves adversarial rows exactly") {
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_test_json_rt"
+    val tmp = tempDir("graft_test_json_rt").toString
     FileFormats.writeJson(nasty, tmp)
     val back = FileFormats.readJson(spark, tmp, FileFormats.eventSchema)
     assert(back.except(nasty).count() === 0)
@@ -34,7 +34,7 @@ class FileFormatsSpec extends AnyFunSuite {
   }
 
   test("CSV round-trip preserves adversarial rows exactly") {
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_test_csv_rt"
+    val tmp = tempDir("graft_test_csv_rt").toString
     FileFormats.writeCsv(nasty, tmp)
     val back = FileFormats.readCsv(spark, tmp, FileFormats.eventSchema)
     assert(back.except(nasty).count() === 0)

@@ -11,13 +11,13 @@ import graft.sources.Tables
   * skipping: round-trip fidelity, determinism, and prune-really-
   * prunes assertions the hash gate can't express.
   */
-class ShardingSpec extends AnyFunSuite {
+class ShardingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("graft-sharding-test")
   val dir = "/root/testdata/sf0.001"
 
   test("shard export round-trip preserves every row exactly") {
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_test_shards"
+    val tmp = tempDir("graft_test_shards").toString
     val docs = Tables.documents(spark, dir)
     Sharding.exportShards(docs, tmp, keyCol = "doc_id")
     val back = spark.read.parquet(tmp).drop("shard")
@@ -27,7 +27,7 @@ class ShardingSpec extends AnyFunSuite {
   }
 
   test("shard assignment is deterministic and manifest matches direct compute") {
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_test_shards2"
+    val tmp = tempDir("graft_test_shards2").toString
     val docs = Tables.documents(spark, dir)
     Sharding.exportShards(docs, tmp, keyCol = "doc_id")
     val fromDisk = Sharding.manifest(spark.read.parquet(tmp), "text")
@@ -100,7 +100,7 @@ class ShardingSpec extends AnyFunSuite {
   }
 
   test("zonemap pruning reads a strict subset of files, result unchanged") {
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_test_zonemap"
+    val tmp = tempDir("graft_test_zonemap").toString
     val docs = Tables.documents(spark, dir)
     docs.repartitionByRange(8, col("doc_id"))
       .sortWithinPartitions(col("doc_id"))

@@ -1162,141 +1162,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(shuffles.isEmpty, s"replay gate shuffles its result:\n$plan")
   }
 
-  test("bucketed folds: pruned read opens only hit buckets and stays exact") {
-    import graft.streaming.StreamingQueries.CompactedState
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import spark.implicits._
-    val base = tempDir("graft_state_buckets").toString
-    val content = StructType(Seq(StructField("k", LongType)))
-    val n = CompactedState.DefaultStateBuckets
-    // 5 batches × 64 keys, cadence 2 + major 2: minor at 2, minor at 4
-    // triggers the async major → by batch 5 the layout is one BUCKETED
-    // generation (gen=4) + batch 4's delta
-    (0L to 4L).foreach { id =>
-      CompactedState.append(
-        spark.range(id * 64, id * 64 + 64).select(col("id").as("k")),
-        id, base)
-      CompactedState.maybeCompact(spark, base, content, id, cadence = 2,
-        sortCols = Seq("k"), majorRuns = 2, bucketCols = Seq("k"),
-        bucketMinBytes = 0L)
-      CompactedState.awaitCompactions(base)
-    }
-    val genDir = new java.io.File(s"$base/compact/gen=4")
-    assert(genDir.isDirectory, "major fold never committed gen=4")
-    val bucketDirs = genDir.listFiles().filter(_.getName.startsWith("__bucket="))
-    assert(bucketDirs.length > 1 && bucketDirs.length <= n,
-      s"bucketed fold layout expected under gen=4, found ${bucketDirs.length}")
-    // unpruned read resolves the full history through the bucket leaves
-    def keysOf(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.collect().map(_.getLong(0)).toSet
-    assert(keysOf(CompactedState.read(spark, base, content, 5L)) ===
-      (0L until 320L).toSet)
-    // pruned read: probe 3 keys → open only their buckets; every probed
-    // key that exists is returned (equal keys share a bucket), nothing
-    // outside the state appears, and the read opened strictly fewer
-    // leaf dirs than the layout holds
-    val probe = Seq(3L, 77L, 310L).toDF("k")
-    val hit = CompactedState.bucketsHit(probe, Seq(col("k")), n)
-    val pruned = keysOf(CompactedState.read(spark, base, content, 5L,
-      Some(hit)))
-    assert(Set(3L, 77L, 310L).subsetOf(pruned))
-    assert(pruned.subsetOf((0L until 320L).toSet))
-    val (opened, total) = CompactedState.readStats.get(base)
-    assert(opened < total,
-      s"prune opened $opened of $total leaf paths — no pruning happened")
-    // the prune is exact for an equi-join on the bucket key: joining
-    // the probe against pruned state equals joining against the full
-    assert(probe.join(CompactedState.read(spark, base, content, 5L,
-        Some(hit)), Seq("k"), "left_semi").count() === 3L)
-    // foldLeafTotal (the prune-engagement proxy) counts exactly the
-    // leaves an unpruned read would open: the bucketed gen's leaf dirs
-    // plus batch 4's delta — and this layout is over the engagement
-    // threshold, so a stream at this state size would prune
-    assert(CompactedState.foldLeafTotal(spark, base, 5L) ===
-      bucketDirs.length + 1)
-    assert(CompactedState.foldLeafTotal(spark, base, 5L) >=
-      CompactedState.PruneMinLeaves)
-    // a fresh root with two delta appendlets sits far below the
-    // threshold — the regime where a read must not pay for a prune job
-    val fresh = tempDir("graft_state_fresh").toString
-    (0L to 1L).foreach { id =>
-      CompactedState.append(
-        spark.range(id * 4, id * 4 + 4).select(col("id").as("k")),
-        id, fresh)
-    }
-    assert(CompactedState.foldLeafTotal(spark, fresh, 2L) === 2)
-    assert(CompactedState.foldLeafTotal(spark, fresh, 2L) <
-      CompactedState.PruneMinLeaves)
-  }
-
-  test("consolidated folds (high N): few range dirs, pruned read exact, row prune via pushed filter") {
-    import graft.streaming.StreamingQueries.CompactedState
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import spark.implicits._
-    val base = tempDir("graft_state_brange").toString
-    val content = StructType(Seq(StructField("k", LongType)))
-    val n = 2048 // > ConsolidateOverBuckets → the consolidated layout
-    assert(n > CompactedState.ConsolidateOverBuckets)
-    (0L to 4L).foreach { id =>
-      CompactedState.append(
-        spark.range(id * 64, id * 64 + 64).select(col("id").as("k")),
-        id, base)
-      CompactedState.maybeCompact(spark, base, content, id, cadence = 2,
-        sortCols = Seq("k"), majorRuns = 2, bucketCols = Seq("k"),
-        nBuckets = n, bucketMinBytes = 0L)
-      CompactedState.awaitCompactions(base)
-    }
-    val genDir = new java.io.File(s"$base/compact/gen=4")
-    assert(genDir.isDirectory, "major fold never committed gen=4")
-    // consolidated layout: __brange span dirs, bounded by the group
-    // budget — NOT one dir per bucket (the small-file blow-up)
-    val rangeDirs = genDir.listFiles()
-      .filter(_.getName.startsWith("__brange="))
-    assert(rangeDirs.nonEmpty, "expected __brange span dirs under gen=4")
-    assert(rangeDirs.length <= CompactedState.FoldLeafGroups)
-    assert(genDir.listFiles()
-      .count(_.getName.startsWith("__bucket=")) === 0)
-    // the spans tile [0, n) without overlap
-    val spans = rangeDirs.map { d =>
-      val Array(lo, hi) = d.getName.stripPrefix("__brange=").split('_')
-      (lo.toInt, hi.toInt)
-    }.sortBy(_._1)
-    spans.foreach { case (lo, hi) => assert(lo >= 0 && hi < n && lo <= hi) }
-    assert(spans.sliding(2).forall {
-      case Array((_, h1), (l2, _)) => l2 > h1
-      case _ => true
-    }, "overlapping bucket spans")
-    def keysOf(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.collect().map(_.getLong(0)).toSet
-    // unpruned read resolves the full history through the span dirs
-    assert(keysOf(CompactedState.read(spark, base, content, 5L)) ===
-      (0L until 320L).toSet)
-    // pruned read: every probed key returned, nothing foreign, fewer
-    // leaf dirs opened than the layout holds, and the pushed filter
-    // keeps only rows of probed buckets (the bytes-not-read path)
-    val probe = Seq(3L, 77L, 310L).toDF("k")
-    val hit = CompactedState.bucketsHit(probe, Seq(col("k")), n)
-    val prunedDf = CompactedState.read(spark, base, content, 5L, Some(hit))
-    val pruned = keysOf(prunedDf)
-    assert(Set(3L, 77L, 310L).subsetOf(pruned))
-    assert(pruned.subsetOf((0L until 320L).toSet))
-    val (opened, total) = CompactedState.readStats.get(base)
-    assert(opened < total,
-      s"prune opened $opened of $total leaf paths — no dir pruning")
-    // row-level prune: surviving FOLD rows must hash into probed
-    // buckets (delta rows pass unfiltered — batch 4's delta holds
-    // keys 256..319, excluded below)
-    val foldRows = pruned.filter(_ < 256L)
-    foldRows.foreach { k =>
-      val b = spark.range(1).select(
-        CompactedState.bucketOf(Seq(lit(k)), n)).head().getInt(0)
-      assert(hit.contains(b),
-        s"fold row $k (bucket $b) survived outside the probe set $hit")
-    }
-    // the prune is exact for the equi-join the state exists for
-    assert(probe.join(prunedDf, Seq("k"), "left_semi").count() === 3L)
-  }
-
   test("state compaction: 6-batch run equals the compaction-free run; stale deltas GC'd") {
     import graft.streaming.StreamingQueries
     val dir = "/root/testdata/sf0.001"
@@ -1335,6 +1200,31 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       .exists(_.getName.startsWith(".staging_")))
   }
 
+  test("near-dup stream through a major fold on both index roots equals the cadence-0 run") {
+    import graft.streaming.StreamingQueries
+    val dir = smallFixture
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val ctrlBase = StreamingQueries.prepareDedupStream(spark, dir,
+      nBatches = 6, scratch = "stream_neardup_ctrl")
+    StreamingQueries.runNearDupStream(spark, dir, ctrlBase,
+      compactCadence = 0)
+    val expected = canon(StreamingQueries.dedupStreamOutput(spark, ctrlBase))
+    assert(expected.size <
+      graft.sources.Tables.documents(spark, dir).count(),
+      "fixture must exercise the near-dup drop path")
+    // cadence 2 + majorRuns 2: minors at 2 and 4 on the band AND the
+    // shingle root; the second minor triggers each root's async major
+    // gen=4, which runNearDupStream joins before returning
+    val base = StreamingQueries.prepareDedupStream(spark, dir,
+      nBatches = 6, scratch = "stream_neardup_compact6")
+    StreamingQueries.runNearDupStream(spark, dir, base, compactCadence = 2,
+      majorRuns = 2)
+    assert(canon(StreamingQueries.dedupStreamOutput(spark, base)) === expected)
+    assert(new java.io.File(s"$base/bands/compact/gen=4").exists())
+    assert(new java.io.File(s"$base/shingles/compact/gen=4").exists())
+  }
+
   test("verification collects are bounded and trip past the cap (r12 #8)") {
     import spark.implicits._
     val df = spark.range(10).toDF("n")
@@ -1344,27 +1234,6 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       StreamingQueries.collectVerificationSized(df, maxRows = 5)
     }
     assert(e.getMessage.contains("verification-sized"))
-  }
-
-  test("probe-saturation break-even pins the prune bypass (r12 #1)") {
-    import graft.streaming.StreamingQueries.CompactedState
-    // the rehearsal's measured regimes (BASELINE.md consolidated-fold
-    // arms): 50-doc probes at N=2048 (~800 band keys, saturation
-    // ~0.32) keep the prune; 500-doc probes (~8000 keys, ~0.98)
-    // bypass; a trickle probe at N=64 blankets the buckets and
-    // bypasses too (the documented point-lookup-only band regime)
-    assert(CompactedState.pruneWorthwhile(800L, 2048))
-    assert(!CompactedState.pruneWorthwhile(8000L, 2048))
-    assert(!CompactedState.pruneWorthwhile(800L, 64))
-    assert(CompactedState.pruneWorthwhile(1L, 2048))
-    assert(!CompactedState.pruneWorthwhile(1000L, 1)) // degenerate n safe
-    // the ceiling itself is the spec-pinned knob
-    assert(CompactedState.PruneMaxSaturation === 0.75)
-    // monotone in probe keys, anti-monotone in bucket count
-    assert(CompactedState.expectedSaturation(100L, 2048) <
-      CompactedState.expectedSaturation(1000L, 2048))
-    assert(CompactedState.expectedSaturation(1000L, 8192) <
-      CompactedState.expectedSaturation(1000L, 2048))
   }
 
   test("streaming gates compile no new classes on their third evaluation") {
